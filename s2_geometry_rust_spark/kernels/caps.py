@@ -90,9 +90,10 @@ class S2Cap:
     @staticmethod
     def from_center_area(center_xyz, area: float) -> "S2Cap":
         """cap.rs:102-112: radius length2 = area / pi (area == solid
-        angle on the unit sphere; negative -> empty, >= 4pi -> full)."""
+        angle on the unit sphere; negative -> empty, >= 4pi -> full,
+        clamped through chord.from_length2 like every chord angle)."""
         x, y, z = (float(v) for v in center_xyz)
-        return S2Cap(x, y, z, float(area) / PI)
+        return S2Cap(x, y, z, float(chord.from_length2(float(area) / PI)))
 
     @staticmethod
     def from_point(center_xyz) -> "S2Cap":

@@ -375,8 +375,9 @@ def nearest_boundary_join(pts: DataFrame, loop_verts: DataFrame) -> DataFrame:
     S2Loop.distance_to_boundary_batch / project_to_boundary_batch).
 
     Per (point, loop): distance = min over vertices of acos(p.v) ==
-    acos(max dot) (valid while every |dot| <= 1, guaranteed for
-    distinct unit vectors), projection = the earliest vertex attaining
+    acos(max in-range dot) — a dot that rounds past +-1 (a point on or
+    next to a vertex) is skipped, as the kernel twin skips its NaN acos,
+    so the distance is never NaN — projection = the earliest vertex attaining
     the minimal squared Euclidean distance (the reference's strict-<
     scan == lexicographic struct-min on (d2, vid)).
 
@@ -402,7 +403,7 @@ def nearest_boundary_join(pts: DataFrame, loop_verts: DataFrame) -> DataFrame:
         + (F.col("pz") - F.col("vz")) * (F.col("pz") - F.col("vz"))
     )
     g = j.groupBy("point_id", "region_id").agg(
-        F.max(dot).alias("max_dot"),
+        F.max(F.when(F.abs(dot) <= 1, dot)).alias("max_dot"),
         F.min(F.struct(d2.alias("d2"), F.col("vid").alias("vid"))).alias("m"),
     )
     return (

@@ -173,12 +173,13 @@ def point_in_region_join(points: DataFrame, regions: DataFrame,
       fastest, no extra jobs;
     - large region sets (``distributed=True``, or auto past
       DISTRIBUTED_REGION_THRESHOLD when ``distributed=None``, which
-      costs one count() job on the regions side): everything stays in
-      DataFrames — coverings via the distributed ``cover_regions``
-      operator, candidates via the ancestor-explode equi-join, and the
-      refine reads region geometry joined inline, so NO driver-side
-      collect of regions ever happens (see
-      ``point_in_region_join_distributed``).
+      costs one count() probe job on the regions side): everything
+      stays in DataFrames — coverings via the distributed
+      ``cover_regions`` operator, materialized once per call, candidates
+      via the ancestor-explode equi-join, and the refine reads region
+      geometry joined inline, so NO driver-side collect of regions ever
+      happens.  Jobs: probe, covering plus levels, then the caller's
+      action (see ``point_in_region_join_distributed``).
     """
     spark = points.sparkSession
     if distributed is None:
@@ -366,12 +367,19 @@ def point_in_region_join_distributed(points: DataFrame, regions: DataFrame,
 
     1. coverings via the distributed ``cover_regions`` operator
        (conservative=True — sound join filters), embarrassingly
-       parallel on the regions side;
+       parallel on the regions side, materialized ONCE per call with
+       ``localCheckpoint(eager=True)``: the distinct-levels read and
+       the candidate join both scan that frame, so the covering never
+       re-runs inside the candidate job;
     2. candidates via the ancestor-explode equi-join (the only data
        that reaches the driver is the <= 31 distinct covering levels);
     3. refine joins region geometry inline on region_id (AQE picks
        broadcast vs shuffle by size) and evaluates the exact kernels
-       per (batch x region) group inside one mapInPandas.
+       per (batch x region) group inside one Arrow boolean filter.
+
+    Jobs per call: the covering (checkpoint) plus the distinct levels,
+    then the caller's action.  Coverings are not cached across calls:
+    a rewritten regions path must never meet a stale covering.
 
     ``n_salts > 0`` engages explicit deterministic salting of hot
     covering cells in step 2 (see ``_ancestor_candidates``) — for the
@@ -381,12 +389,20 @@ def point_in_region_join_distributed(points: DataFrame, regions: DataFrame,
     from .coverings import cover_regions, region_from_row
 
     spark = points.sparkSession
-    covs = cover_regions(regions, max_cells=max_cells, conservative=True)
+    # localCheckpoint rather than persist(): the ContextCleaner frees
+    # the blocks once the frame goes out of scope, so repeated calls in
+    # a long-lived session leave no cacheManager entry to unpersist
+    # (the operators/knn.py idiom).
+    covs = cover_regions(
+        regions, max_cells=max_cells, conservative=True
+    ).select("region_id", "cell_id", "level").localCheckpoint(eager=True)
     levels = sorted(
         r["level"] for r in covs.select("level").distinct().collect()
     )
     if not levels:
-        return points.limit(0).withColumn(
+        # filter(False), not limit(0): a streaming DataFrame does not
+        # take limit in every output mode (same rule as the literal path)
+        return points.filter(F.lit(False)).withColumn(
             "region_id", F.lit(None).cast("string")
         )
     cand = _ancestor_candidates(

@@ -2338,14 +2338,18 @@ filtered AS (
 
 
 def loop_nearest_boundary_sql(table: str = "customer",
-                              key: str = "c_custkey") -> str:
+                              key: str = "c_custkey",
+                              points_sql: str | None = None) -> str:
     """Mirror of geom_aggs.nearest_boundary_join (loop.rs:523-577, the
     reference's nearest-VERTEX simplified semantics): distance =
-    acos(max dot) nano-rounded (numpy vs DuckDB acos agree to ~1 ulp,
-    absorbed like loop_stats), projection = lexicographic struct-min on
-    (d2, vid) — identical pure +,-,*,/ double arithmetic on identical
-    inlined vertex literals, so the selection is bit-deterministic on
-    both engines."""
+    acos(max dot) nano-rounded over the dots with |dot| <= 1 (a dot
+    rounded past 1 is skipped, like the kernel's NaN acos; numpy vs
+    DuckDB acos agree to ~1 ulp, absorbed like loop_stats), projection
+    = lexicographic struct-min on (d2, vid) — identical pure +,-,*,/
+    double arithmetic on identical inlined vertex literals, so the
+    selection is bit-deterministic on both engines.  ``points_sql``
+    replaces the derived points with any (point_id, x, y, z)
+    relation."""
     from . import fixtures
 
     # CAST('<repr>' AS DOUBLE), not <repr>::DOUBLE: DuckDB parses a
@@ -2357,8 +2361,9 @@ def loop_nearest_boundary_sql(table: str = "customer",
         for (n, vid, vx, vy, vz)
         in fixtures.loop_vertex_rows(fixtures.NEAREST_BOUNDARY_LOOPS)
     )
+    pts_sql = points_sql or derived_points_sql(table, key)
     return f"""
-WITH pts AS ({derived_points_sql(table, key)}),
+WITH pts AS ({pts_sql}),
 p AS (
   SELECT point_id,
          x / sqrt(x*x + y*y + z*z) AS px,
@@ -2374,7 +2379,8 @@ j AS (
   FROM p CROSS JOIN v
 ),
 g AS (
-  SELECT point_id, region_id, max(dot) AS max_dot,
+  SELECT point_id, region_id,
+         max(CASE WHEN abs(dot) <= 1 THEN dot END) AS max_dot,
          min(struct_pack(d2 := d2, vid := vid)) AS m
   FROM j GROUP BY point_id, region_id
 )

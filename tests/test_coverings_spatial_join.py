@@ -216,3 +216,211 @@ def test_point_in_region_distributed_salted_matches_unsalted(spark, regions, poi
     b = {(r["doc_id"], r["region_id"])
          for r in salted.select("doc_id", "region_id").collect()}
     assert a == b and len(a) > 0
+
+
+def _rect_may_intersect_ref(rect, c, r) -> bool:
+    """Per-cell transcription of the rect admit rule on one cell's
+    bounding cap (c, r) — the formula TrueRectRegion.may_intersect_cells
+    vectorizes: lat window, pole window, then the expanded-longitude
+    test through the scalar S1Interval."""
+    r += 1e-12
+    lat_c = float(np.arcsin(np.clip(c[2], -1.0, 1.0)))
+    lat_lo, lat_hi = lat_c - r, lat_c + r
+    if rect.lat.hi < lat_lo or rect.lat.lo > lat_hi:
+        return False
+    if lat_hi >= np.pi / 2 or lat_lo <= -np.pi / 2:
+        return True
+    sin_r = np.sin(r)
+    cos_lat = min(np.cos(lat_lo), np.cos(lat_hi))
+    if sin_r >= cos_lat:
+        return True
+    dlng = float(np.arcsin(sin_r / cos_lat)) + 1e-12
+    return rect.lng.expanded(dlng).contains_point(
+        float(np.arctan2(c[1], c[0])))
+
+
+def _seeded_rects(n=200, seed=11):
+    """Fixture rects plus seeded ones: tiny to hemispheric, wrapping
+    the antimeridian, full-longitude bands, and rects touching a pole."""
+    from s2_geometry_rust_spark.kernels.rects import S2LatLngRect
+
+    rects = [S2LatLngRect.from_degrees(a, c, b, d)
+             for a, b, c, d in fixtures.RECTS.values()]
+    rng = np.random.default_rng(seed)
+    for i in range(n):
+        h = float(rng.choice([0.01, 0.5, 3.0, 20.0, 60.0]))
+        w = float(rng.choice([0.01, 0.5, 3.0, 40.0, 200.0]))
+        lat_lo = float(rng.uniform(-90.0, 90.0 - h))
+        if i % 10 == 0:
+            lat_lo = 90.0 - h  # touches the north pole
+        elif i % 10 == 1:
+            lat_lo = -90.0  # touches the south pole
+        lng_lo = float(rng.uniform(-180.0, 180.0))
+        lng_hi = lng_lo + w
+        if lng_hi > 180.0:
+            lng_hi -= 360.0  # wraps the antimeridian
+        if i % 17 == 0:
+            lng_lo, lng_hi = -180.0, 180.0
+        rects.append(S2LatLngRect.from_degrees(
+            lat_lo, lng_lo, min(lat_lo + h, 90.0), lng_hi))
+    return rects
+
+
+def test_rect_batch_admit_matches_per_cell_and_scalar_covering():
+    """TrueRectRegion.may_intersect_cells == the per-cell rule on every
+    cell the covering examines, and conservative_covering takes the
+    same cells through its batch branch as through its scalar
+    (may_intersect_cell / contains) branch, at budgets 8 and 64."""
+    from s2_geometry_rust_spark.kernels import cells_true as ct
+    from s2_geometry_rust_spark.operators.coverings import (
+        TrueRectRegion,
+        conservative_covering,
+    )
+
+    class Recording(TrueRectRegion):
+        def may_intersect_cells(self, ids):
+            self.seen.append(np.asarray(ids, np.uint64))
+            return super().may_intersect_cells(ids)
+
+    class ScalarOnly:
+        """No batch methods: forces conservative_covering's per-cell
+        fallback branches, deciding each cell by the reference rule."""
+
+        def __init__(self, rect, caps):
+            self.rect, self.caps = rect, caps
+
+        def contains(self, x, y, z):
+            return self.rect.contains_point(x, y, z)
+
+        def may_intersect_cell(self, cell):
+            c, r = self.caps.get(cell.id) or ct.cell_bounding_cap(cell.id)
+            return _rect_may_intersect_ref(self.rect, c, r)
+
+    n_cells = n_nonempty = 0
+    for i, rect in enumerate(_seeded_rects()):
+        for budget in (8, 64):
+            rec = Recording(rect)
+            rec.seen = []
+            got = conservative_covering(rec, max_cells=budget)
+            ids = np.unique(np.concatenate(rec.seen))
+            # cell_bounding_cap's arithmetic, on batch-built geometry
+            cen, ver = ct.cell_center_xyz(ids), ct.cell_vertices_xyz(ids)
+            caps = {}
+            for k, cid in enumerate(ids):
+                dots = np.clip(ver[k] @ cen[k], -1.0, 1.0)
+                caps[int(cid)] = (cen[k], float(np.max(np.arccos(dots))))
+            want = np.array([_rect_may_intersect_ref(rect, *caps[int(c)])
+                             for c in ids])
+            np.testing.assert_array_equal(
+                rec.may_intersect_cells(ids), want, err_msg=f"{i} {budget}")
+            scalar = conservative_covering(ScalarOnly(rect, caps),
+                                           max_cells=budget)
+            np.testing.assert_array_equal(got, scalar,
+                                          err_msg=f"{i} {budget}")
+            n_cells += len(ids)
+            n_nonempty += len(got) > 0
+    # the per-cell caps above are cell_bounding_cap's, bit for bit
+    sample = ck.children(ck.children(np.array(
+        [int(ck.from_face_pos_level(f, 0, 0)) for f in range(6)],
+        np.uint64)).reshape(-1)).reshape(-1)[::7]
+    for cid in sample:
+        c, r = ct.cell_bounding_cap(int(cid))
+        cen = ct.cell_center_xyz(np.array([cid], np.uint64))[0]
+        ver = ct.cell_vertices_xyz(np.array([cid], np.uint64))[0]
+        assert np.array_equal(c, cen)
+        assert r == float(np.max(np.arccos(np.clip(ver @ cen, -1.0, 1.0))))
+    assert n_nonempty > 400 and n_cells > 20_000
+
+
+def test_rect_scalar_admit_is_the_batch_admit():
+    """One formula decides: may_intersect_cell is the one-cell batch,
+    and contains_points_batch is the scalar contains, vectorized."""
+    from s2_geometry_rust_spark.operators.coverings import TrueRectRegion
+
+    class _Cell:
+        def __init__(self, cid):
+            self.id = cid
+
+    rng = np.random.default_rng(3)
+    ids = ck.from_face_pos_level(
+        rng.integers(0, 6, 80),
+        rng.integers(0, 1 << 60, 80, dtype=np.uint64) & ~np.uint64(1),
+        rng.integers(0, 14, 80))
+    p = rng.normal(size=(200, 3))
+    p /= np.linalg.norm(p, axis=1, keepdims=True)
+    for rect in _seeded_rects(n=5, seed=4):
+        reg = TrueRectRegion(rect)
+        batch = reg.may_intersect_cells(ids)
+        assert list(batch) == [reg.may_intersect_cell(_Cell(int(c)))
+                               for c in ids]
+        inside = reg.contains_points_batch(p[:, 0], p[:, 1], p[:, 2])
+        assert list(inside) == [reg.contains(*map(float, q)) for q in p]
+
+
+def test_distributed_join_covers_once(spark, regions, points):
+    """The covering is materialized before the call returns: the
+    candidate frame's executed plan scans that frame and holds no
+    mapInPandas, so the action never re-runs cover_regions."""
+    from s2_geometry_rust_spark.operators.spatial_join import (
+        point_in_region_join_distributed,
+    )
+
+    cand = point_in_region_join_distributed(
+        points, regions, max_cells=16, refine=False
+    )
+    plan = cand._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan, plan
+    assert cand.count() > 0
+    plan = cand._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan, plan
+
+
+def test_distributed_join_empty_coverings_batch_and_stream(spark, points,
+                                                           tmp_path):
+    """No regions -> no coverings: an empty frame with a region_id
+    column, built with filter(False) so a streaming input also runs."""
+    empty = spark.createDataFrame([], fixtures.REGIONS_SCHEMA)
+    out = point_in_region_join(points, empty, distributed=True)
+    assert "region_id" in out.columns
+    assert out.count() == 0
+
+    src = str(tmp_path / "points_src")
+    points.write.parquet(src)
+    stream = spark.readStream.schema(
+        spark.read.parquet(src).schema).parquet(src)
+    joined = point_in_region_join(stream, empty, distributed=True)
+    assert joined.isStreaming and "region_id" in joined.columns
+    q = (
+        joined.writeStream.outputMode("append")
+        .format("memory")
+        .queryName("pip_empty_stream")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        sink = spark.sql("SELECT * FROM pip_empty_stream")
+        assert "region_id" in sink.columns
+        assert sink.count() == 0
+    finally:
+        q.stop()
+
+
+def test_vectorized_ieee_remainder_matches_math_remainder():
+    """The rect admit's longitude re-wrap == math.remainder(x, 2pi) bit
+    for bit, ties at odd multiples of pi included."""
+    import math
+
+    from s2_geometry_rust_spark.operators.coverings import _ieee_remainder_2pi
+
+    rng = np.random.default_rng(9)
+    x = np.concatenate([
+        rng.uniform(-12.0, 12.0, 20_000),
+        np.pi * np.arange(-5, 6, dtype=np.float64),
+        np.nextafter(np.pi * np.arange(-5, 6, dtype=np.float64), 0.0),
+        [0.0, -0.0],
+    ])
+    want = np.array([math.remainder(float(v), 2.0 * math.pi) for v in x])
+    got = _ieee_remainder_2pi(x)
+    assert np.array_equal(got, want)
+    assert np.array_equal(np.signbit(got), np.signbit(want))

@@ -105,3 +105,21 @@ def test_intersects():
     assert a.intersects(b)
     assert not a.intersects(far)
     assert not S2Cap.empty().intersects(S2Cap.full())
+
+
+@pytest.mark.parametrize("area", [4 * PI, 5 * PI, 1e9])
+def test_from_center_area_clamps_to_full(area):
+    """cap.rs:102-112: an area at or above the sphere's 4pi is the full
+    cap, its length2 clamped at 4 like every chord angle."""
+    cap = S2Cap.from_center_area(X, area)
+    assert cap.is_full()
+    assert cap.radius_l2 == 4.0
+    assert cap.get_area() <= 4 * PI
+
+
+def test_from_center_area_round_trips_below_full():
+    for area in (0.0, 1e-6, 1.0, PI, 2 * PI, 4 * PI - 1e-9):
+        cap = S2Cap.from_center_area(Y, area)
+        assert cap.get_area() <= 4 * PI
+        assert math.isclose(cap.get_area(), area, rel_tol=1e-12, abs_tol=1e-15)
+    assert S2Cap.from_center_area(Y, -1.0).is_empty()

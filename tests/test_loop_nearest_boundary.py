@@ -162,3 +162,62 @@ def test_operator_matches_kernel(spark, sf_dir):
             assert r["dist_nano"] == round(dist[i] * 1e9)
             assert (r["proj_x"], r["proj_y"], r["proj_z"]) == (
                 proj[i][0], proj[i][1], proj[i][2])
+
+
+def test_point_on_a_vertex_gives_no_nan(spark):
+    """A point on (or a hair off) a loop vertex rounds its dot with that
+    vertex past 1.  The kernel skips the NaN acos; the engine and the
+    DuckDB oracle must skip the same dot, so all three agree on a
+    finite distance instead of NaN/NULL."""
+    import duckdb
+
+    from s2_geometry_rust_spark.operators.geom_aggs import (
+        nearest_boundary_join,
+    )
+    from s2_geometry_rust_spark.oracle import loop_nearest_boundary_sql
+
+    rows = fixtures.loop_vertex_rows(fixtures.NEAREST_BOUNDARY_LOOPS)
+    cane = [r for r in rows if r[0] == "candy_cane"]
+    v0, v1 = np.array(cane[0][2:]), np.array(cane[1][2:])
+    raw = [v0, 2.0 * v1, np.nextafter(v0, 2.0), _probe_points(1)[0]]
+    pts = [(i, *map(float, p)) for i, p in enumerate(raw)]
+
+    def unit(x, y, z):
+        # the engine's normalization: x / sqrt(x*x + y*y + z*z)
+        n = math.sqrt(x * x + y * y + z * z)
+        return x / n, y / n, z / n
+
+    # the fixture really reaches the out-of-range branch
+    p0 = unit(*pts[0][1:])
+    assert p0[0] * v0[0] + p0[1] * v0[1] + p0[2] * v0[2] > 1.0
+
+    pdf = spark.createDataFrame(pts, "point_id long, x double, y double, z double")
+    got = {
+        (r["point_id"], r["region_id"]): r["dist_nano"]
+        for r in nearest_boundary_join(
+            pdf, fixtures.loop_vertices(spark, fixtures.NEAREST_BOUNDARY_LOOPS)
+        ).collect()
+    }
+    values = ", ".join(
+        f"({i}, CAST('{x!r}' AS DOUBLE), CAST('{y!r}' AS DOUBLE),"
+        f" CAST('{z!r}' AS DOUBLE))" for i, x, y, z in pts
+    )
+    sql = loop_nearest_boundary_sql(
+        points_sql=f"SELECT * FROM (VALUES {values}) t(point_id, x, y, z)"
+    )
+    want = {
+        (int(r.point_id), r.region_id): r.dist_nano
+        for r in duckdb.connect().execute(sql).fetchdf().itertuples()
+    }
+    n_loops = len(fixtures.NEAREST_BOUNDARY_LOOPS)
+    assert len(got) == len(want) == len(pts) * n_loops
+    for name in fixtures.NEAREST_BOUNDARY_LOOPS:
+        loop = S2Loop.from_degrees(fixtures.LOOPS[name])
+        for i, x, y, z in pts:
+            px, py, pz = unit(x, y, z)
+            dist = loop.distance_to_boundary_batch(
+                np.array([px]), np.array([py]), np.array([pz]))[0]
+            assert math.isfinite(dist)
+            assert got[(i, name)] is not None
+            assert got[(i, name)] == want[(i, name)] == round(dist * 1e9), (
+                i, name)
