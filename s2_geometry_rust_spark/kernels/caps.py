@@ -49,6 +49,16 @@ def _interpolate(a: np.ndarray, b: np.ndarray, t: float) -> np.ndarray:
     return out / np.linalg.norm(out)
 
 
+def radius_l2_from_radians(r):
+    """Cap radius angle -> squared chord, vectorized (cap.rs
+    from_center_angle): Rust f64::min returns the non-NaN operand, so a
+    NaN radius (e.g. S2Cell::get_cap_bound's unclamped asin for coarse
+    cells, cell.rs:485) saturates to PI = a full cap, as does any radius
+    past PI."""
+    r = np.asarray(r, dtype=np.float64)
+    return chord.from_radians(np.where(np.isnan(r), PI, np.minimum(r, PI)))
+
+
 @dataclass
 class S2Cap:
     cx: float
@@ -60,16 +70,8 @@ class S2Cap:
 
     @staticmethod
     def from_center_angle(center_xyz, radius_radians: float) -> "S2Cap":
-        # Rust f64::min returns the non-NaN operand, so a NaN radius
-        # (e.g. S2Cell::get_cap_bound's unclamped asin for coarse cells,
-        # cell.rs:485) saturates to PI = a full cap; Python's min would
-        # propagate the NaN instead.
-        if radius_radians != radius_radians:  # NaN
-            r = PI
-        else:
-            r = min(radius_radians, PI)
         return S2Cap(center_xyz[0], center_xyz[1], center_xyz[2],
-                     float(chord.from_radians(r)))
+                     float(radius_l2_from_radians(radius_radians)))
 
     @staticmethod
     def from_center_degrees(center_xyz, radius_deg: float) -> "S2Cap":
@@ -135,7 +137,8 @@ class S2Cap:
     # -- containment -----------------------------------------------------------
 
     def contains_points_batch(self, x, y, z):
-        """Vectorized point containment (cap.rs:227-237)."""
+        """Vectorized point containment (cap.rs:227-237); the cap fields
+        may themselves be arrays, one cap per point."""
         d2 = chord.between_points(self.cx, self.cy, self.cz, x, y, z)
         return d2 <= self.radius_l2
 

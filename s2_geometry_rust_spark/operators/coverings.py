@@ -197,6 +197,16 @@ class TrueLoopRegion:
         return inside.any(axis=1) | straddle.any(axis=1)
 
 
+def _cell_bounding_caps(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """True cell centers (n,3) and bounding-cap radii (n,): the max
+    center-to-vertex angle, which covers the whole geodesically convex
+    cell quad."""
+    centers = ct.cell_center_xyz(ids)
+    verts = ct.cell_vertices_xyz(ids)  # (n,4,3)
+    dots = np.clip(np.einsum("nkd,nd->nk", verts, centers), -1.0, 1.0)
+    return centers, np.arccos(dots).max(axis=1)
+
+
 class TruePolylineRegion:
     """Conservative polyline adapter for *join filters*: a covering built
     from this never misses a cell that contains ANY point of the
@@ -236,10 +246,7 @@ class TruePolylineRegion:
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
         if len(self._a) == 0:
             return np.zeros(len(ids), dtype=bool)
-        centers = ct.cell_center_xyz(ids)               # (n,3)
-        verts = ct.cell_vertices_xyz(ids)               # (n,4,3)
-        dots = np.clip(np.einsum("nkd,nd->nk", verts, centers), -1.0, 1.0)
-        r_cell = np.arccos(dots).max(axis=1)            # (n,)
+        centers, r_cell = _cell_bounding_caps(ids)      # (n,3), (n,)
         # angular distance centers x edges
         s = centers @ self._nhat.T                      # (n,m) sin(dist to circle)
         in1 = np.einsum("nd,md->nm", centers,
@@ -272,10 +279,7 @@ class TrueCapRegion:
         return bool(self.may_intersect_cells(np.asarray([cell.id], np.uint64))[0])
 
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
-        centers = ct.cell_center_xyz(ids)  # (n,3)
-        verts = ct.cell_vertices_xyz(ids)  # (n,4,3)
-        dots = np.clip(np.einsum("nkd,nd->nk", verts, centers), -1.0, 1.0)
-        r_cell = np.arccos(dots).max(axis=1)
+        centers, r_cell = _cell_bounding_caps(ids)
         ang = np.arccos(np.clip(centers @ self._center, -1.0, 1.0))
         return ang <= self._radius + r_cell + 1e-12
 
@@ -332,10 +336,8 @@ class TrueRectRegion:
         return bool(self.may_intersect_cells(np.asarray([cell.id], np.uint64))[0])
 
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
-        centers = ct.cell_center_xyz(ids)  # (n,3)
-        verts = ct.cell_vertices_xyz(ids)  # (n,4,3)
-        dots = np.clip(np.einsum("nkd,nd->nk", verts, centers), -1.0, 1.0)
-        r = np.arccos(dots).max(axis=1) + 1e-12
+        centers, r = _cell_bounding_caps(ids)
+        r = r + 1e-12
         lat_c = np.arcsin(np.clip(centers[:, 2], -1.0, 1.0))
         lat_lo, lat_hi = lat_c - r, lat_c + r
         out = ~((self.rect.lat.hi < lat_lo) | (self.rect.lat.lo > lat_hi))
@@ -442,6 +444,25 @@ def conservative_covering(region, max_cells: int = 64,
     return ku.normalize(out)
 
 
+def _normalized_by_owner(done_cells: list[np.ndarray],
+                         done_owner: list[np.ndarray],
+                         L: int) -> list[np.ndarray]:
+    """Split a batched coverer's (cell, owner) output into one normalized
+    covering per owner (empty where an owner kept no cell)."""
+    out: list[np.ndarray] = [np.array([], np.uint64) for _ in range(L)]
+    if done_cells:
+        allc = np.concatenate(done_cells)
+        allo = np.concatenate(done_owner)
+        order = np.argsort(allo, kind="stable")
+        allc, allo = allc[order], allo[order]
+        bounds = np.searchsorted(allo, np.arange(L + 1))
+        for i in range(L):
+            lo, hi = bounds[i], bounds[i + 1]
+            if hi > lo:
+                out[i] = ku.normalize(allc[lo:hi].astype(np.uint64))
+    return out
+
+
 def polyline_coverings_batch(verts_list: list[np.ndarray],
                              max_cells: int = 64,
                              max_level: int = 30) -> list[np.ndarray]:
@@ -495,10 +516,7 @@ def polyline_coverings_batch(verts_list: list[np.ndarray],
         keep = np.zeros(len(cells), bool)
         if not has.any():
             return keep
-        centers = ct.cell_center_xyz(cells)
-        verts = ct.cell_vertices_xyz(cells)
-        dots = np.clip(np.einsum("nkd,nd->nk", verts, centers), -1.0, 1.0)
-        r_cell = np.arccos(dots).max(axis=1)
+        centers, r_cell = _cell_bounding_caps(cells)
         cum = np.zeros(len(cells) + 1, np.int64)
         np.cumsum(m, out=cum[1:])
         tot = int(cum[-1])
@@ -558,18 +576,7 @@ def polyline_coverings_batch(verts_list: list[np.ndarray],
     if len(cells):
         done_cells.append(cells)
         done_owner.append(owner)
-    out: list[np.ndarray] = [np.array([], np.uint64) for _ in range(L)]
-    if done_cells:
-        allc = np.concatenate(done_cells)
-        allo = np.concatenate(done_owner)
-        order = np.argsort(allo, kind="stable")
-        allc, allo = allc[order], allo[order]
-        bounds = np.searchsorted(allo, np.arange(L + 1))
-        for i in range(L):
-            lo, hi = bounds[i], bounds[i + 1]
-            if hi > lo:
-                out[i] = ku.normalize(allc[lo:hi].astype(np.uint64))
-    return out
+    return _normalized_by_owner(done_cells, done_owner, L)
 
 
 def cap_coverings_batch(caps: list, max_cells: int = 8,
@@ -580,8 +587,8 @@ def cap_coverings_batch(caps: list, max_cells: int = 8,
     vertex containment), but the level-synchronous loop runs ONCE over
     the concatenated frontier of every cap, with per-cap
     budget/terminal bookkeeping.  Removes the ~20 ms/region Python
-    constant from the distributed covering path of the spatial join
-    (cover_regions conservative=True routes cap rows here)."""
+    constant from both covering paths of the spatial join
+    (conservative_coverings routes cap rows here)."""
     L = len(caps)
     if L == 0:
         return []
@@ -590,10 +597,7 @@ def cap_coverings_batch(caps: list, max_cells: int = 8,
     radius_l2 = np.array([c.radius_l2 for c in caps], np.float64)
 
     def admit(cells: np.ndarray, owner: np.ndarray) -> np.ndarray:
-        centers = ct.cell_center_xyz(cells)
-        verts = ct.cell_vertices_xyz(cells)
-        dots = np.clip(np.einsum("nkd,nd->nk", verts, centers), -1.0, 1.0)
-        r_cell = np.arccos(dots).max(axis=1)
+        centers, r_cell = _cell_bounding_caps(cells)
         ang = np.arccos(np.clip(
             np.einsum("nd,nd->n", centers, C[owner]), -1.0, 1.0))
         return ang <= radius[owner] + r_cell + 1e-12
@@ -651,18 +655,7 @@ def cap_coverings_batch(caps: list, max_cells: int = 8,
     if len(cells):
         done_cells.append(cells)
         done_owner.append(owner)
-    out: list[np.ndarray] = [np.array([], np.uint64) for _ in range(L)]
-    if done_cells:
-        allc = np.concatenate(done_cells)
-        allo = np.concatenate(done_owner)
-        order = np.argsort(allo, kind="stable")
-        allc, allo = allc[order], allo[order]
-        bounds = np.searchsorted(allo, np.arange(L + 1))
-        for i in range(L):
-            lo, hi = bounds[i], bounds[i + 1]
-            if hi > lo:
-                out[i] = ku.normalize(allc[lo:hi].astype(np.uint64))
-    return out
+    return _normalized_by_owner(done_cells, done_owner, L)
 
 
 def conservative_region_from_row(row) -> object:
@@ -679,6 +672,27 @@ def conservative_region_from_row(row) -> object:
     return base  # union: id-space containment is exact already
 
 
+def conservative_coverings(rows, max_cells: int,
+                           max_level: int = 30) -> list[np.ndarray]:
+    """Join-filter coverings of many regions rows, in row order — the one
+    builder behind both spatial-join paths.  Cap rows share one batched
+    level-synchronous loop (``cap_coverings_batch``, identical per-cap
+    results); every other row takes
+    ``conservative_covering(conservative_region_from_row(row))``."""
+    cap_pos = [i for i, row in enumerate(rows) if row["kind"] == "cap"]
+    caps = dict(zip(cap_pos, cap_coverings_batch(
+        [region_from_row(rows[i]).cap for i in cap_pos],
+        max_cells=max_cells, max_level=max_level,
+    )))
+    return [
+        caps[i] if i in caps else conservative_covering(
+            conservative_region_from_row(row), max_cells=max_cells,
+            max_level=max_level,
+        )
+        for i, row in enumerate(rows)
+    ]
+
+
 def cover_regions(regions: DataFrame, max_cells: int = 8,
                   min_level: int = 0, max_level: int = 30,
                   level_mod: int = 1, interior: bool = False,
@@ -689,50 +703,29 @@ def cover_regions(regions: DataFrame, max_cells: int = 8,
     semantics, incl. its vertex-sampling may_intersect quirks).
     conservative=True: true-geometry adapters — the covering is a sound
     superset of the region in leaf-id space; REQUIRED when the covering
-    is used as a join filter.
+    is used as a join filter.  Built by ``conservative_coverings``, the
+    same builder as the spatial join's literal path.
     """
     opts = CovererOptions(
         max_cells=max_cells, min_level=min_level,
         max_level=max_level, level_mod=level_mod,
     )
-    make_region = conservative_region_from_row if conservative else region_from_row
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         coverer = S2RegionCoverer(opts)
+        cover = (coverer.get_interior_covering if interior
+                 else coverer.get_covering)
         for b in batches:
             # plain dicts, not b.iloc[i] / iterrows(): a pandas row
             # Series costs ~150 us per region, a third of what the
             # batched cap covering itself spends per cap
             rows = b.to_dict("records")
-            # conservative cap rows take the batched kernel (identical
-            # per-cap results, one level-synchronous loop per batch)
-            cap_ids: dict[int, np.ndarray] = {}
-            if conservative and len(b):
-                kinds = b["kind"].to_numpy()
-                cap_pos = np.nonzero(kinds == "cap")[0]
-                if len(cap_pos):
-                    caps = [region_from_row(rows[i]).cap for i in cap_pos]
-                    covs = cap_coverings_batch(
-                        caps, max_cells=max_cells, max_level=max_level
-                    )
-                    cap_ids = {int(i): c for i, c in zip(cap_pos, covs)}
+            if conservative:
+                covs = conservative_coverings(rows, max_cells, max_level)
+            else:
+                covs = [cover(region_from_row(row)) for row in rows]
             out_region, out_cell = [], []
-            for pos, row in enumerate(rows):
-                if pos in cap_ids:
-                    out_region.extend([row["region_id"]] * len(cap_ids[pos]))
-                    out_cell.append(cap_ids[pos])
-                    continue
-                region = make_region(row)
-                if conservative:
-                    ids = conservative_covering(
-                        region, max_cells=max_cells, max_level=max_level
-                    )
-                else:
-                    ids = (
-                        coverer.get_interior_covering(region)
-                        if interior
-                        else coverer.get_covering(region)
-                    )
+            for row, ids in zip(rows, covs):
                 out_region.extend([row["region_id"]] * len(ids))
                 out_cell.append(np.asarray(ids, dtype=np.uint64))
             cells = (

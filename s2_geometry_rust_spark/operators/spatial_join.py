@@ -16,16 +16,18 @@ No shuffle of the big side, no nested loop, and Catalyst prunes/pushes
 everything around the join.  For covering tables too large to broadcast
 there's a shuffle variant (same keys, sort-merge).
 
-Refine stage — exact containment per region kind, vectorized per
-(batch x region) group inside one ``mapInPandas``: winding-number PIP
-for loops (loop.rs:372-394 via kernels.loops), chord-angle test for
-caps (cap.rs:227-237), interval algebra for rects (latlng_rect.rs).
-Region parameters ride along as a broadcast dict.
+Refine stage — exact containment per region kind inside an Arrow
+boolean ``pandas_udf`` filter; both physical paths call the one
+dispatch ``_refine_keep``: chord-angle test for caps (cap.rs:227-237,
+one vectorized pass per batch), winding-number PIP for loops
+(loop.rs:372-394 via kernels.loops) and polygons, interval algebra for
+rects (latlng_rect.rs).  Region parameters ride along as a broadcast
+dict (literal path) or joined inline (distributed path).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -33,9 +35,12 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import cell_parent
 from ..kernels import latlng as lk
-from .coverings import region_from_row
+from ..kernels.caps import S2Cap, radius_l2_from_radians
+from .coverings import conservative_coverings, cover_regions, region_from_row
 
-_REFINABLE = {"loop", "cap", "rect", "polygon"}
+# refined per region group; caps are refined in one batch-wide pass and
+# every other kind (union) is kept — the covering decides
+_PER_REGION = ["loop", "polygon", "rect"]
 
 # Conservative coverings are deterministic per (region, max_cells);
 # repeated joins against the same region set (interactive use, the
@@ -72,6 +77,77 @@ def _region_cache_key(row: dict) -> tuple:
         return v
 
     return tuple(sorted((k, _freeze(v)) for k, v in row.items()))
+
+
+def _refine_keep(lat_deg, lng_deg, rid, kind, p0, p1, p2,
+                 row_of: Callable[[str, int], dict], cache: dict,
+                 accs) -> np.ndarray:
+    """Exact-refine decision for one Arrow batch of (point, region)
+    candidates: the one kind dispatch behind both join paths.
+
+    Per-row inputs: point lat/lng degrees, region_id, and the region's
+    kind and p0..p2 (cap center lat/lng and radius, degrees).  Each
+    region id is non-null (both paths' candidates come from an
+    equi-join or an isNotNull filter on it) and names one geometry.
+    Caps are decoded once per distinct region and tested in one
+    vectorized pass over every cap row; loops, polygons and rects run
+    their kernel per region group, with the adapter built from
+    ``row_of(region_id, batch_position)`` and memoized in ``cache``;
+    any other kind (union) is kept.  The batch's (total, exact)
+    fallback-counter deltas are added to ``accs``."""
+    from ..kernels import predicates as _pred
+
+    t0, e0 = _pred.TRIAGE_TOTAL_COUNT, _pred.EXACT_FALLBACK_COUNT
+    n = len(rid)
+    keep = np.ones(n, dtype=bool)
+    if n:
+        lat_r = lk.degrees_to_radians(np.asarray(lat_deg, np.float64))
+        lng_r = lk.degrees_to_radians(np.asarray(lng_deg, np.float64))
+        x, y, z = lk.latlng_to_xyz(lat_r, lng_r)
+        codes, uniq = pd.factorize(np.asarray(rid))
+        # codes number regions in order of first appearance, so a
+        # region's first row is where the running max of codes steps up
+        first = np.flatnonzero(
+            np.diff(np.maximum.accumulate(codes), prepend=-1))
+        kind_u = np.asarray(kind, dtype=object)[first]
+
+        is_cap = (kind_u == "cap")[codes]
+        if is_cap.any():
+            # decoded per distinct region (non-cap ones decode to NaN
+            # and are never gathered), then one cap per cap row
+            cx, cy, cz = lk.latlng_to_xyz(
+                lk.degrees_to_radians(np.asarray(p0, np.float64)[first]),
+                lk.degrees_to_radians(np.asarray(p1, np.float64)[first]))
+            r_l2 = radius_l2_from_radians(
+                lk.degrees_to_radians(np.asarray(p2, np.float64)[first]))
+            c = codes[is_cap]
+            keep[is_cap] = S2Cap(cx[c], cy[c], cz[c], r_l2[c]) \
+                .contains_points_batch(x[is_cap], y[is_cap], z[is_cap])
+
+        sub = np.flatnonzero(np.isin(kind_u, _PER_REGION)[codes])
+        order = sub[np.argsort(codes[sub], kind="stable")]
+        for idx in np.split(order, np.flatnonzero(np.diff(codes[order])) + 1):
+            if not len(idx):
+                continue
+            u = codes[idx[0]]
+            r = uniq[u]
+            if r not in cache:
+                if len(cache) > 65536:
+                    cache.clear()
+                cache[r] = region_from_row(row_of(r, first[u]))
+            reg = cache[r]
+            if kind_u[u] == "loop":
+                keep[idx] = reg.loop.contains_points_batch(
+                    x[idx], y[idx], z[idx])
+            elif kind_u[u] == "polygon":
+                # shell-minus-holes, any-poly (polygon_shape.rs)
+                keep[idx] = reg.contains_points_batch(x[idx], y[idx], z[idx])
+            else:  # rect
+                keep[idx] = reg.rect.contains_latlng_batch(
+                    lat_r[idx], lng_r[idx])
+    accs[0].add(int(_pred.TRIAGE_TOTAL_COUNT - t0))
+    accs[1].add(int(_pred.EXACT_FALLBACK_COUNT - e0))
+    return keep
 
 
 def _ancestor_candidates(points: DataFrame, coverings: DataFrame,
@@ -158,7 +234,6 @@ DISTRIBUTED_REGION_THRESHOLD = 5000
 def point_in_region_join(points: DataFrame, regions: DataFrame,
                          cell_col: str = "cell_id", max_cells: int = 8,
                          refine: bool = True,
-                         broadcast: bool = True,
                          distributed: bool | None = None) -> DataFrame:
     """points (must carry a leaf ``cell_col``) x regions -> matched pairs.
 
@@ -168,9 +243,10 @@ def point_in_region_join(points: DataFrame, regions: DataFrame,
 
     Physical strategy by region count:
     - small region sets (the common case by contract): coverings are
-      built and memoized driver-side and compiled to literal-InSet
-      codegen filters (or one broadcast equi-join past ~1k cells) —
-      fastest, no extra jobs;
+      built driver-side by ``conservative_coverings`` (the builder
+      ``cover_regions(conservative=True)`` also uses), memoized by row
+      content, and compiled to literal-InSet codegen filters (or one
+      broadcast equi-join past ~1k cells) — fastest, no extra jobs;
     - large region sets (``distributed=True``, or auto past
       DISTRIBUTED_REGION_THRESHOLD when ``distributed=None``, which
       costs one count() probe job on the regions side): everything
@@ -180,6 +256,8 @@ def point_in_region_join(points: DataFrame, regions: DataFrame,
       geometry joined inline, so NO driver-side collect of regions ever
       happens.  Jobs: probe, covering plus levels, then the caller's
       action (see ``point_in_region_join_distributed``).
+
+    Both paths refine through the one dispatch ``_refine_keep``.
     """
     spark = points.sparkSession
     if distributed is None:
@@ -204,14 +282,7 @@ def point_in_region_join(points: DataFrame, regions: DataFrame,
     # build the conservative coverings driver-side — this avoids two
     # tiny mapInPandas stages (worker spin-up dominates them) and gives
     # the distinct covering levels for free.
-    import numpy as np
-
     from ..kernels import cellid as ck
-    from .coverings import (
-        cap_coverings_batch,
-        conservative_covering,
-        conservative_region_from_row,
-    )
 
     def _by_level_of(ids_u: np.ndarray) -> dict[int, list[int]]:
         lvls = ck.level(ids_u)
@@ -220,44 +291,20 @@ def point_in_region_join(points: DataFrame, regions: DataFrame,
             by_level.setdefault(int(lv), []).append(int(cid))
         return by_level
 
-    def _cache_put(key, by_level) -> None:
+    region_rows = {r["region_id"]: r.asDict() for r in regions.collect()}
+    keys = {rid: (_region_cache_key(row), max_cells)
+            for rid, row in region_rows.items()}
+    covs = {rid: _COVERING_CACHE.get(key) for rid, key in keys.items()}
+    missing = [rid for rid, by_level in covs.items() if by_level is None]
+    built = conservative_coverings(
+        [region_rows[rid] for rid in missing], max_cells
+    )
+    for rid, ids_u in zip(missing, built):
+        covs[rid] = _by_level_of(ids_u)
         if len(_COVERING_CACHE) > 4096:
             _COVERING_CACHE.clear()
-        _COVERING_CACHE[key] = by_level
-
-    region_rows = {r["region_id"]: r.asDict() for r in regions.collect()}
-
-    # Batch all uncached cap rows through the level-synchronous batched
-    # kernel first (identical per-cap results; one vectorized loop for
-    # the whole set instead of ~20 ms of Python per cap — the driver
-    # path stays fast right up to the distributed-path threshold).
-    uncached_caps = []
-    for rid, row in region_rows.items():
-        key = (_region_cache_key(row), max_cells)
-        if row["kind"] == "cap" and key not in _COVERING_CACHE:
-            uncached_caps.append((row, key))
-    if uncached_caps:
-        caps = [region_from_row(row).cap for row, _ in uncached_caps]
-        for (_, key), ids_u in zip(
-            uncached_caps, cap_coverings_batch(caps, max_cells=max_cells)
-        ):
-            _cache_put(key, _by_level_of(np.asarray(ids_u, np.uint64)))
-
-    region_covs: dict[str, dict[int, list[int]]] = {}
-    for rid, row in region_rows.items():
-        key = (_region_cache_key(row), max_cells)
-        by_level = _COVERING_CACHE.get(key)
-        if by_level is None:
-            ids_u = np.asarray(
-                conservative_covering(
-                    conservative_region_from_row(row), max_cells=max_cells
-                ),
-                np.uint64,
-            )
-            by_level = _by_level_of(ids_u)
-            _cache_put(key, by_level)
-        if by_level:
-            region_covs[rid] = by_level
+        _COVERING_CACHE[keys[rid]] = covs[rid]
+    region_covs = {rid: by_level for rid, by_level in covs.items() if by_level}
     if not region_covs:
         # filter(False), not limit(0): limit is unsupported on streaming
         # DataFrames, and this path must also serve the streaming
@@ -288,16 +335,21 @@ def point_in_region_join(points: DataFrame, regions: DataFrame,
             cov_rows, "region_id string, cell_id long, level int"
         ).coalesce(1)
         levels = sorted({lv for _, _, lv in cov_rows})
-        cand = _ancestor_candidates(points, coverings, levels, cell_col, broadcast)
+        cand = _ancestor_candidates(points, coverings, levels, cell_col,
+                                    broadcast=True)
     if not refine:
         return cand
 
     bc = spark.sparkContext.broadcast(region_rows)
+    # kind and cap parameters per region id: the per-row columns of the
+    # refine dispatch are one hash lookup per candidate away
+    geo = pd.DataFrame.from_dict(region_rows, orient="index").reindex(
+        columns=["kind", "p0", "p1", "p2"])
 
     # Fleet-wide exact-arithmetic fallback accounting (BASELINE sanity
     # target: < 1% of predicate evaluations).  Read after an action via
     # ``last_fallback_rate()``.
-    acc_total, acc_exact = _session_accumulators(spark)
+    accs = _session_accumulators(spark)
 
     # Refine as a BOOLEAN Arrow pandas_udf filter, not mapInPandas: the
     # exact kernels only read (lat, lng, region_id), so those three
@@ -316,42 +368,12 @@ def point_in_region_join(points: DataFrame, regions: DataFrame,
 
     @_pandas_udf(_BooleanType())
     def _keep(lat: pd.Series, lng: pd.Series, rid: pd.Series) -> pd.Series:
-        from ..kernels import predicates as _pred
-
-        rows = bc.value
-        t0, e0 = _pred.TRIAGE_TOTAL_COUNT, _pred.EXACT_FALLBACK_COUNT
-        n = len(lat)
-        keep = np.zeros(n, dtype=bool)
-        if n:
-            lat_r = lk.degrees_to_radians(lat.to_numpy(np.float64))
-            lng_r = lk.degrees_to_radians(lng.to_numpy(np.float64))
-            x, y, z = lk.latlng_to_xyz(lat_r, lng_r)
-            for r, idx in rid.groupby(rid).indices.items():
-                row = rows.get(r)
-                if row is None or row["kind"] not in _REFINABLE:
-                    keep[idx] = True  # no exact test — covering decides
-                    continue
-                if r not in regions_cache:
-                    if len(regions_cache) > 65536:
-                        regions_cache.clear()
-                    regions_cache[r] = region_from_row(row)
-                reg = regions_cache[r]
-                if row["kind"] == "loop":
-                    keep[idx] = reg.loop.contains_points_batch(
-                        x[idx], y[idx], z[idx])
-                elif row["kind"] == "cap":
-                    keep[idx] = reg.cap.contains_points_batch(
-                        x[idx], y[idx], z[idx])
-                elif row["kind"] == "polygon":
-                    # shell-minus-holes, any-poly (polygon_shape.rs)
-                    keep[idx] = reg.contains_points_batch(
-                        x[idx], y[idx], z[idx])
-                else:  # rect
-                    keep[idx] = reg.rect.contains_latlng_batch(
-                        lat_r[idx], lng_r[idx])
-        acc_total.add(int(_pred.TRIAGE_TOTAL_COUNT - t0))
-        acc_exact.add(int(_pred.EXACT_FALLBACK_COUNT - e0))
-        return pd.Series(keep)
+        g = geo.reindex(rid.to_numpy())
+        kind, p0, p1, p2 = (g[c].to_numpy() for c in geo.columns)
+        return pd.Series(_refine_keep(
+            lat, lng, rid, kind, p0, p1, p2,
+            lambda r, _i: bc.value[r], regions_cache, accs,
+        ))
 
     return cand.filter(_keep(F.col("lat"), F.col("lng"), F.col("region_id")))
 
@@ -386,8 +408,6 @@ def point_in_region_join_distributed(points: DataFrame, regions: DataFrame,
     one-region-covers-half-the-points skew regime on AQE-disabled
     clusters.  Defaults off; output is identical either way.
     """
-    from .coverings import cover_regions, region_from_row
-
     spark = points.sparkSession
     # localCheckpoint rather than persist(): the ContextCleaner frees
     # the blocks once the frame goes out of scope, so repeated calls in
@@ -412,7 +432,7 @@ def point_in_region_join_distributed(points: DataFrame, regions: DataFrame,
     if not refine:
         return cand
 
-    acc_total, acc_exact = _session_accumulators(spark)
+    accs = _session_accumulators(spark)
     geom_cols = [
         c for c in ("kind", "p0", "p1", "p2", "p3",
                     "vertices", "cell_ids", "loops")
@@ -422,11 +442,11 @@ def point_in_region_join_distributed(points: DataFrame, regions: DataFrame,
     joined = cand.join(geom, "region_id")
     out_cols = cand.columns
 
-    # Same Arrow-boolean-filter form as the literal path: geometry and
-    # coordinates ship to Python ONE way and a single bool comes back —
-    # the candidate's payload columns never cross Arrow.  (Geometry
-    # must still ride the join here: no driver-side collect of regions
-    # on this path, by contract.)
+    # Same Arrow-boolean-filter form and refine dispatch as the literal
+    # path: geometry and coordinates ship to Python ONE way and a single
+    # bool comes back — the candidate's payload columns never cross
+    # Arrow.  (Geometry must still ride the join here: no driver-side
+    # collect of regions on this path, by contract.)
     from pyspark.sql.functions import pandas_udf as _pandas_udf
     from pyspark.sql.types import BooleanType as _BooleanType
 
@@ -434,62 +454,18 @@ def point_in_region_join_distributed(points: DataFrame, regions: DataFrame,
 
     @_pandas_udf(_BooleanType())
     def _keep(*cols: pd.Series) -> pd.Series:
-        from ..kernels import chord as _chord
-        from ..kernels import predicates as _pred
-
         lat, lng, rid = cols[0], cols[1], cols[2]
         geo = dict(zip(geom_cols, cols[3:]))
-        kind_s = geo["kind"]
-        t0, e0 = _pred.TRIAGE_TOTAL_COUNT, _pred.EXACT_FALLBACK_COUNT
-        n = len(lat)
-        keep = np.zeros(n, dtype=bool)
-        if n:
-            lat_r = lk.degrees_to_radians(lat.to_numpy(np.float64))
-            lng_r = lk.degrees_to_radians(lng.to_numpy(np.float64))
-            x, y, z = lk.latlng_to_xyz(lat_r, lng_r)
-            for kind, kidx in kind_s.groupby(kind_s).indices.items():
-                if kind == "cap":
-                    # one vectorized pass over EVERY cap row in the
-                    # batch — per-region grouping would pay pandas/
-                    # Python overhead per tiny group at high region
-                    # cardinality (the distance-join shape)
-                    clat = lk.degrees_to_radians(
-                        geo["p0"].iloc[kidx].to_numpy(np.float64))
-                    clng = lk.degrees_to_radians(
-                        geo["p1"].iloc[kidx].to_numpy(np.float64))
-                    cx, cy, cz = lk.latlng_to_xyz(clat, clng)
-                    r_l2 = _chord.from_radians(lk.degrees_to_radians(
-                        geo["p2"].iloc[kidx].to_numpy(np.float64)))
-                    d2 = _chord.between_points(
-                        cx, cy, cz, x[kidx], y[kidx], z[kidx])
-                    keep[kidx] = d2 <= r_l2
-                    continue
-                if kind not in _REFINABLE:
-                    keep[kidx] = True
-                    continue
-                rsub = rid.iloc[kidx]
-                for r, ridx_local in rsub.groupby(rsub).indices.items():
-                    idx = kidx[ridx_local]
-                    if r not in regions_cache:
-                        if len(regions_cache) > 65536:
-                            regions_cache.clear()
-                        i0 = idx[0]
-                        row = {c: geo[c].iloc[i0] for c in geom_cols}
-                        row["region_id"] = r
-                        regions_cache[r] = region_from_row(row)
-                    reg = regions_cache[r]
-                    if kind == "loop":
-                        keep[idx] = reg.loop.contains_points_batch(
-                            x[idx], y[idx], z[idx])
-                    elif kind == "polygon":
-                        keep[idx] = reg.contains_points_batch(
-                            x[idx], y[idx], z[idx])
-                    else:  # rect
-                        keep[idx] = reg.rect.contains_latlng_batch(
-                            lat_r[idx], lng_r[idx])
-        acc_total.add(int(_pred.TRIAGE_TOTAL_COUNT - t0))
-        acc_exact.add(int(_pred.EXACT_FALLBACK_COUNT - e0))
-        return pd.Series(keep)
+
+        def row_of(r, i):
+            row = {c: geo[c].iloc[i] for c in geom_cols}
+            row["region_id"] = r
+            return row
+
+        return pd.Series(_refine_keep(
+            lat, lng, rid, geo["kind"], geo.get("p0"), geo.get("p1"),
+            geo.get("p2"), row_of, regions_cache, accs,
+        ))
 
     args = [F.col("lat"), F.col("lng"), F.col("region_id")] + [
         F.col(c) for c in geom_cols

@@ -4,7 +4,8 @@ filter-and-refine chain end-to-end.
 
 The entire batch operator (operators/spatial_join.point_in_region_join,
 small-region path) is STATELESS — literal-InSet covering filter +
-filtered explode + one mapInPandas exact refine — so it runs unchanged
+filtered explode + an Arrow boolean ``pandas_udf`` exact-refine filter
+(the refine dispatch both join paths share) — so it runs unchanged
 under Structured Streaming in append mode with exactly-once file/Iceberg
 sinks.  No watermark or state store is needed: each micro-batch is
 independent, and resumability comes from the sink's commit log.
