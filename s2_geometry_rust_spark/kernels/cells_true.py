@@ -95,18 +95,22 @@ def face_uv_to_xyz_inverse(face, u, v):
     return x * inv_len, y * inv_len, z * inv_len
 
 
+def cell_center_vertices_xyz(ids) -> tuple[np.ndarray, np.ndarray]:
+    """(n, 3) unit centers, as ``cell_center_xyz``, and (n, 4, 3) unit
+    vertices in UV-corner order (lo,lo),(hi,lo),(hi,hi),(lo,hi), from
+    one ``cell_uv_bounds`` pass."""
+    face, u_lo, u_hi, v_lo, v_hi = cell_uv_bounds(
+        np.atleast_1d(np.asarray(ids, np.uint64)))
+    u = np.stack([0.5 * (u_lo + u_hi), u_lo, u_hi, u_hi, u_lo], axis=-1)
+    v = np.stack([0.5 * (v_lo + v_hi), v_lo, v_lo, v_hi, v_hi], axis=-1)
+    x, y, z = face_uv_to_xyz_inverse(np.asarray(face)[:, None], u, v)
+    pts = np.stack([x, y, z], axis=-1)  # (n, 5, 3)
+    return pts[:, 0], pts[:, 1:]
+
+
 def cell_vertices_xyz(ids) -> np.ndarray:
     """(n, 4, 3) unit vertices in UV-corner order (lo,lo),(hi,lo),(hi,hi),(lo,hi)."""
-    face, u_lo, u_hi, v_lo, v_hi = cell_uv_bounds(ids)
-    us = [u_lo, u_hi, u_hi, u_lo]
-    vs = [v_lo, v_lo, v_hi, v_hi]
-    out = np.empty((len(np.atleast_1d(face)), 4, 3))
-    for k in range(4):
-        x, y, z = face_uv_to_xyz_inverse(face, us[k], vs[k])
-        out[:, k, 0] = x
-        out[:, k, 1] = y
-        out[:, k, 2] = z
-    return out
+    return cell_center_vertices_xyz(ids)[1]
 
 
 def cell_center_xyz(ids) -> np.ndarray:

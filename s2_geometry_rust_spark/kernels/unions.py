@@ -63,52 +63,79 @@ def normalize_scan(ids) -> np.ndarray:
 _FACE_LSB = U(1) << U(60)
 
 
-def normalize(ids) -> np.ndarray:
-    """Vectorized normalize — identical output to ``normalize_scan``
-    (the normalized form is unique: sorted, containment-free, no four
-    complete siblings), O(rounds) numpy passes instead of a per-cell
-    Python loop.
+def normalize_by_owner(cells, owner, n: int) -> list[np.ndarray]:
+    """Normalize many unions at once: ``cells[i]`` belongs to union
+    ``owner[i]`` (in ``range(n)``); returns the n normalized unions,
+    each identical to ``normalize_scan`` of its own cells (the
+    normalized form is unique: sorted, containment-free, no four
+    complete siblings).  O(rounds) whole-array numpy passes instead of
+    a per-cell Python loop or a per-union call.
 
-    1. sort + dedup;
-    2. drop contained: cell ranges are laminar (nested or disjoint),
-       so after sorting by (range_min asc, range_max desc) a cell is
-       contained in another iff the running max of earlier range_max
-       already reaches its own range_max;
-    3. collapse complete sibling quads bottom-up: equal parent ids
-       imply equal levels (a parent id's own lsb pins its level), so
-       one unique-with-counts pass per round finds every count==4
-       parent; collapsing cannot create new containment (anything
-       nested in or containing the quad was already dropped), only new
-       quads — iterate to fixpoint (<= MAX_LEVEL rounds).
+    1. drop contained and duplicate cells: cell ranges are laminar
+       (nested or disjoint), so after sorting by (owner, range_min asc,
+       range_max desc) a cell is contained in an earlier one of its
+       union iff the running max of ``owner * R + rank(range_max)``
+       (R distinct range_max values) already reaches its own key; an
+       earlier union's keys all sit below ``owner * R``.  What remains
+       is sorted by (owner, id): disjoint ranges sort by id as by
+       range_min;
+    2. collapse complete sibling quads bottom-up: equal parent ids
+       imply equal levels (a parent id's own lsb pins its level), and
+       a complete quad leaves no other cell of its union inside the
+       parent's range, so a quad is a run of four equal (owner,
+       parent) keys and its parent takes the first child's place in
+       the sorted order.  Collapsing cannot create new containment
+       (anything nested in or containing the quad was already
+       dropped), only new quads — iterate to fixpoint (<= MAX_LEVEL
+       rounds).
     """
-    ids = np.unique(_arr(ids))
-    if len(ids) <= 1:
-        return ids
-    rmin = ci.range_min(ids)
-    rmax = ci.range_max(ids)
-    order = np.lexsort((np.iinfo(np.uint64).max - rmax, rmin))
-    rmax_o = rmax[order]
-    cummax = np.maximum.accumulate(rmax_o)
-    keep = np.ones(len(ids), dtype=bool)
-    keep[1:] = rmax_o[1:] > cummax[:-1]
-    ids = np.sort(ids[order][keep])
-    while len(ids) >= 4:
-        lb = ci.lsb(ids)
+    cells = _arr(cells)
+    owner = np.asarray(owner, dtype=np.int64).ravel()
+    if len(cells):
+        # (owner, range_min asc, range_max desc) by stable sorts from an
+        # id-descending start: cells sharing a range_min are a first-child
+        # chain, where the larger cell has the larger id.  np.lexsort
+        # is several times slower than these passes.
+        order = np.argsort(cells)[::-1]
+        order = order[np.argsort(ci.range_min(cells[order]), kind="stable")]
+        order = order[np.argsort(owner[order], kind="stable")]
+        cells, owner = cells[order], owner[order]
+        by_rmax = np.argsort(ci.range_max(cells))
+        sorted_rmax = ci.range_max(cells[by_rmax])
+        rank = np.empty(len(cells), dtype=np.int64)
+        rank[by_rmax] = np.cumsum(np.concatenate(
+            ([0], sorted_rmax[1:] != sorted_rmax[:-1])))
+        key = owner * (rank[by_rmax[-1]] + 1) + rank
+        keep = np.ones(len(cells), dtype=bool)
+        keep[1:] = key[1:] > np.maximum.accumulate(key)[:-1]
+        cells, owner = cells[keep], owner[keep]
+    while len(cells) >= 4:
+        lb = ci.lsb(cells)
         can = lb < _FACE_LSB
         plsb = lb << _U2
         with np.errstate(over="ignore"):
-            parents = (ids & (~plsb + _U1)) | plsb
-        parents = np.where(can, parents, ids)
-        uniq, inv, counts = np.unique(
-            parents, return_inverse=True, return_counts=True
-        )
-        quad = can & (counts[inv] == 4)
-        if not quad.any():
+            parents = (cells & (~plsb + _U1)) | plsb
+        parents = np.where(can, parents, cells)
+        first = np.ones(len(cells), dtype=bool)
+        first[1:] = (parents[1:] != parents[:-1]) | (owner[1:] != owner[:-1])
+        starts = np.flatnonzero(first)
+        runs = np.diff(starts, append=len(cells))
+        quad = starts[(runs == 4) & can[starts]]
+        if not len(quad):
             break
-        ids = np.sort(np.concatenate(
-            [ids[~quad], np.unique(parents[quad])]
-        ))
-    return ids
+        cells[quad] = parents[quad]
+        keep = np.ones(len(cells), dtype=bool)
+        keep[(quad[:, None] + np.arange(1, 4)).ravel()] = False
+        cells, owner = cells[keep], owner[keep]
+    return np.split(cells, np.searchsorted(owner, np.arange(1, n)))
+
+
+def normalize(ids) -> np.ndarray:
+    """Sort, drop contained, collapse 4 siblings -> parent: the
+    one-union call of ``normalize_by_owner``, identical to
+    ``normalize_scan``."""
+    ids = _arr(ids)
+    return normalize_by_owner(ids, np.zeros(len(ids), np.int64), 1)[0]
 
 
 def is_normalized(ids) -> bool:

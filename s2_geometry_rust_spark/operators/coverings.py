@@ -28,8 +28,9 @@ from pyspark.sql.types import (
 )
 
 from ..kernels import cellid as ck
+from ..kernels import chord
 from ..kernels import latlng as lk
-from ..kernels.caps import S2Cap
+from ..kernels.caps import S2Cap, radius_l2_from_radians
 from ..kernels.coverer import (
     CapRegion,
     CellUnionRegion,
@@ -197,14 +198,14 @@ class TrueLoopRegion:
         return inside.any(axis=1) | straddle.any(axis=1)
 
 
-def _cell_bounding_caps(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+def _cell_bounding_caps(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray,
+                                                   np.ndarray]:
     """True cell centers (n,3) and bounding-cap radii (n,): the max
     center-to-vertex angle, which covers the whole geodesically convex
-    cell quad."""
-    centers = ct.cell_center_xyz(ids)
-    verts = ct.cell_vertices_xyz(ids)  # (n,4,3)
+    cell quad; plus the (n,4,3) vertices it was measured from."""
+    centers, verts = ct.cell_center_vertices_xyz(ids)
     dots = np.clip(np.einsum("nkd,nd->nk", verts, centers), -1.0, 1.0)
-    return centers, np.arccos(dots).max(axis=1)
+    return centers, np.arccos(dots).max(axis=1), verts
 
 
 class TruePolylineRegion:
@@ -246,7 +247,7 @@ class TruePolylineRegion:
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
         if len(self._a) == 0:
             return np.zeros(len(ids), dtype=bool)
-        centers, r_cell = _cell_bounding_caps(ids)      # (n,3), (n,)
+        centers, r_cell, _ = _cell_bounding_caps(ids)   # (n,3), (n,)
         # angular distance centers x edges
         s = centers @ self._nhat.T                      # (n,m) sin(dist to circle)
         in1 = np.einsum("nd,md->nm", centers,
@@ -279,8 +280,13 @@ class TrueCapRegion:
         return bool(self.may_intersect_cells(np.asarray([cell.id], np.uint64))[0])
 
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
-        centers, r_cell = _cell_bounding_caps(ids)
-        ang = np.arccos(np.clip(centers @ self._center, -1.0, 1.0))
+        centers, r_cell, _ = _cell_bounding_caps(ids)
+        # the batched coverer's row-wise dot, not a BLAS matvec: past
+        # level ~25 an ulp of the dot moves the arccos by more than the
+        # pad, and the two coverers must stay bit-identical
+        ang = np.arccos(np.clip(np.einsum(
+            "nd,nd->n", centers, np.broadcast_to(self._center, centers.shape)),
+            -1.0, 1.0))
         return ang <= self._radius + r_cell + 1e-12
 
 
@@ -336,7 +342,7 @@ class TrueRectRegion:
         return bool(self.may_intersect_cells(np.asarray([cell.id], np.uint64))[0])
 
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
-        centers, r = _cell_bounding_caps(ids)
+        centers, r, _ = _cell_bounding_caps(ids)
         r = r + 1e-12
         lat_c = np.arcsin(np.clip(centers[:, 2], -1.0, 1.0))
         lat_lo, lat_hi = lat_c - r, lat_c + r
@@ -448,19 +454,12 @@ def _normalized_by_owner(done_cells: list[np.ndarray],
                          done_owner: list[np.ndarray],
                          L: int) -> list[np.ndarray]:
     """Split a batched coverer's (cell, owner) output into one normalized
-    covering per owner (empty where an owner kept no cell)."""
-    out: list[np.ndarray] = [np.array([], np.uint64) for _ in range(L)]
-    if done_cells:
-        allc = np.concatenate(done_cells)
-        allo = np.concatenate(done_owner)
-        order = np.argsort(allo, kind="stable")
-        allc, allo = allc[order], allo[order]
-        bounds = np.searchsorted(allo, np.arange(L + 1))
-        for i in range(L):
-            lo, hi = bounds[i], bounds[i + 1]
-            if hi > lo:
-                out[i] = ku.normalize(allc[lo:hi].astype(np.uint64))
-    return out
+    covering per owner (empty where an owner kept no cell), all owners
+    in one ``ku.normalize_by_owner`` call."""
+    if not done_cells:
+        return [np.array([], np.uint64) for _ in range(L)]
+    return ku.normalize_by_owner(
+        np.concatenate(done_cells), np.concatenate(done_owner), L)
 
 
 def polyline_coverings_batch(verts_list: list[np.ndarray],
@@ -516,7 +515,7 @@ def polyline_coverings_batch(verts_list: list[np.ndarray],
         keep = np.zeros(len(cells), bool)
         if not has.any():
             return keep
-        centers, r_cell = _cell_bounding_caps(cells)
+        centers, r_cell, _ = _cell_bounding_caps(cells)
         cum = np.zeros(len(cells) + 1, np.int64)
         np.cumsum(m, out=cum[1:])
         tot = int(cum[-1])
@@ -581,30 +580,44 @@ def polyline_coverings_batch(verts_list: list[np.ndarray],
 
 def cap_coverings_batch(caps: list, max_cells: int = 8,
                         max_level: int = 30) -> list[np.ndarray]:
-    """Batched ``conservative_covering(TrueCapRegion(cap))`` for many
-    caps at once — same per-cap results (same admit/containment
-    formulas: triangle-inequality admit, squared-chord-vs-radius_l2
-    vertex containment), but the level-synchronous loop runs ONCE over
-    the concatenated frontier of every cap, with per-cap
-    budget/terminal bookkeeping.  Removes the ~20 ms/region Python
-    constant from both covering paths of the spatial join
-    (conservative_coverings routes cap rows here)."""
-    L = len(caps)
+    """Batched ``conservative_covering(TrueCapRegion(cap))`` for a list
+    of ``S2Cap``: per-cap results are identical.  A front for
+    ``_cap_coverings``, which takes the caps as arrays."""
+    return _cap_coverings(
+        np.array([[c.cx, c.cy, c.cz] for c in caps], np.float64),
+        np.array([c.radius_l2 for c in caps], np.float64),
+        max_cells, max_level,
+    )
+
+
+def _cap_coverings(center: np.ndarray, radius_l2: np.ndarray,
+                   max_cells: int, max_level: int) -> list[np.ndarray]:
+    """Conservative coverings of L caps given as (L,3) unit centers and
+    (L,) squared-chord radii — the same per-cap results as
+    ``conservative_covering(TrueCapRegion(cap))`` (same admit and
+    containment formulas: triangle-inequality admit, squared-chord-vs-
+    radius_l2 vertex containment), but the level-synchronous loop runs
+    ONCE over the concatenated frontier of every cap, with per-cap
+    budget/terminal bookkeeping.  Each level builds its children's
+    centers and vertices once (the containment test reuses the admitted
+    children's vertices), and every cap's cells are normalized in one
+    ``ku.normalize_by_owner`` call."""
+    L = len(radius_l2)
     if L == 0:
         return []
-    C = np.array([[c.cx, c.cy, c.cz] for c in caps], np.float64)
-    radius = np.array([c.get_radius_radians() for c in caps], np.float64)
-    radius_l2 = np.array([c.radius_l2 for c in caps], np.float64)
+    radius = chord.to_radians(radius_l2)
 
-    def admit(cells: np.ndarray, owner: np.ndarray) -> np.ndarray:
-        centers, r_cell = _cell_bounding_caps(cells)
+    def admit(cells: np.ndarray,
+              owner: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Admit mask over cells, and the (kept, 4, 3) vertices."""
+        centers, r_cell, verts = _cell_bounding_caps(cells)
         ang = np.arccos(np.clip(
-            np.einsum("nd,nd->n", centers, C[owner]), -1.0, 1.0))
-        return ang <= radius[owner] + r_cell + 1e-12
+            np.einsum("nd,nd->n", centers, center[owner]), -1.0, 1.0))
+        keep = ang <= radius[owner] + r_cell + 1e-12
+        return keep, verts[keep]
 
-    def contained(cells: np.ndarray, owner: np.ndarray) -> np.ndarray:
-        verts = ct.cell_vertices_xyz(cells)  # (n,4,3)
-        d = verts - C[owner][:, None, :]
+    def contained(verts: np.ndarray, owner: np.ndarray) -> np.ndarray:
+        d = verts - center[owner][:, None, :]
         d2 = np.minimum(np.einsum("nkd,nkd->nk", d, d), 4.0)
         return (d2 <= radius_l2[owner][:, None]).all(axis=1)
 
@@ -613,7 +626,7 @@ def cap_coverings_batch(caps: list, max_cells: int = 8,
     )
     cells = np.tile(faces, L)
     owner = np.repeat(np.arange(L, dtype=np.int64), 6)
-    keep = admit(cells, owner)
+    keep, _ = admit(cells, owner)
     cells, owner = cells[keep], owner[keep]
     done_cells: list[np.ndarray] = []
     done_owner: list[np.ndarray] = []
@@ -631,7 +644,7 @@ def cap_coverings_batch(caps: list, max_cells: int = 8,
                 break
         children = ck.children(cells).reshape(-1)
         cowner = np.repeat(owner, 4)
-        ckeep = admit(children, cowner)
+        ckeep, cverts = admit(children, cowner)
         children, cowner = children[ckeep], cowner[ckeep]
         pcnt = np.bincount(owner, minlength=L)
         ccnt = np.bincount(cowner, minlength=L)
@@ -640,11 +653,10 @@ def cap_coverings_batch(caps: list, max_cells: int = 8,
             hit = dead[owner]
             done_cells.append(cells[hit])
             done_owner.append(owner[hit])
-        live = ~dead
-        sel = live[cowner]
-        children, cowner = children[sel], cowner[sel]
+        sel = ~dead[cowner]
+        children, cowner, cverts = children[sel], cowner[sel], cverts[sel]
         if len(children):
-            inside = contained(children, cowner)
+            inside = contained(cverts, cowner)
             if inside.any():
                 done_cells.append(children[inside])
                 done_owner.append(cowner[inside])
@@ -675,14 +687,21 @@ def conservative_region_from_row(row) -> object:
 def conservative_coverings(rows, max_cells: int,
                            max_level: int = 30) -> list[np.ndarray]:
     """Join-filter coverings of many regions rows, in row order — the one
-    builder behind both spatial-join paths.  Cap rows share one batched
-    level-synchronous loop (``cap_coverings_batch``, identical per-cap
+    builder behind both spatial-join paths.  Cap rows are decoded
+    column-wise (center and squared-chord radius arrays, the same
+    kernels and results as ``region_from_row``) and share one batched
+    level-synchronous loop (``_cap_coverings``, identical per-cap
     results); every other row takes
     ``conservative_covering(conservative_region_from_row(row))``."""
     cap_pos = [i for i, row in enumerate(rows) if row["kind"] == "cap"]
-    caps = dict(zip(cap_pos, cap_coverings_batch(
-        [region_from_row(rows[i]).cap for i in cap_pos],
-        max_cells=max_cells, max_level=max_level,
+    p = np.array([[rows[i]["p0"], rows[i]["p1"], rows[i]["p2"]]
+                  for i in cap_pos], np.float64).reshape(-1, 3)
+    x, y, z = lk.latlng_to_xyz(lk.degrees_to_radians(p[:, 0]),
+                               lk.degrees_to_radians(p[:, 1]))
+    caps = dict(zip(cap_pos, _cap_coverings(
+        np.stack([x, y, z], axis=1),
+        radius_l2_from_radians(lk.degrees_to_radians(p[:, 2])),
+        max_cells, max_level,
     )))
     return [
         caps[i] if i in caps else conservative_covering(

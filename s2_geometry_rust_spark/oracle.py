@@ -344,7 +344,7 @@ WITH w AS (
 )
 SELECT d.doc_id,
        coalesce(s.n_tokens, 0) AS n_tokens,
-       coalesce(s.logit, 0) AS logit,
+       coalesce(CAST(s.logit AS BIGINT), 0) AS logit,
        CAST(CASE WHEN coalesce(s.logit, 0) > 0 THEN 1 ELSE 0 END AS INTEGER)
          AS label
 FROM documents d LEFT JOIN s USING (doc_id)

@@ -132,3 +132,28 @@ def test_classifier_gate_materialize_identical(spark, docs):
     a = sorted(map(tuple, classifier_gate(docs, 0.5).collect()))
     b = sorted(map(tuple, classifier_gate(docs, 0.5, materialize=True).collect()))
     assert a == b
+
+
+def test_oracle_logit_is_int64():
+    """The DuckDB oracles' logit (and the gate's threshold) is an exact
+    int64 like the engine's: DuckDB's sum(BIGINT) is a HUGEINT, which
+    pandas receives as float64 unless the oracle casts it back."""
+    duckdb = pytest.importorskip("duckdb")
+    import pandas as pd
+
+    from s2_geometry_rust_spark.oracle import (
+        classifier_gate_sql,
+        classifier_scores_sql,
+    )
+
+    texts = ["the quick brown fox", "", "one", "a a a a", "x y"]
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame({
+        "doc_id": np.arange(len(texts), dtype=np.int64), "text": texts}))
+    scores = con.execute(classifier_scores_sql(N_BUCKETS)).fetchdf()
+    assert scores["logit"].dtype == np.int64
+    assert dict(zip(scores["doc_id"], scores["logit"])) == {
+        i: _expected_logit(t) for i, t in enumerate(texts)}
+    gate = con.execute(classifier_gate_sql(0.6, N_BUCKETS)).fetchdf()
+    assert gate["logit"].dtype == np.int64
+    assert gate["thr"].dtype == np.int64

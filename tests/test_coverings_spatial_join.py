@@ -199,6 +199,46 @@ def test_cap_coverings_batch_matches_per_cap():
             assert np.array_equal(np.sort(r), np.sort(g)), (budget, i)
 
 
+def test_conservative_coverings_rows_match_per_region():
+    """The rows-level builder (caps decoded column-wise and covered in
+    one batch, other rows per region) == the per-region
+    ``conservative_covering(conservative_region_from_row(row))`` bit for
+    bit, in row order: seeded caps with 0, 180, 250 deg and NaN radii,
+    polar and antimeridian centers, the fixture caps, and the fixture
+    rects between them."""
+    import numpy as np
+
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.coverings import (
+        conservative_covering,
+        conservative_coverings,
+        conservative_region_from_row,
+    )
+
+    rng = np.random.default_rng(17)
+    radii = [0.0, 0.01, 1.0, 5.0, 30.0, 91.0, 180.0, 250.0, float("nan")]
+    centers = [(float(rng.uniform(-90, 90)), float(rng.uniform(-180, 180)))
+               for _ in range(30)]
+    centers += [(90.0, 0.0), (-90.0, 45.0), (89.9, -120.0), (0.0, 180.0),
+                (0.0, -180.0), (-20.0, 179.95), (60.0, -179.99)]
+    rows = [dict(region_id=f"cap{i}", kind="cap", p0=lat, p1=lng,
+                 p2=radii[i % len(radii)], p3=None)
+            for i, (lat, lng) in enumerate(centers)]
+    rows += [dict(region_id=n, kind="cap", p0=a, p1=b, p2=r, p3=None)
+             for n, (a, b, r) in fixtures.CAPS.items()]
+    for k, (n, (a, b, c, d)) in enumerate(fixtures.RECTS.items()):
+        rows.insert(5 * k + 2, dict(region_id=n, kind="rect",
+                                    p0=a, p1=b, p2=c, p3=d))
+    for budget in (8, 64):
+        got = conservative_coverings(rows, budget)
+        assert len(got) == len(rows)
+        for row, g in zip(rows, got):
+            want = conservative_covering(
+                conservative_region_from_row(row), max_cells=budget)
+            assert g.dtype == np.uint64, row["region_id"]
+            assert np.array_equal(g, want), (budget, row["region_id"])
+
+
 def test_point_in_region_distributed_salted_matches_unsalted(spark, regions, points):
     """Explicit hot-cell salting is a pure repartitioning: the salted
     distributed join must emit exactly the unsalted pair set (the soak

@@ -124,9 +124,10 @@ def test_expand_with_radius_empty_union():
 
 @pytest.mark.parametrize("seed", range(20))
 def test_vectorized_normalize_equals_linear_scan(seed):
-    """normalize (vectorized, r5) must be bit-identical to the
-    reference linear scan on arbitrary inputs — incl. deep sibling
-    cascades (all 4^k descendants of one cell collapse back to it)."""
+    """normalize and normalize_by_owner (vectorized) must be
+    bit-identical to the reference linear scan on arbitrary inputs —
+    incl. deep sibling cascades (all 4^k descendants of one cell
+    collapse back to it)."""
     ids = _random_cells(seed, n=60)
     assert np.array_equal(ku.normalize(ids), ku.normalize_scan(ids))
     # adversarial cascade: every level-(L+2) descendant of one cell
@@ -139,6 +140,19 @@ def test_vectorized_normalize_equals_linear_scan(seed):
     # duplicates + containment mixtures
     messy = np.concatenate([ids, ids[:13], kids, np.array([base], np.uint64)])
     assert np.array_equal(ku.normalize(messy), ku.normalize_scan(messy))
+    # many unions at once: each owner's union equals its own scan, with
+    # the cascade, duplicate and nesting inputs spread over shuffled
+    # owners (owner 3 gets nothing)
+    parts = [ids, cascade, messy, np.empty(0, np.uint64), kids[:3],
+             grandkids[:16], np.concatenate([kids, kids])]
+    cells = np.concatenate(parts)
+    owner = np.repeat(np.arange(len(parts)), [len(p) for p in parts])
+    perm = np.random.default_rng(seed).permutation(len(cells))
+    got = ku.normalize_by_owner(cells[perm], owner[perm], len(parts))
+    assert len(got) == len(parts)
+    for g, p in zip(got, parts):
+        assert g.dtype == np.uint64
+        assert np.array_equal(g, ku.normalize_scan(p))
 
 
 @pytest.mark.parametrize("seed", [7, 99, 1234])
