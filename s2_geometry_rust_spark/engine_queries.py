@@ -2554,106 +2554,6 @@ QUERIES["embedding_drift"] = embedding_drift_q
 ORACLES["embedding_drift"] = oracle.embedding_drift_sql()
 
 
-# --------------------------------------------------------------------------
-# Round-5 CORRECTNESS window rotation.
-#
-# The driver's correctness gate checks only the FIRST 50 entries of
-# QUERIES.  Rounds 1-4 drove 100 of the 124 queries green; the 24
-# round-4 additions (registered at positions 101-124 above) have never
-# appeared in a driver artifact.  Rotate them to the front, pad the
-# window to 50 with r4-green re-checks, and leave everything else in
-# its prior order.  New round-5 queries register via
-# `_register_in_window` below so they also land inside the window.
-# --------------------------------------------------------------------------
-
-_R5_WINDOW = [
-    # never driver-checked (round-4 additions, judge-green)
-    "loop_intersections_strict",
-    "knn_exact",
-    "cap_point_bounds",
-    "maximum_tile_ranges",
-    "canonical_covering",
-    "point_in_region_salted",
-    "near_dup_pairs_capped",
-    "pii_report",
-    "dedup_keep_best",
-    "ann_ivfpq",
-    "semantic_dedup",
-    "bloom_decontaminate",
-    "classifier_scores",
-    "classifier_gate",
-    "incremental_dedup",
-    "lm_bigram_novelty",
-    "snapshot_diff",
-    "tile_counts_incremental",
-    "collocations",
-    "incremental_clusters",
-    "image_resize",
-    "frame_sample",
-    "ivf_assign_delta",
-    "embedding_drift",
-]
-
-_R5_PAD = [
-    # r4-green re-checks filling the window to 50 (new round-5
-    # queries displace these from the tail of the pad list)
-    "session_stats",
-    "stratified_sample",
-    "vocab_topk",
-    "bigram_counts",
-    "label_centroids",
-    "region_contains_loop",
-    "loop_intersections",
-    "decontaminate",
-    "funnel_counts",
-    "tile_lang_counts",
-    "retention_counts",
-    "point_cloud_index",
-    "boilerplate_spans",
-    "pack_chunks",
-    "kmv_distinct",
-    "cap_intersect_terms",
-    "closest_edge",
-    "wrs_sample",
-    "hex_tile_counts",
-    "hex_parent_rollup",
-    "hex_ring_counts",
-    "dup_spans",
-    "tile_pyramid",
-    "trajectory_stats",
-    "group_quantiles",
-    "pack_sequences",
-]
-
-
-def _apply_window() -> None:
-    """Rebuild QUERIES/ORACLES insertion order: window head first
-    (rotation set + round-5 additions + pad trimmed to 50 total),
-    then every remaining query in its prior order."""
-    global QUERIES, ORACLES
-    head = list(_R5_WINDOW)
-    for name in _R5_PAD:
-        if len(head) >= 50:
-            break
-        head.append(name)
-    ordered = head + [k for k in QUERIES if k not in set(head)]
-    QUERIES = {k: QUERIES[k] for k in ordered}
-    ORACLES = {k: ORACLES[k] for k in ordered if k in ORACLES}
-
-
-def _register_in_window(name, query_fn, oracle_sql_str) -> None:
-    """Register a round-5 query so it lands inside the driver's
-    50-slot CORRECTNESS window (ahead of the pad re-checks)."""
-    QUERIES[name] = query_fn
-    if oracle_sql_str is not None:
-        ORACLES[name] = oracle_sql_str
-    _R5_WINDOW.append(name)
-    _apply_window()
-
-
-_apply_window()
-
-
 def union_expand_radius_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CellUnion::expand_with_radius (cell_union.rs:446-467): expand
     level = least(per-union min cell level + 3, level_for_min_width
@@ -2687,11 +2587,9 @@ def union_expand_radius_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register_in_window(
-    "union_expand_radius",
-    union_expand_radius_q,
-    oracle.union_expand_radius_sql(radius_level=13, max_level_diff=3),
-)
+QUERIES["union_expand_radius"] = union_expand_radius_q
+ORACLES["union_expand_radius"] = oracle.union_expand_radius_sql(
+    radius_level=13, max_level_diff=3)
 
 
 def loop_nearest_boundary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2709,11 +2607,8 @@ def loop_nearest_boundary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register_in_window(
-    "loop_nearest_boundary",
-    loop_nearest_boundary_q,
-    oracle.loop_nearest_boundary_sql(),
-)
+QUERIES["loop_nearest_boundary"] = loop_nearest_boundary_q
+ORACLES["loop_nearest_boundary"] = oracle.loop_nearest_boundary_sql()
 
 
 def union_expand_radius_dist_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2749,8 +2644,48 @@ def union_expand_radius_dist_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register_in_window(
-    "union_expand_radius_dist",
-    union_expand_radius_dist_q,
-    oracle.union_expand_radius_sql(radius_level=13, max_level_diff=3),
-)
+QUERIES["union_expand_radius_dist"] = union_expand_radius_dist_q
+ORACLES["union_expand_radius_dist"] = oracle.union_expand_radius_sql(
+    radius_level=13, max_level_diff=3)
+
+
+# --------------------------------------------------------------------------
+# The contract's correctness gate checks only the first 50 entries of
+# QUERIES.  _GATE_HEAD names them, in order; every other query follows
+# in registration order.
+# --------------------------------------------------------------------------
+
+_GATE_HEAD = [
+    "loop_intersections_strict", "knn_exact", "cap_point_bounds",
+    "maximum_tile_ranges", "canonical_covering", "point_in_region_salted",
+    "near_dup_pairs_capped", "pii_report", "dedup_keep_best", "ann_ivfpq",
+    "semantic_dedup", "bloom_decontaminate", "classifier_scores",
+    "classifier_gate", "incremental_dedup", "lm_bigram_novelty",
+    "snapshot_diff", "tile_counts_incremental", "collocations",
+    "incremental_clusters", "image_resize", "frame_sample",
+    "ivf_assign_delta", "embedding_drift", "union_expand_radius",
+    "loop_nearest_boundary", "union_expand_radius_dist", "session_stats",
+    "stratified_sample", "vocab_topk", "bigram_counts", "label_centroids",
+    "region_contains_loop", "loop_intersections", "decontaminate",
+    "funnel_counts", "tile_lang_counts", "retention_counts",
+    "point_cloud_index", "boilerplate_spans", "pack_chunks", "kmv_distinct",
+    "cap_intersect_terms", "closest_edge", "wrs_sample", "hex_tile_counts",
+    "hex_parent_rollup", "hex_ring_counts", "dup_spans", "tile_pyramid",
+]
+
+
+def _head_first(queries: dict, head: list[str]) -> dict:
+    """``queries`` reordered: ``head`` first, then every other query in
+    its registration order.  A ValueError names any head entry that is
+    not a registered query, or is listed twice."""
+    unknown = [n for n in head if n not in queries]
+    if unknown:
+        raise ValueError(f"gate head names unknown queries: {unknown}")
+    if len(set(head)) != len(head):
+        raise ValueError(f"gate head lists a query twice: {head}")
+    rest = [k for k in queries if k not in set(head)]
+    return {k: queries[k] for k in head + rest}
+
+
+QUERIES = _head_first(QUERIES, _GATE_HEAD)
+ORACLES = {k: ORACLES[k] for k in QUERIES if k in ORACLES}

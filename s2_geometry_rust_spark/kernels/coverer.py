@@ -13,8 +13,8 @@ is deterministic run-to-run (the reference's own tests only assert
 weak set-level properties of coverings).
 
 Coverings are tiny (max_cells default 8) and embarrassingly parallel
-across regions — the Spark layer runs one coverer call per region row
-inside ``applyInPandas``.
+across regions — ``cover_regions(conservative=False)`` runs one coverer
+call per region row inside ``mapInPandas``.
 """
 
 from __future__ import annotations
@@ -93,6 +93,22 @@ class CellUnionRegion:
 
     def may_intersect_cell(self, cell: S2Cell) -> bool:
         return unions.intersects_cell_id(self.ids, cell.id)
+
+    def contains_points_batch(self, x, y, z) -> np.ndarray:
+        """``contains`` over point arrays."""
+        return unions.contains_points_batch(self.ids, ci.from_point(x, y, z))
+
+    def may_intersect_cells(self, ids) -> np.ndarray:
+        """``may_intersect_cell`` over cell-id arrays: the same binary
+        search over range_max, vectorized."""
+        cells = np.asarray(ids, dtype=np.uint64)
+        if len(self.ids) == 0:
+            return np.zeros(len(cells), dtype=bool)
+        idx = np.searchsorted(ci.range_max(self.ids), ci.range_min(cells),
+                              side="left")
+        safe = np.minimum(idx, len(self.ids) - 1)
+        return ((idx < len(self.ids)) & ci.intersects(self.ids[safe], cells)
+                & ci.is_valid(cells))
 
 
 class PolylineRegion:

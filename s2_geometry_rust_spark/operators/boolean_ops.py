@@ -43,7 +43,6 @@ from pyspark.sql.types import (
 )
 
 from ..kernels import cellid as ck
-from ..kernels import cells_true as ct
 from ..kernels import latlng as lk
 from ..kernels import unions as ku
 from ..kernels.loops import S2Loop
@@ -65,15 +64,8 @@ def interior_covering(region: TrueLoopRegion, covering: np.ndarray
     inside AND no edge great-circle straddles the cell."""
     if len(covering) == 0:
         return covering
-    w = ct.cell_vertices_xyz(covering)
-    flat = w.reshape(-1, 3)
-    inside = region.loop.contains_points_batch(
-        flat[:, 0], flat[:, 1], flat[:, 2]
-    ).reshape(len(covering), 4)
-    s = np.einsum("nkd,ed->nke", w, region._normals)
-    straddle = (s.max(axis=1) >= -region._EPS) & (s.min(axis=1) <= region._EPS)
-    keep = inside.all(axis=1) & ~straddle.any(axis=1)
-    return covering[keep]
+    inside, straddle = region.classify_cells(covering)
+    return covering[inside.all(axis=1) & ~straddle]
 
 
 def _loop_from_verts(verts) -> S2Loop:

@@ -1,10 +1,14 @@
 """The covering operator: regions DataFrame -> exploded coverings.
 
-Runs the per-region RegionCoverer kernel (best-first candidate loop,
-region_coverer.rs:459-472/613-635 semantics) inside ``mapInPandas`` —
-each region is independent and a covering is <= max_cells cells, so the
-operator is embarrassingly parallel with **zero shuffles**: the output
-arrives pre-partitioned like the regions input.  At 10^12-doc scale the
+Runs inside ``mapInPandas`` one of two coverers: the per-region
+RegionCoverer kernel (best-first candidate loop,
+region_coverer.rs:459-472/613-635 semantics) for reference-parity
+coverings, or, for ``conservative=True`` join filters, the bounded
+level-synchronous loop ``_level_sync_coverings`` over true-geometry
+adapters (all cap rows of a batch in one call).  Each region is
+independent and a covering is <= max_cells cells, so the operator is
+embarrassingly parallel with **zero shuffles**: the output arrives
+pre-partitioned like the regions input.  At 10^12-doc scale the
 regions side is the small side; its covering table is what gets
 broadcast into the spatial join (spatial_join.py).
 
@@ -141,13 +145,6 @@ class TruePolygonRegion:
             out |= shell.may_intersect_cells(ids)
         return out
 
-    def may_intersect_cell(self, cell) -> bool:
-        return bool(self.may_intersect_cells(
-            np.asarray([cell.id], np.uint64))[0])
-
-
-_UV_PAD = 1e-12
-
 
 class TrueLoopRegion:
     """Conservative loop adapter over true cell geometry (cells_true):
@@ -182,11 +179,11 @@ class TrueLoopRegion:
     def contains_points_batch(self, x, y, z) -> np.ndarray:
         return self.loop.contains_points_batch(x, y, z)
 
-    def may_intersect_cell(self, cell) -> bool:
-        return bool(self.may_intersect_cells(np.asarray([cell.id], np.uint64))[0])
-
-    def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
-        """Vectorized over n cells: one (n,4,3) vertex build, one batch
+    def classify_cells(self, ids: np.ndarray
+                       ) -> tuple[np.ndarray, np.ndarray]:
+        """Per cell: which of its 4 true vertices the loop contains
+        (n,4), and whether any edge great circle straddles it (n,).
+        Vectorized over n cells: one (n,4,3) vertex build, one batch
         PIP, one einsum against the edge planes."""
         w = ct.cell_vertices_xyz(ids)  # (n, 4, 3)
         flat = w.reshape(-1, 3)
@@ -195,7 +192,11 @@ class TrueLoopRegion:
         ).reshape(len(ids), 4)
         s = np.einsum("nkd,ed->nke", w, self._normals)  # (n,4,n_edges)
         straddle = (s.max(axis=1) >= -self._EPS) & (s.min(axis=1) <= self._EPS)
-        return inside.any(axis=1) | straddle.any(axis=1)
+        return inside, straddle.any(axis=1)
+
+    def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
+        inside, straddle = self.classify_cells(ids)
+        return inside.any(axis=1) | straddle
 
 
 def _cell_bounding_caps(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray,
@@ -206,6 +207,63 @@ def _cell_bounding_caps(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray,
     centers, verts = ct.cell_center_vertices_xyz(ids)
     dots = np.clip(np.einsum("nkd,nd->nk", verts, centers), -1.0, 1.0)
     return centers, np.arccos(dots).max(axis=1), verts
+
+
+def _polyline_admit(verts_list: list[np.ndarray]):
+    """The polyline admit rule for L polylines at once, as
+    ``admit(cells, owner) -> mask``: a cell is admitted iff the min
+    angular distance from its bounding-cap center to any edge arc of
+    its owner's line is <= the cap radius + pad.  Evaluated per (cell,
+    own edge) pair — a block-diagonal pair expansion, row-wise einsums
+    and one ``minimum.reduceat`` — so one line's decisions do not depend
+    on which other lines share the call."""
+    L = len(verts_list)
+    a_parts, b_parts, counts = [], [], np.zeros(L, np.int64)
+    for i, v in enumerate(verts_list):
+        v = np.asarray(v, np.float64).reshape(-1, 3)
+        a_parts.append(v[:-1])
+        b_parts.append(v[1:])
+        counts[i] = max(len(v) - 1, 0)
+    A = np.concatenate(a_parts, axis=0)
+    B = np.concatenate(b_parts, axis=0)
+    n = np.cross(A, B)
+    norm = np.linalg.norm(n, axis=1)
+    ok = norm > 1e-300
+    nhat = np.where(ok[:, None], n / np.where(ok, norm, 1.0)[:, None], 0.0)
+    ca = np.cross(A, nhat)
+    cb = np.cross(B, nhat)
+    edge_start = np.zeros(L, np.int64)
+    edge_start[1:] = np.cumsum(counts)[:-1]
+
+    def admit(cells: np.ndarray, owner: np.ndarray) -> np.ndarray:
+        m = counts[owner]
+        has = m > 0
+        keep = np.zeros(len(cells), bool)
+        if not has.any():
+            return keep
+        centers, r_cell, _ = _cell_bounding_caps(cells)
+        cum = np.zeros(len(cells) + 1, np.int64)
+        np.cumsum(m, out=cum[1:])
+        tot = int(cum[-1])
+        within = np.arange(tot) - np.repeat(cum[:-1], m)
+        pair_edge = np.repeat(edge_start[owner], m) + within
+        c = centers[np.repeat(np.arange(len(cells)), m)]
+        # sin(distance to the edge's great circle); whether the foot of
+        # the perpendicular falls between the endpoints; else the
+        # nearer endpoint
+        s = np.einsum("pd,pd->p", c, nhat[pair_edge])
+        in1 = np.einsum("pd,pd->p", c, ca[pair_edge]) <= 0.0
+        in2 = np.einsum("pd,pd->p", c, cb[pair_edge]) >= 0.0
+        d_circ = np.arcsin(np.clip(np.abs(s), 0.0, 1.0))
+        d_a = np.arccos(np.clip(np.einsum("pd,pd->p", c, A[pair_edge]), -1.0, 1.0))
+        d_b = np.arccos(np.clip(np.einsum("pd,pd->p", c, B[pair_edge]), -1.0, 1.0))
+        d_end = np.minimum(d_a, d_b)
+        d = np.where(ok[pair_edge] & in1 & in2, d_circ, d_end)
+        dmin = np.minimum.reduceat(d, cum[:-1][has])
+        keep[has] = dmin <= r_cell[has] + 1e-12
+        return keep
+
+    return admit
 
 
 class TruePolylineRegion:
@@ -219,20 +277,12 @@ class TruePolylineRegion:
     the whole true quad (cell_bounding_cap takes the max vertex angle
     and cell quads are geodesically convex), so any curve point inside
     the cell is within the cap, hence within cap-radius of its center —
-    the test can only over-admit, never miss."""
-
-    _PAD = 1e-12
+    the test can only over-admit, never miss.  It is the one-line call
+    of ``_polyline_admit``, the rule ``polyline_coverings_batch`` uses."""
 
     def __init__(self, vertices: np.ndarray):
-        v = np.asarray(vertices, dtype=np.float64).reshape(-1, 3)
-        self.vertices = v
-        a, b = v[:-1], v[1:]
-        n = np.cross(a, b)
-        norm = np.linalg.norm(n, axis=1)
-        ok = norm > 1e-300
-        self._a, self._b = a, b
-        self._nhat = np.where(ok[:, None], n / np.where(ok, norm, 1.0)[:, None], 0.0)
-        self._ok = ok
+        self.vertices = np.asarray(vertices, dtype=np.float64).reshape(-1, 3)
+        self._admit = _polyline_admit([self.vertices])
 
     def contains(self, x, y, z) -> bool:
         return False  # no interior
@@ -240,26 +290,21 @@ class TruePolylineRegion:
     def contains_points_batch(self, x, y, z) -> np.ndarray:
         return np.zeros(np.shape(np.asarray(x)), dtype=bool)
 
-    def may_intersect_cell(self, cell) -> bool:
-        return bool(self.may_intersect_cells(
-            np.asarray([cell.id], np.uint64))[0])
-
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
-        if len(self._a) == 0:
-            return np.zeros(len(ids), dtype=bool)
-        centers, r_cell, _ = _cell_bounding_caps(ids)   # (n,3), (n,)
-        # angular distance centers x edges
-        s = centers @ self._nhat.T                      # (n,m) sin(dist to circle)
-        in1 = np.einsum("nd,md->nm", centers,
-                        np.cross(self._a, self._nhat)) <= 0.0
-        in2 = np.einsum("nd,md->nm", centers,
-                        np.cross(self._b, self._nhat)) >= 0.0
-        d_circ = np.arcsin(np.clip(np.abs(s), 0.0, 1.0))
-        d_a = np.arccos(np.clip(centers @ self._a.T, -1.0, 1.0))
-        d_b = np.arccos(np.clip(centers @ self._b.T, -1.0, 1.0))
-        d_end = np.minimum(d_a, d_b)
-        d = np.where(self._ok[None, :] & in1 & in2, d_circ, d_end)
-        return d.min(axis=1) <= r_cell + self._PAD
+        return self._admit(ids, np.zeros(len(ids), np.int64))
+
+
+def _cap_admit(centers: np.ndarray, r_cell: np.ndarray,
+               cap_center: np.ndarray, radius) -> np.ndarray:
+    """Cell bounding-cap triangle inequality: the angle between each
+    cell's center and its cap's center (both (n,3)) is at most the cap
+    radius plus the cell's bounding radius, padded.  A row-wise einsum,
+    not a BLAS matvec: past level ~25 an ulp of the dot moves the
+    arccos by more than the pad, so every cap covering takes this one
+    dot."""
+    ang = np.arccos(np.clip(
+        np.einsum("nd,nd->n", centers, cap_center), -1.0, 1.0))
+    return ang <= radius + r_cell + 1e-12
 
 
 class TrueCapRegion:
@@ -276,18 +321,11 @@ class TrueCapRegion:
     def contains_points_batch(self, x, y, z) -> np.ndarray:
         return np.asarray(self.cap.contains_points_batch(x, y, z), bool)
 
-    def may_intersect_cell(self, cell) -> bool:
-        return bool(self.may_intersect_cells(np.asarray([cell.id], np.uint64))[0])
-
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
         centers, r_cell, _ = _cell_bounding_caps(ids)
-        # the batched coverer's row-wise dot, not a BLAS matvec: past
-        # level ~25 an ulp of the dot moves the arccos by more than the
-        # pad, and the two coverers must stay bit-identical
-        ang = np.arccos(np.clip(np.einsum(
-            "nd,nd->n", centers, np.broadcast_to(self._center, centers.shape)),
-            -1.0, 1.0))
-        return ang <= self._radius + r_cell + 1e-12
+        return _cap_admit(centers, r_cell,
+                          np.broadcast_to(self._center, centers.shape),
+                          self._radius)
 
 
 def _ieee_remainder_2pi(x: np.ndarray) -> np.ndarray:
@@ -327,7 +365,7 @@ def _s1_expanded_contains(lng, margin: np.ndarray,
 class TrueRectRegion:
     """Conservative rect adapter: each cell's bounding cap -> lat/lng
     window intersected with the rect (wraparound-aware), vectorized over
-    cells; ``may_intersect_cell`` is the one-cell case of the batch."""
+    cells."""
 
     def __init__(self, rect):
         self.rect = rect
@@ -337,9 +375,6 @@ class TrueRectRegion:
 
     def contains_points_batch(self, x, y, z) -> np.ndarray:
         return np.asarray(self.rect.contains_points_batch(x, y, z), bool)
-
-    def may_intersect_cell(self, cell) -> bool:
-        return bool(self.may_intersect_cells(np.asarray([cell.id], np.uint64))[0])
 
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
         centers, r, _ = _cell_bounding_caps(ids)
@@ -363,194 +398,49 @@ class TrueRectRegion:
         return out
 
 
-def conservative_covering(region, max_cells: int = 64,
-                          max_level: int = 30) -> np.ndarray:
-    """Bounded level-synchronous covering for *join filters*.
+def _level_sync_coverings(L: int, admit, contained, max_cells: int,
+                          max_level: int) -> list[np.ndarray]:
+    """Bounded level-synchronous coverings of L regions ("owners") for
+    *join filters* — the one loop behind every ``conservative=True``
+    covering.
 
     The reference's best-first coverer (region_coverer.rs:613-635)
     relies on its vertex-sampling may_intersect going false almost
     everywhere; with a truthful may_intersect its frontier explodes on
-    boundary-dominated regions.  This variant expands whole levels at a
-    time and stops when the next expansion could exceed ``max_cells`` —
-    every kept cell still may-intersect, so the result is always a
-    superset of the region in leaf-id space (never a miss), just coarser
-    when the budget is tight.
-    """
-    class _IdCell:
-        """Lightweight cell handle — conservative adapters only read .id."""
+    boundary-dominated regions.  This loop expands whole levels at a
+    time, once over the concatenated frontier of every owner:
 
-        __slots__ = ("id",)
+    - each owner starts from its admitted face cells;
+    - an owner whose next expansion could exceed ``max_cells``
+      (``n_term + 4 * frontier > max_cells``) stops, and so does an
+      owner none of whose children is admitted: its frontier is kept;
+    - admitted children that ``contained`` proves inside stop refining
+      and count toward ``n_term`` (``contained=None``: never);
+    - at ``max_level`` every remaining frontier is kept.
 
-        def __init__(self, cid: int):
-            self.id = cid
-
-    batch_intersect = getattr(region, "may_intersect_cells", None)
-    batch_contains = getattr(region, "contains_points_batch", None)
-
-    faces = np.array(
-        [int(ck.from_face_pos_level(f, 0, 0)) for f in range(6)], np.uint64
-    )
-    if batch_intersect is not None:
-        frontier_arr = faces[np.asarray(batch_intersect(faces), bool)]
-    else:
-        frontier_arr = np.array(
-            [cid for cid in faces if region.may_intersect_cell(_IdCell(int(cid)))],
-            np.uint64,
-        )
-    terminal: list[np.ndarray] = []
-    n_terminal = 0
-    level = 0
-    while len(frontier_arr) and level < max_level:
-        if n_terminal + 4 * len(frontier_arr) > max_cells:
-            break
-        children = ck.children(frontier_arr).reshape(-1)  # (4n,)
-        if batch_intersect is not None:
-            keep = np.asarray(batch_intersect(children), bool)
-        else:
-            keep = np.array(
-                [region.may_intersect_cell(_IdCell(int(c))) for c in children],
-                bool,
-            )
-        children = children[keep]
-        if len(children) == 0:
-            break
-        # containment sampling only stops refinement; kept cells stay in
-        # the covering either way (conservative)
-        verts = ct.cell_vertices_xyz(children)  # (m,4,3)
-        flat = verts.reshape(-1, 3)
-        if batch_contains is not None:
-            inside = np.asarray(
-                batch_contains(flat[:, 0], flat[:, 1], flat[:, 2]), bool
-            ).reshape(len(children), 4)
-            contained = inside.all(axis=1)
-        else:
-            contained = np.array(
-                [
-                    all(
-                        region.contains(float(v[k, 0]), float(v[k, 1]), float(v[k, 2]))
-                        for k in range(4)
-                    )
-                    for v in verts
-                ],
-                bool,
-            )
-        if contained.any():
-            terminal.append(children[contained])
-            n_terminal += int(contained.sum())
-        frontier_arr = children[~contained]
-        level += 1
-    parts = terminal + ([frontier_arr] if len(frontier_arr) else [])
-    out = (
-        np.concatenate(parts).astype(np.uint64)
-        if parts
-        else np.array([], dtype=np.uint64)
-    )
-    if len(out) == 0:
-        return out
-    return ku.normalize(out)
-
-
-def _normalized_by_owner(done_cells: list[np.ndarray],
-                         done_owner: list[np.ndarray],
-                         L: int) -> list[np.ndarray]:
-    """Split a batched coverer's (cell, owner) output into one normalized
-    covering per owner (empty where an owner kept no cell), all owners
-    in one ``ku.normalize_by_owner`` call."""
-    if not done_cells:
-        return [np.array([], np.uint64) for _ in range(L)]
-    return ku.normalize_by_owner(
-        np.concatenate(done_cells), np.concatenate(done_owner), L)
-
-
-def polyline_coverings_batch(verts_list: list[np.ndarray],
-                             max_cells: int = 64,
-                             max_level: int = 30) -> list[np.ndarray]:
-    """Batched ``conservative_covering(TruePolylineRegion(v))`` for many
-    polylines at once — per-line results are identical, but the
-    level-synchronous loop runs ONCE over the concatenated frontier of
-    every line (block-diagonal cell x own-edges distance via pair
-    expansion + ``minimum.reduceat``), amortizing the ~150 small-array
-    numpy calls per line into ~10 large-array calls per level.
-    Measured 20-70x per-line speedup at budgets 8-64 on 4-vertex lines.
-
-    Polylines have no interior, so the containment-sampling stage of
-    conservative_covering never fires and is omitted.
-
-    Exactness caveat: identical formulas, but per-pair einsum sums may
-    round differently from the per-line BLAS matmul.  This only matters
-    where an admit decision is within ~1 ulp of the threshold — which
-    requires r_cell ~ the arccos conditioning error (~1e-8 rad), i.e. a
-    DEGENERATE near-point line descending past level ~24.  Real
-    polylines exhaust the cell budget at far shallower levels
-    (margins ~1e-2..1e-4 rad), where the two paths are bit-identical
-    (tested on 200 random lines); for degenerate lines both paths
-    remain conservative supersets, just not always the same one.
-    """
-    L = len(verts_list)
+    Every kept cell may-intersect its region, so each covering is a
+    superset of its region in leaf-id space (never a miss), just
+    coarser when the budget is tight.  ``admit(cells, owner)`` returns
+    the admit mask and whatever ``contained(payload, owner)`` reads of
+    the admitted cells (their vertices, say).  All owners are
+    normalized in one ``ku.normalize_by_owner`` call."""
     if L == 0:
         return []
-    a_parts, b_parts, counts = [], [], np.zeros(L, np.int64)
-    for i, v in enumerate(verts_list):
-        v = np.asarray(v, np.float64).reshape(-1, 3)
-        a_parts.append(v[:-1])
-        b_parts.append(v[1:])
-        counts[i] = max(len(v) - 1, 0)
-    if counts.sum() == 0:
-        return [np.array([], np.uint64) for _ in range(L)]
-    A = np.concatenate(a_parts, axis=0)
-    B = np.concatenate(b_parts, axis=0)
-    n = np.cross(A, B)
-    norm = np.linalg.norm(n, axis=1)
-    ok = norm > 1e-300
-    nhat = np.where(ok[:, None], n / np.where(ok, norm, 1.0)[:, None], 0.0)
-    ca = np.cross(A, nhat)
-    cb = np.cross(B, nhat)
-    edge_start = np.zeros(L, np.int64)
-    edge_start[1:] = np.cumsum(counts)[:-1]
-    pad = TruePolylineRegion._PAD
-
-    def admit(cells: np.ndarray, owner: np.ndarray) -> np.ndarray:
-        m = counts[owner]
-        has = m > 0
-        keep = np.zeros(len(cells), bool)
-        if not has.any():
-            return keep
-        centers, r_cell, _ = _cell_bounding_caps(cells)
-        cum = np.zeros(len(cells) + 1, np.int64)
-        np.cumsum(m, out=cum[1:])
-        tot = int(cum[-1])
-        within = np.arange(tot) - np.repeat(cum[:-1], m)
-        pair_edge = np.repeat(edge_start[owner], m) + within
-        c = centers[np.repeat(np.arange(len(cells)), m)]
-        e_n = nhat[pair_edge]
-        s = np.einsum("pd,pd->p", c, e_n)
-        in1 = np.einsum("pd,pd->p", c, ca[pair_edge]) <= 0.0
-        in2 = np.einsum("pd,pd->p", c, cb[pair_edge]) >= 0.0
-        d_circ = np.arcsin(np.clip(np.abs(s), 0.0, 1.0))
-        d_a = np.arccos(np.clip(np.einsum("pd,pd->p", c, A[pair_edge]), -1.0, 1.0))
-        d_b = np.arccos(np.clip(np.einsum("pd,pd->p", c, B[pair_edge]), -1.0, 1.0))
-        d_end = np.minimum(d_a, d_b)
-        d = np.where(ok[pair_edge] & in1 & in2, d_circ, d_end)
-        dmin = np.minimum.reduceat(d, cum[:-1][has])
-        keep[has] = dmin <= r_cell[has] + pad
-        return keep
-
     faces = np.array(
         [int(ck.from_face_pos_level(f, 0, 0)) for f in range(6)], np.uint64
     )
     cells = np.tile(faces, L)
     owner = np.repeat(np.arange(L, dtype=np.int64), 6)
-    keep = admit(cells, owner)
+    keep, _ = admit(cells, owner)
     cells, owner = cells[keep], owner[keep]
     done_cells: list[np.ndarray] = []
     done_owner: list[np.ndarray] = []
+    n_term = np.zeros(L, np.int64)
     level = 0
     while len(cells) and level < max_level:
         cnt = np.bincount(owner, minlength=L)
-        # replicate the per-line "next expansion could exceed budget" stop
-        frozen = (4 * cnt) > max_cells
-        if frozen.any():
-            hit = frozen[owner]
+        hit = ((n_term + 4 * cnt) > max_cells)[owner]
+        if hit.any():
             done_cells.append(cells[hit])
             done_owner.append(owner[hit])
             cells, owner = cells[~hit], owner[~hit]
@@ -558,24 +448,65 @@ def polyline_coverings_batch(verts_list: list[np.ndarray],
                 break
         children = ck.children(cells).reshape(-1)
         cowner = np.repeat(owner, 4)
-        ckeep = admit(children, cowner)
+        ckeep, payload = admit(children, cowner)
         children, cowner = children[ckeep], cowner[ckeep]
-        # lines whose children all fail keep their current frontier
-        pcnt = np.bincount(owner, minlength=L)
-        ccnt = np.bincount(cowner, minlength=L)
-        dead = (pcnt > 0) & (ccnt == 0)
-        if dead.any():
-            hit = dead[owner]
+        hit = (np.bincount(cowner, minlength=L) == 0)[owner]
+        if hit.any():
             done_cells.append(cells[hit])
             done_owner.append(owner[hit])
-        live = ~dead
-        sel = live[cowner]
-        cells, owner = children[sel], cowner[sel]
+        if contained is not None and len(children):
+            inside = contained(payload, cowner)
+            if inside.any():
+                done_cells.append(children[inside])
+                done_owner.append(cowner[inside])
+                n_term += np.bincount(cowner[inside], minlength=L)
+                children, cowner = children[~inside], cowner[~inside]
+        cells, owner = children, cowner
         level += 1
-    if len(cells):
-        done_cells.append(cells)
-        done_owner.append(owner)
-    return _normalized_by_owner(done_cells, done_owner, L)
+    done_cells.append(cells)
+    done_owner.append(owner)
+    return ku.normalize_by_owner(
+        np.concatenate(done_cells), np.concatenate(done_owner), L)
+
+
+def conservative_covering(region, max_cells: int = 64,
+                          max_level: int = 30) -> np.ndarray:
+    """Conservative covering of one region adapter (``may_intersect_cells``
+    and ``contains_points_batch``): the one-owner call of
+    ``_level_sync_coverings``, where a cell whose 4 true vertices the
+    region contains stops refining."""
+
+    def admit(cells: np.ndarray, owner: np.ndarray):
+        keep = np.asarray(region.may_intersect_cells(cells), bool)
+        return keep, ct.cell_vertices_xyz(cells[keep])
+
+    def contained(verts: np.ndarray, owner: np.ndarray) -> np.ndarray:
+        flat = verts.reshape(-1, 3)
+        inside = region.contains_points_batch(flat[:, 0], flat[:, 1],
+                                              flat[:, 2])
+        return np.asarray(inside, bool).reshape(len(verts), 4).all(axis=1)
+
+    return _level_sync_coverings(1, admit, contained, max_cells,
+                                 max_level)[0]
+
+
+def polyline_coverings_batch(verts_list: list[np.ndarray],
+                             max_cells: int = 64,
+                             max_level: int = 30) -> list[np.ndarray]:
+    """Batched ``conservative_covering(TruePolylineRegion(v))`` for many
+    polylines at once — per-line results are identical (one admit
+    rule, ``_polyline_admit``), but the level-synchronous loop runs
+    ONCE over the concatenated frontier of every line, amortizing the
+    ~150 small-array numpy calls per line into ~10 large-array calls
+    per level.  Measured 20-70x per-line speedup at budgets 8-64 on
+    4-vertex lines.  Polylines have no interior, so no cell is ever
+    contained."""
+    if not verts_list:
+        return []
+    admit = _polyline_admit(verts_list)
+    return _level_sync_coverings(
+        len(verts_list), lambda cells, owner: (admit(cells, owner), None),
+        None, max_cells, max_level)
 
 
 def cap_coverings_batch(caps: list, max_cells: int = 8,
@@ -594,26 +525,18 @@ def _cap_coverings(center: np.ndarray, radius_l2: np.ndarray,
                    max_cells: int, max_level: int) -> list[np.ndarray]:
     """Conservative coverings of L caps given as (L,3) unit centers and
     (L,) squared-chord radii — the same per-cap results as
-    ``conservative_covering(TrueCapRegion(cap))`` (same admit and
-    containment formulas: triangle-inequality admit, squared-chord-vs-
-    radius_l2 vertex containment), but the level-synchronous loop runs
-    ONCE over the concatenated frontier of every cap, with per-cap
-    budget/terminal bookkeeping.  Each level builds its children's
-    centers and vertices once (the containment test reuses the admitted
-    children's vertices), and every cap's cells are normalized in one
-    ``ku.normalize_by_owner`` call."""
-    L = len(radius_l2)
-    if L == 0:
-        return []
+    ``conservative_covering(TrueCapRegion(cap))`` (same ``_cap_admit``
+    and the squared-chord-vs-radius_l2 vertex containment), in one
+    ``_level_sync_coverings`` call.  Each level builds its children's
+    centers and vertices once: the containment test reuses the
+    admitted children's vertices."""
     radius = chord.to_radians(radius_l2)
 
     def admit(cells: np.ndarray,
               owner: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """Admit mask over cells, and the (kept, 4, 3) vertices."""
         centers, r_cell, verts = _cell_bounding_caps(cells)
-        ang = np.arccos(np.clip(
-            np.einsum("nd,nd->n", centers, center[owner]), -1.0, 1.0))
-        keep = ang <= radius[owner] + r_cell + 1e-12
+        keep = _cap_admit(centers, r_cell, center[owner], radius[owner])
         return keep, verts[keep]
 
     def contained(verts: np.ndarray, owner: np.ndarray) -> np.ndarray:
@@ -621,53 +544,8 @@ def _cap_coverings(center: np.ndarray, radius_l2: np.ndarray,
         d2 = np.minimum(np.einsum("nkd,nkd->nk", d, d), 4.0)
         return (d2 <= radius_l2[owner][:, None]).all(axis=1)
 
-    faces = np.array(
-        [int(ck.from_face_pos_level(f, 0, 0)) for f in range(6)], np.uint64
-    )
-    cells = np.tile(faces, L)
-    owner = np.repeat(np.arange(L, dtype=np.int64), 6)
-    keep, _ = admit(cells, owner)
-    cells, owner = cells[keep], owner[keep]
-    done_cells: list[np.ndarray] = []
-    done_owner: list[np.ndarray] = []
-    n_term = np.zeros(L, np.int64)
-    level = 0
-    while len(cells) and level < max_level:
-        cnt = np.bincount(owner, minlength=L)
-        frozen = (n_term + 4 * cnt) > max_cells
-        if frozen.any():
-            hit = frozen[owner]
-            done_cells.append(cells[hit])
-            done_owner.append(owner[hit])
-            cells, owner = cells[~hit], owner[~hit]
-            if len(cells) == 0:
-                break
-        children = ck.children(cells).reshape(-1)
-        cowner = np.repeat(owner, 4)
-        ckeep, cverts = admit(children, cowner)
-        children, cowner = children[ckeep], cowner[ckeep]
-        pcnt = np.bincount(owner, minlength=L)
-        ccnt = np.bincount(cowner, minlength=L)
-        dead = (pcnt > 0) & (ccnt == 0)
-        if dead.any():
-            hit = dead[owner]
-            done_cells.append(cells[hit])
-            done_owner.append(owner[hit])
-        sel = ~dead[cowner]
-        children, cowner, cverts = children[sel], cowner[sel], cverts[sel]
-        if len(children):
-            inside = contained(cverts, cowner)
-            if inside.any():
-                done_cells.append(children[inside])
-                done_owner.append(cowner[inside])
-                n_term += np.bincount(cowner[inside], minlength=L)
-            children, cowner = children[~inside], cowner[~inside]
-        cells, owner = children, cowner
-        level += 1
-    if len(cells):
-        done_cells.append(cells)
-        done_owner.append(owner)
-    return _normalized_by_owner(done_cells, done_owner, L)
+    return _level_sync_coverings(len(radius_l2), admit, contained,
+                                 max_cells, max_level)
 
 
 def conservative_region_from_row(row) -> object:

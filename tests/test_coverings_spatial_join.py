@@ -309,8 +309,8 @@ def _seeded_rects(n=200, seed=11):
 def test_rect_batch_admit_matches_per_cell_and_scalar_covering():
     """TrueRectRegion.may_intersect_cells == the per-cell rule on every
     cell the covering examines, and conservative_covering takes the
-    same cells through its batch branch as through its scalar
-    (may_intersect_cell / contains) branch, at budgets 8 and 64."""
+    same cells under that per-cell rule (and the scalar contains) as
+    under the batch methods, at budgets 8 and 64."""
     from s2_geometry_rust_spark.kernels import cells_true as ct
     from s2_geometry_rust_spark.operators.coverings import (
         TrueRectRegion,
@@ -323,18 +323,23 @@ def test_rect_batch_admit_matches_per_cell_and_scalar_covering():
             return super().may_intersect_cells(ids)
 
     class ScalarOnly:
-        """No batch methods: forces conservative_covering's per-cell
-        fallback branches, deciding each cell by the reference rule."""
+        """Decides each cell by the per-cell reference rule and each
+        point by the scalar contains, one at a time."""
 
         def __init__(self, rect, caps):
             self.rect, self.caps = rect, caps
 
-        def contains(self, x, y, z):
-            return self.rect.contains_point(x, y, z)
+        def contains_points_batch(self, x, y, z):
+            return np.array([self.rect.contains_point(*map(float, q))
+                             for q in zip(x, y, z)], bool)
 
-        def may_intersect_cell(self, cell):
-            c, r = self.caps.get(cell.id) or ct.cell_bounding_cap(cell.id)
-            return _rect_may_intersect_ref(self.rect, c, r)
+        def may_intersect_cells(self, ids):
+            out = []
+            for cid in ids:
+                c, r = (self.caps.get(int(cid))
+                        or ct.cell_bounding_cap(int(cid)))
+                out.append(_rect_may_intersect_ref(self.rect, c, r))
+            return np.array(out, bool)
 
     n_cells = n_nonempty = 0
     for i, rect in enumerate(_seeded_rects()):
@@ -373,28 +378,72 @@ def test_rect_batch_admit_matches_per_cell_and_scalar_covering():
 
 
 def test_rect_scalar_admit_is_the_batch_admit():
-    """One formula decides: may_intersect_cell is the one-cell batch,
-    and contains_points_batch is the scalar contains, vectorized."""
+    """One formula decides: contains_points_batch is the scalar
+    contains, vectorized."""
     from s2_geometry_rust_spark.operators.coverings import TrueRectRegion
 
-    class _Cell:
-        def __init__(self, cid):
-            self.id = cid
-
     rng = np.random.default_rng(3)
-    ids = ck.from_face_pos_level(
-        rng.integers(0, 6, 80),
-        rng.integers(0, 1 << 60, 80, dtype=np.uint64) & ~np.uint64(1),
-        rng.integers(0, 14, 80))
+    rng.integers(0, 6, 80)  # keeps the seeded points below unchanged
+    rng.integers(0, 1 << 60, 80, dtype=np.uint64)
+    rng.integers(0, 14, 80)
     p = rng.normal(size=(200, 3))
     p /= np.linalg.norm(p, axis=1, keepdims=True)
     for rect in _seeded_rects(n=5, seed=4):
         reg = TrueRectRegion(rect)
-        batch = reg.may_intersect_cells(ids)
-        assert list(batch) == [reg.may_intersect_cell(_Cell(int(c)))
-                               for c in ids]
         inside = reg.contains_points_batch(p[:, 0], p[:, 1], p[:, 2])
         assert list(inside) == [reg.contains(*map(float, q)) for q in p]
+
+
+def test_union_batch_methods_match_scalar_and_cover_every_cell():
+    """CellUnionRegion's batch methods equal its scalar ones cell by
+    cell and point by point on seeded unions, and the conservative
+    covering of a union row contains every union cell."""
+    from types import SimpleNamespace
+
+    from s2_geometry_rust_spark.kernels import cells_true as ct
+    from s2_geometry_rust_spark.kernels.coverer import CellUnionRegion
+    from s2_geometry_rust_spark.operators.coverings import (
+        conservative_coverings,
+    )
+
+    rng = np.random.default_rng(23)
+    p = rng.normal(size=(300, 3))
+    p /= np.linalg.norm(p, axis=1, keepdims=True)
+    unions = [np.array([], np.uint64)]
+    for u in range(12):
+        k = int(rng.integers(1, 30))
+        leaf = ck.from_point(*p[rng.integers(0, len(p), k)].T)
+        unions.append(ku.normalize(ck.parent(
+            leaf, rng.integers(0 if u % 4 == 0 else 3, 31, k))))
+    for ids in unions:
+        reg = CellUnionRegion(ids)
+        # probes: the union's cells, their parents and children, and
+        # random (partly invalid) ids at every level
+        up = ids[ck.level(ids) > 0]
+        probe = np.concatenate([
+            ids, ck.parent(up, ck.level(up) - 1),
+            ck.children(ids[ck.level(ids) < 30]).reshape(-1),
+            ck.from_face_pos_level(
+                rng.integers(0, 6, 200),
+                rng.integers(0, 1 << 61, 200, dtype=np.uint64),
+                rng.integers(0, 31, 200)),
+            np.array([0], np.uint64)]).astype(np.uint64)
+        assert list(reg.may_intersect_cells(probe)) == [
+            reg.may_intersect_cell(SimpleNamespace(id=int(c)))
+            for c in probe]
+        q = np.concatenate([p, ct.cell_center_xyz(ids).reshape(-1, 3)])
+        assert list(reg.contains_points_batch(q[:, 0], q[:, 1], q[:, 2])) \
+            == [reg.contains(*map(float, v)) for v in q]
+    rows = [dict(region_id=f"u{i}", kind="union",
+                 cell_ids=[int(c) for c in ids.view(np.int64)])
+            for i, ids in enumerate(unions)]
+    for budget in (8, 64):
+        for ids, cov in zip(unions, conservative_coverings(rows, budget)):
+            assert len(cov) > 0 or len(ids) == 0
+            lo, hi = ck.range_min(cov), ck.range_max(cov)
+            for c in ids:
+                assert np.any((lo <= ck.range_min(c))
+                              & (ck.range_max(c) <= hi)), (budget, c)
 
 
 def test_distributed_join_covers_once(spark, regions, points):

@@ -339,10 +339,9 @@ def test_polyline_join_plan_has_no_nested_loop(spark):
 
 def test_polyline_coverings_batch_matches_per_line():
     """Batched level-synchronous coverer == per-line
-    conservative_covering on non-degenerate lines (bit-for-bit), and
-    stays a conservative never-miss superset on degenerate/point-like
-    lines where deep-level arccos conditioning makes bit-equality
-    ill-posed (see polyline_coverings_batch docstring)."""
+    conservative_covering bit-for-bit, including a repeated-vertex
+    point-like line (one admit rule on both sides), and the degenerate
+    lines stay conservative never-miss supersets."""
     from s2_geometry_rust_spark.kernels import cellid as ck2
     from s2_geometry_rust_spark.operators.coverings import (
         TruePolylineRegion,
@@ -357,7 +356,9 @@ def test_polyline_coverings_batch_matches_per_line():
         x, y, z = lk2.latlng_to_xyz(lat, lng)
         return np.stack([x, y, z], axis=-1)
 
-    lines = [to_xyz(v) for _, v in _random_lines(120, seed=3)]
+    point = to_xyz([(33.1, -17.2)])
+    degen = np.repeat(point, 3, axis=0)
+    lines = [to_xyz(v) for _, v in _random_lines(120, seed=3)] + [degen]
     for budget in (8, 64):
         ref = [
             conservative_covering(TruePolylineRegion(v), max_cells=budget)
@@ -368,10 +369,8 @@ def test_polyline_coverings_batch_matches_per_line():
             assert np.array_equal(np.sort(r), np.sort(g)), (budget, i)
 
     # degenerate cases: empty-edge line and repeated-vertex point line —
-    # assert the conservative property, not bit equality: every vertex's
-    # leaf cell has an ancestor-or-equal in the covering
-    point = to_xyz([(33.1, -17.2)])
-    degen = np.repeat(point, 3, axis=0)
+    # the conservative property: every vertex's leaf cell has an
+    # ancestor-or-equal in the covering
     for v in ([to_xyz([(1.0, 2.0)])[0:0], degen]):
         got = polyline_coverings_batch([v], max_cells=64)[0]
         if len(v) < 2:
@@ -386,3 +385,4 @@ def test_polyline_coverings_batch_matches_per_line():
             for c in got
         )
         assert covered
+    assert polyline_coverings_batch([]) == []
