@@ -317,13 +317,14 @@ def point_in_region_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter-and-refine point-in-region join over fixture loops/caps/
     rects; exactness vs direct PIP is pytest-verified.
 
-    Covering budget: 8 — the 7-region fixture set rides the driver-side
-    literal-InSet path, where a small memoized covering keeps the whole
-    candidate filter inside one whole-stage-codegen span (r2's
-    max_cells=64 pushed past the 1000-cell InSet threshold into the
-    equi-join path and cost 2x wall time; the 64-cell floor only pays
-    on the distributed path, which point_in_region_join applies
-    itself).  Output is budget-independent: the refine stage is exact.
+    Covering budget: 8 — the 8-region fixture set rides the driver-side
+    literal-InSet path either way (its conservative coverings measure
+    33 cells at max_cells=8 and 103 at 64, both far below the ~1000-cell
+    point where that path switches to a broadcast equi-join); the
+    smaller covering keeps the InSet filters short.  The 64-cell floor
+    only pays on the distributed path, which point_in_region_join
+    applies itself.  Output is budget-independent: the refine stage is
+    exact.
     """
     from . import fixtures
     from .operators.spatial_join import point_in_region_join

@@ -127,6 +127,8 @@ def normalize_by_owner(cells, owner, n: int) -> list[np.ndarray]:
         keep = np.ones(len(cells), dtype=bool)
         keep[(quad[:, None] + np.arange(1, 4)).ravel()] = False
         cells, owner = cells[keep], owner[keep]
+    if n == 0:
+        return []
     return np.split(cells, np.searchsorted(owner, np.arange(1, n)))
 
 

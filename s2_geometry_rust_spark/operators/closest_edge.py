@@ -115,7 +115,8 @@ def closest_edge_join_indexed(points: DataFrame, edges: DataFrame,
        radius = half-arc) EXPANDED by ``search_radius_deg``, covered
        conservatively (join-sound supersets — operators/coverings.py);
     2. points probe with one ancestor per distinct covering level —
-       a single hash equi-join on cell id;
+       a single hash equi-join on cell id (the distributed spatial
+       join's candidate stage, ``refine=False``);
     3. any point whose best candidate distance is within the search
        radius is PROVABLY optimal: an edge e with d(p, e) <= r puts p
        inside cap(e)+r, whose covering the point's ancestor probe hits,
@@ -129,16 +130,16 @@ def closest_edge_join_indexed(points: DataFrame, edges: DataFrame,
     """
     import math
 
-    from ..functions.columns import cell_level, cell_parent
     from ..functions.udfs import cell_id_from_xyz
-    from .coverings import cover_regions
+    from .spatial_join import point_in_region_join_distributed
 
     pts = _normalized(points, *xyz).withColumn(
         "_leaf", cell_id_from_xyz("px", "py", "pz")
     )
-    # edge bounding caps as REGIONS_SCHEMA cap rows (lat/lng degrees +
-    # radius degrees): JVM trig only — no oracle-parity needed here,
-    # correctness is the lossless-superset argument + pytest vs brute
+    # edge bounding caps as cap region rows (lat/lng degrees + radius
+    # degrees; a cap covering reads no other REGIONS_SCHEMA column): JVM
+    # trig only — no oracle-parity needed here, correctness is the
+    # lossless-superset argument + pytest vs brute
     mx = (F.col("ax") + F.col("bx")) / 2
     my = (F.col("ay") + F.col("by")) / 2
     mz = (F.col("az") + F.col("bz")) / 2
@@ -158,39 +159,17 @@ def closest_edge_join_indexed(points: DataFrame, edges: DataFrame,
         F.degrees(F.asin(uz)).alias("p0"),
         F.degrees(F.atan2(uy, ux)).alias("p1"),
         (half_arc_deg + search_radius_deg).alias("p2"),
-        F.lit(None).cast("double").alias("p3"),
-        F.lit(None).cast("array<struct<lat:double,lng:double>>").alias(
-            "vertices"
-        ),
-        F.lit(None).cast("array<bigint>").alias("cell_ids"),
-        F.lit(None).cast(
-            "array<struct<poly:bigint,"
-            "vertices:array<struct<lat:double,lng:double>>>>"
-        ).alias("loops"),
     )
-    cov = cover_regions(caps, max_cells=max_cells, conservative=True)
-    # distinct covering levels: one tiny agg job (levels <= 31 rows)
-    levels = sorted(
-        r["lv"]
-        for r in cov.select(cell_level("cell_id").alias("lv"))
-        .distinct()
-        .collect()
+    # the spatial join's candidate stage: one checkpointed covering
+    # pass shared by the levels read and the caller's action, then the
+    # ancestor-explode equi-join (a normalized covering hits each
+    # (point, edge) at most once)
+    cand = point_in_region_join_distributed(
+        pts, caps, cell_col="_leaf", max_cells=max_cells, refine=False,
     )
-    anc = F.explode(
-        F.array(*[cell_parent("_leaf", lv) for lv in levels])
-    ).alias("_anc")
-    cand = (
-        pts.select("*", anc)
-        .join(
-            cov.select(
-                F.col("cell_id").alias("_anc"),
-                F.col("region_id").cast("long").alias("edge_id"),
-            ),
-            "_anc",
-        )
-        .dropDuplicates([id_col, "edge_id"])
-        .join(edges, "edge_id")
-    )
+    cand = cand.withColumn(
+        "edge_id", F.col("region_id").cast("long")
+    ).drop("region_id").join(edges, "edge_id")
     d2 = edge_chord2_cols(
         F.col("px"), F.col("py"), F.col("pz"),
         F.col("ax"), F.col("ay"), F.col("az"),

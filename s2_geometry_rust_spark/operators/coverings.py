@@ -137,12 +137,13 @@ class TruePolygonRegion:
         return self.multi.contains_point(x, y, z)
 
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
+        # each shell classifies only the cells no earlier shell admitted
         out = np.zeros(len(ids), dtype=bool)
         for shell in self._shells:
-            rest = ~out
-            if not rest.any():
+            rest = np.flatnonzero(~out)
+            if not len(rest):
                 break
-            out |= shell.may_intersect_cells(ids)
+            out[rest] = shell.may_intersect_cells(ids[rest])
         return out
 
 
@@ -597,7 +598,8 @@ def cover_regions(regions: DataFrame, max_cells: int = 8,
     """regions df (fixtures.REGIONS_SCHEMA) -> exploded coverings.
 
     conservative=False: reference-parity coverings (region_coverer.rs
-    semantics, incl. its vertex-sampling may_intersect quirks).
+    semantics, incl. its vertex-sampling may_intersect quirks) of cap,
+    rect, loop and union rows; a polygon row raises ``ValueError``.
     conservative=True: true-geometry adapters — the covering is a sound
     superset of the region in leaf-id space; REQUIRED when the covering
     is used as a join filter.  Built by ``conservative_coverings``, the
@@ -619,6 +621,11 @@ def cover_regions(regions: DataFrame, max_cells: int = 8,
             rows = b.to_dict("records")
             if conservative:
                 covs = conservative_coverings(rows, max_cells, max_level)
+            elif any(row["kind"] == "polygon" for row in rows):
+                raise ValueError(
+                    "parity coverings cover cap/rect/loop/union rows; "
+                    "polygon rows need conservative=True"
+                )
             else:
                 covs = [cover(region_from_row(row)) for row in rows]
             out_region, out_cell = [], []

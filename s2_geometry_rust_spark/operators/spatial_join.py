@@ -542,27 +542,17 @@ def region_containment_join(regions_a: DataFrame, loops_b: DataFrame,
     n_vertices matched.  No pairwise region x region work ever happens;
     the only shuffle keys are covering cells and (a, b) pairs.
     """
-    from ..functions import cell_id_from_latlng_deg
-
-    verts = (
-        loops_b.filter(F.col("kind") == "loop")
-        .select(
-            F.col(b_id_col).alias("b_id"),
-            F.posexplode("vertices").alias("v_idx", "v"),
-        )
-        .select(
-            "b_id", "v_idx",
-            F.col("v.lat").cast("double").alias("lat"),
-            F.col("v.lng").cast("double").alias("lng"),
-        )
-        .withColumn("cell_id", cell_id_from_latlng_deg("lat", "lng"))
+    b = loops_b.filter(F.col("kind") == "loop").select(
+        F.col(b_id_col).alias("region_id"), "kind", "vertices"
     )
-    matched = point_in_region_join(verts, regions_a, max_cells=max_cells)
+    matched = point_in_region_join(
+        _loop_vertices_as_points(b, "b_id"), regions_a, max_cells=max_cells
+    )
     counts = matched.groupBy("region_id", "b_id").agg(
         F.count("*").alias("_n_in")
     )
-    sizes = loops_b.filter(F.col("kind") == "loop").select(
-        F.col(b_id_col).alias("b_id"), F.size("vertices").alias("_n_b")
+    sizes = b.select(
+        F.col("region_id").alias("b_id"), F.size("vertices").alias("_n_b")
     )
     return (
         counts.join(sizes, "b_id")

@@ -1,8 +1,8 @@
 """Span extraction and the span-sequence invariant.
 
-``extract_geo_points`` is pure JVM relational algebra (posexplode +
-regexp + cast) up to the single Arrow UDF that Hilbert-encodes the
-coordinates — Catalyst prunes/pushes everything around it, and the
+``extract_geo_points`` is pure JVM relational algebra (filter +
+explode + rlike + split/cast) up to the single Arrow UDF that
+Hilbert-encodes the coordinates — Catalyst prunes/pushes everything around it, and the
 output carries (doc_id, span_idx) so results can always be re-joined to
 the untouched document row.
 
@@ -38,34 +38,34 @@ def explode_spans(docs: DataFrame) -> DataFrame:
 
 
 def extract_geo_points(docs: DataFrame) -> DataFrame:
-    """Geo spans -> (doc_id, span_idx, lat, lng, cell_id:long leaf).
+    """Geo spans -> (<docs columns but spans>, span_idx, lat, lng,
+    cell_id:long leaf) — the one geo-span parser, batch and streaming.
 
-    String->double parse is correctly rounded (IEEE 754), so the lat/lng
-    written by the generator round-trips exactly; the leaf id then
-    matches kernels.cellid.from_point bit-for-bit.
+    Other input columns pass through in order (a stream's event time
+    and its watermark ride along).  A geo span the POINT pattern
+    rejects (``POINT(abc)``, ``POINT(1 2``, free text) is dropped
+    before any cast: no row, never a garbage cell or an ANSI cast
+    error.  The string->double parse is correctly rounded, so the leaf
+    id matches kernels.cellid.from_point bit-for-bit.
     """
+    keep = [c for c in docs.columns if c != "spans"]
     # Filter the spans ARRAY to geo entries before exploding (index
-    # attached first so span_idx stays the ORIGINAL position): with
-    # ~4.5 spans/doc and one geo span, the generator explodes 4.5x
-    # fewer rows than explode-then-filter — measured ~8% off the whole
-    # extract stage at 4M docs, output bit-identical.
+    # attached first so span_idx stays the ORIGINAL position): 4.5x
+    # fewer exploded rows, ~8% off the extract stage at 4M docs.
     idx = F.transform("spans", lambda s, i: F.struct(i.alias("i"), s.alias("s")))
     geo = F.filter(idx, lambda e: e["s"]["kind"] == "geo")
-    # Validate with ONE regex pass (rlike — same pattern, so the exact
-    # same acceptance set as the old double regexp_extract), then parse
-    # with substring+split: the group charset excludes spaces/parens, so
-    # an accepted string's interior has exactly one space and the two
-    # split halves are byte-identical to the regex groups.  Measured
-    # 1.44x faster over the whole extract+encode stage at 4M docs
-    # (3.45 s -> 2.39 s, local[32]), output hash-identical.
-    s = docs.select("doc_id", F.explode(geo).alias("e")).select(
-        "doc_id",
+    # Validate with ONE rlike pass, then parse with substring+split: the
+    # group charset excludes spaces/parens, so the two split halves are
+    # byte-identical to the regex groups (1.44x faster extract+encode at
+    # 4M docs than a double regexp_extract, output hash-identical).
+    s = docs.select(*keep, F.explode(geo).alias("e")).select(
+        *keep,
         F.col("e.i").alias("span_idx"),
         F.col("e.s.text").alias("_t"),
     ).filter(F.col("_t").rlike(_POINT_RE))
     parts = F.split(F.expr("substring(_t, 7, length(_t)-7)"), " ")
     s = s.select(
-        "doc_id",
+        *keep,
         "span_idx",
         parts.getItem(0).cast("double").alias("lat"),
         parts.getItem(1).cast("double").alias("lng"),

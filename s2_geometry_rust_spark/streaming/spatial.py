@@ -23,15 +23,6 @@ from ..operators.spatial_join import point_in_region_join
 from ..sources import extract_geo_points
 
 
-def streaming_geo_points(doc_stream: DataFrame) -> DataFrame:
-    """Span extraction for a document stream — literally the batch
-    ``sources.extract_geo_points`` (pure relational algebra, so it is
-    stream-safe unchanged): one row per parseable geo span with
-    (doc_id, span_idx, lat, lng, cell_id), malformed POINT text
-    filtered identically to the batch path."""
-    return extract_geo_points(doc_stream)
-
-
 def streaming_point_in_region(doc_stream: DataFrame, regions: DataFrame,
                               max_cells: int = 64) -> DataFrame:
     """Stream x static spatial join.  ``regions`` must be a (small)
@@ -42,7 +33,7 @@ def streaming_point_in_region(doc_stream: DataFrame, regions: DataFrame,
     Returns a streaming DF of (doc_id, span_idx, region_id), exact
     (covering filter + kernel refine), append-mode-safe.
     """
-    pts = streaming_geo_points(doc_stream)
+    pts = extract_geo_points(doc_stream)
     return point_in_region_join(
         pts, regions, max_cells=max_cells, distributed=False
     ).select("doc_id", "span_idx", "region_id")

@@ -23,9 +23,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions import cell_id_from_latlng_deg, cell_parent
-
-_POINT_RE = r"^POINT\(([-+0-9.eE]+) ([-+0-9.eE]+)\)$"
+from ..operators.tiling import with_tile
+from ..sources import extract_geo_points
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -73,18 +72,12 @@ def stateful_tile_counts(doc_stream: DataFrame, level: int = 6,
                          ts_col: str = "event_time") -> DataFrame:
     """doc_stream (doc_id, spans, event_time) -> running per-tile state.
 
-    Same extraction chain as the batch tiler, then a grouped stateful
-    fold; outputMode must be 'update'."""
-    s = doc_stream.select(
-        "doc_id", ts_col, F.posexplode("spans").alias("span_idx", "span")
+    The batch tiler's calls (``extract_geo_points`` -> ``with_tile``),
+    then a grouped stateful fold over (tile_id, ts_sec) only; outputMode
+    must be 'update'."""
+    s = with_tile(extract_geo_points(doc_stream), level).select(
+        "tile_id", F.col(ts_col).cast("double").alias("ts_sec")
     )
-    s = s.filter(F.col("span.kind") == "geo").select(
-        F.col(ts_col).cast("double").alias("ts_sec"),
-        F.regexp_extract("span.text", _POINT_RE, 1).cast("double").alias("lat"),
-        F.regexp_extract("span.text", _POINT_RE, 2).cast("double").alias("lng"),
-    )
-    s = s.withColumn("cell_id", cell_id_from_latlng_deg("lat", "lng"))
-    s = s.withColumn("tile_id", cell_parent("cell_id", level))
     return s.groupBy("tile_id").applyInPandasWithState(
         _fold,
         outputStructType=OUTPUT_SCHEMA,

@@ -1,21 +1,21 @@
 """Streaming tile aggregation: readStream over interleaved documents ->
 geo extraction -> windowed per-tile counts with a watermark.
 
-The reference has no streaming subsystem (SURVEY.md §2.12); this is the
-engine's batch-incremental complement: the same extraction + tile
-operators applied under Structured Streaming, so a 10^12-doc backfill
-and a live feed share one code path.  Late data is bounded by the
-watermark; state is per (window, tile) — cardinality-capped by tile
-level.
+The reference has no streaming subsystem (SURVEY.md §2.12).  Each tiler
+here is literally the batch call chain — ``extract_geo_points`` (the
+watermark set before it, the event-time column passed through) then the
+batch tile column — so a 10^12-doc backfill and a live feed share one
+code path, malformed spans included.  State is per (window, tile) —
+cardinality-capped by tile level.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import cell_id_from_latlng_deg, cell_parent
-
-_POINT_RE = r"^POINT\(([-+0-9.eE]+) ([-+0-9.eE]+)\)$"
+from ..functions import cell_parent
+from ..operators.tiling import with_tile, with_webmerc_tile
+from ..sources import extract_geo_points
 
 
 def streaming_tile_counts(doc_stream: DataFrame, level: int = 8,
@@ -25,20 +25,14 @@ def streaming_tile_counts(doc_stream: DataFrame, level: int = 8,
     """doc_stream: streaming DF with (doc_id, spans, event_time).
     Returns a streaming DF of ((window), tile_id, n_points).
 
-    Same operator chain as the batch path (explode -> regexp -> leaf
-    encode -> parent-at-level) so results match the batch tiler on the
-    same data slice.
+    The batch calls themselves (``extract_geo_points`` ->
+    ``with_tile``), so results match the batch tiler on the same data
+    slice.
     """
-    s = doc_stream.withWatermark(ts_col, watermark)
-    s = s.select("doc_id", ts_col, F.posexplode("spans").alias("span_idx", "span"))
-    s = s.filter(F.col("span.kind") == "geo").select(
-        "doc_id",
-        ts_col,
-        F.regexp_extract("span.text", _POINT_RE, 1).cast("double").alias("lat"),
-        F.regexp_extract("span.text", _POINT_RE, 2).cast("double").alias("lng"),
+    s = with_tile(
+        extract_geo_points(doc_stream.withWatermark(ts_col, watermark)),
+        level,
     )
-    s = s.withColumn("cell_id", cell_id_from_latlng_deg("lat", "lng"))
-    s = s.withColumn("tile_id", cell_parent("cell_id", level))
     return (
         s.groupBy(F.window(ts_col, window), "tile_id")
         .agg(F.count("*").alias("n_points"))
@@ -47,22 +41,13 @@ def streaming_tile_counts(doc_stream: DataFrame, level: int = 8,
 
 def streaming_tile_assign(doc_stream: DataFrame, level: int = 8) -> DataFrame:
     """Stateless streaming tile assignment (one row per geo span):
-    extraction -> leaf encode -> parent-at-level, identical operator
-    chain to the batch tiler but with no aggregation, so it can run in
-    append mode into an exactly-once file/Iceberg sink.  This is the
-    production shape for a live ingest feed: the windowed aggregate
+    (doc_id, span_idx, lat, lng, cell_id, tile_id) from the batch
+    calls ``extract_geo_points`` -> ``with_tile``, with no aggregation,
+    so it can run in append mode into an exactly-once file/Iceberg
+    sink.  This is the production shape for a live ingest feed: the windowed aggregate
     (streaming_tile_counts) reads FROM this sink incrementally."""
-    s = doc_stream.select(
-        "doc_id", F.posexplode("spans").alias("span_idx", "span")
-    )
-    s = s.filter(F.col("span.kind") == "geo").select(
-        "doc_id",
-        "span_idx",
-        F.regexp_extract("span.text", _POINT_RE, 1).cast("double").alias("lat"),
-        F.regexp_extract("span.text", _POINT_RE, 2).cast("double").alias("lng"),
-    )
-    s = s.withColumn("cell_id", cell_id_from_latlng_deg("lat", "lng"))
-    return s.withColumn("tile_id", cell_parent("cell_id", level))
+    points = extract_geo_points(doc_stream.select("doc_id", "spans"))
+    return with_tile(points, level)
 
 
 def streaming_hex_tile_counts(doc_stream: DataFrame, res: int = 3,
@@ -76,17 +61,10 @@ def streaming_hex_tile_counts(doc_stream: DataFrame, res: int = 3,
     feed agree exactly."""
     from ..functions.hexcols import with_hex_from_latlng
 
-    s = doc_stream.withWatermark(ts_col, watermark)
-    s = s.select("doc_id", ts_col,
-                 F.posexplode("spans").alias("span_idx", "span"))
-    s = s.filter(F.col("span.kind") == "geo").select(
-        "doc_id",
-        ts_col,
-        F.regexp_extract("span.text", _POINT_RE, 1).cast("double").alias("lat"),
-        F.regexp_extract("span.text", _POINT_RE, 2).cast("double").alias("lng"),
+    s = with_hex_from_latlng(
+        extract_geo_points(doc_stream.withWatermark(ts_col, watermark)),
+        "lat", "lng", res, keep=[ts_col],
     )
-    s = with_hex_from_latlng(s, "lat", "lng", res,
-                             keep=["doc_id", ts_col])
     return (
         s.groupBy(F.window(ts_col, window), "hex_id")
         .agg(F.count("*").alias("n_points"))
@@ -110,19 +88,7 @@ def streaming_tile_pyramid(doc_stream: DataFrame,
     tile_pyramid's rows per window slice (batch-equivalence is
     exact-matched in tests/test_streaming_plans.py).
     """
-    s = doc_stream.withWatermark(ts_col, watermark)
-    s = s.select(
-        "doc_id", ts_col, F.posexplode("spans").alias("span_idx", "span")
-    )
-    s = s.filter(F.col("span.kind") == "geo").select(
-        "doc_id",
-        ts_col,
-        F.regexp_extract("span.text", _POINT_RE, 1).cast("double")
-        .alias("lat"),
-        F.regexp_extract("span.text", _POINT_RE, 2).cast("double")
-        .alias("lng"),
-    )
-    s = s.withColumn("cell_id", cell_id_from_latlng_deg("lat", "lng"))
+    s = extract_geo_points(doc_stream.withWatermark(ts_col, watermark))
     pairs = F.array(*[
         F.struct(
             F.lit(lv).cast("int").alias("level"),
@@ -147,21 +113,10 @@ def streaming_webmerc_tile_counts(doc_stream: DataFrame, zoom: int = 6,
     """Web-mercator twin of streaming_tile_counts: geo extraction ->
     slippy z/x/y assignment (tiling.with_webmerc_tile, the SAME batch
     column chain) -> watermarked windowed counts per tile."""
-    from ..operators.tiling import with_webmerc_tile
-
-    s = doc_stream.withWatermark(ts_col, watermark)
-    s = s.select(
-        "doc_id", ts_col, F.posexplode("spans").alias("span_idx", "span")
+    s = with_webmerc_tile(
+        extract_geo_points(doc_stream.withWatermark(ts_col, watermark)),
+        zoom,
     )
-    s = s.filter(F.col("span.kind") == "geo").select(
-        "doc_id",
-        ts_col,
-        F.regexp_extract("span.text", _POINT_RE, 1).cast("double")
-        .alias("lat"),
-        F.regexp_extract("span.text", _POINT_RE, 2).cast("double")
-        .alias("lng"),
-    )
-    s = with_webmerc_tile(s, zoom)
     return (
         s.groupBy(F.window(ts_col, window), "zoom", "xtile", "ytile")
         .agg(F.count("*").alias("n_points"))

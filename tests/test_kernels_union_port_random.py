@@ -153,6 +153,9 @@ def test_vectorized_normalize_equals_linear_scan(seed):
     for g, p in zip(got, parts):
         assert g.dtype == np.uint64
         assert np.array_equal(g, ku.normalize_scan(p))
+    # no owners: no unions, not one empty union
+    none = ku.normalize_by_owner(np.empty(0, np.uint64), np.empty(0), 0)
+    assert none == []
 
 
 @pytest.mark.parametrize("seed", [7, 99, 1234])

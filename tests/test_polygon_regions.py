@@ -108,6 +108,34 @@ def test_conservative_polygon_covering_is_sound():
     assert not (inside & ~covered).any()
 
 
+def test_polygon_admit_is_the_or_of_its_shells():
+    """Later shells classify only the cells earlier shells left
+    undecided; the admit mask is still the OR over every shell."""
+    from s2_geometry_rust_spark.kernels import cellid as ck
+    from s2_geometry_rust_spark.operators.coverings import (
+        TruePolygonRegion,
+        multipolygon_from_loops_col,
+    )
+
+    loops_col = [
+        {"poly": p, "vertices": [
+            {"lat": float(a), "lng": float(b)}
+            for a, b in fixtures.LOOPS[name]]}
+        for p, name in enumerate(("candy_cane", "arctic_80", "small_ne_cw"))
+    ]
+    region = TruePolygonRegion(multipolygon_from_loops_col(loops_col))
+    assert len(region._shells) == 3
+    x, y, z = _rand_points(400, seed=5)
+    leaf = ck.from_point(x, y, z)
+    ids = np.concatenate([ck.parent(leaf[:200], 3), ck.parent(leaf[200:], 6)])
+    want = np.zeros(len(ids), dtype=bool)
+    for shell in region._shells:
+        want |= shell.may_intersect_cells(ids)
+    got = region.may_intersect_cells(ids)
+    assert want.any() and not want.all()
+    assert np.array_equal(got, want)
+
+
 @pytest.fixture(scope="module")
 def spark():
     from s2_geometry_rust_spark.session import get_spark
@@ -325,3 +353,16 @@ def test_point_cloud_index_matches_fixture_path(spark):
         for r in point_cloud_index(tbl).collect()
     }
     assert got == fixture
+
+
+def test_parity_covering_rejects_polygon_rows(spark):
+    """The reference-parity coverer has no polygon adapter: a polygon
+    row fails with a message that names the conservative path, not an
+    AttributeError from inside the coverer."""
+    from s2_geometry_rust_spark.operators.coverings import cover_regions
+
+    regions = fixtures.polygon_regions(spark)
+    with pytest.raises(Exception,
+                       match="polygon rows need conservative=True"):
+        cover_regions(regions).collect()
+    assert cover_regions(regions, conservative=True).count() > 0

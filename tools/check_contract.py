@@ -1,6 +1,10 @@
 """Replicates the driver's correctness gate locally: runs every
-queries() entry on Spark at sf0.01 and compares row count, schema and
-order-insensitive values against oracle_sql() in DuckDB."""
+queries() entry on Spark at sf0.01 and compares row count, column
+names, per-column dtype kinds and order-insensitive values against
+oracle_sql() in DuckDB (``compare_frames``).
+
+    python tools/check_contract.py [SF_DIR] [NAME,NAME,...]
+"""
 
 from __future__ import annotations
 
@@ -36,6 +40,35 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
                 )
             df[c] = df[c].astype(str)
     return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+
+def compare_frames(got: pd.DataFrame, want: pd.DataFrame) -> tuple[str, str]:
+    """The gate's one frame comparison: (status, detail), status one of
+    OK, MISMATCH or CANON-ERROR.  OK needs equal row counts, equal
+    column names, equal dtype kinds per column (numpy ``dtype.kind``:
+    an int64 column against a float64 one is a MISMATCH, as it is for
+    the driver's value hash) and bit-equal values after ``norm``."""
+    try:
+        g, w = norm(got), norm(want)
+    except TypeError as ex:
+        return "CANON-ERROR", str(ex)
+    if len(g) != len(w) or list(g.columns) != list(w.columns):
+        return "MISMATCH", (f"rows {len(g)}/{len(w)} "
+                            f"cols {list(g.columns)}/{list(w.columns)}")
+    bad = {c: (g[c].dtype.kind, w[c].dtype.kind) for c in g.columns
+           if g[c].dtype.kind != w[c].dtype.kind}
+    if bad:
+        return "MISMATCH", f"dtype kinds (got, want) {bad}"
+    try:
+        # check_exact: the driver hashes VALUES — a float that differs
+        # in the last ulp is a red row there, so the local gate must be
+        # bit-strict too (a tolerant compare hid exactly such a drift in
+        # two geo queries once)
+        pd.testing.assert_frame_equal(g, w, check_dtype=False,
+                                      check_exact=True)
+    except AssertionError as ex:
+        return "MISMATCH", str(ex)[:500]
+    return "OK", f"{len(g)} rows"
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01", only: str | None = None) -> int:
@@ -77,33 +110,12 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str | None = None) -> int:
             failures += 1
             print(f"{name:28s} ORACLE-ERROR {str(ex)[:200]}")
             continue
-        try:
-            g, w = norm(got), norm(want)
-        except TypeError as ex:
-            failures += 1
-            print(f"{name:28s} CANON-ERROR {ex}")
-            continue
-        ok_rows = len(g) == len(w)
-        ok_cols = list(g.columns) == list(w.columns)
-        ok_vals = False
-        if ok_rows and ok_cols:
-            try:
-                # check_exact: the driver hashes VALUES — a float that
-                # differs in the last ulp is a red row there, so the
-                # local gate must be bit-strict too (a tolerant compare
-                # hid exactly such a drift in two geo queries once)
-                pd.testing.assert_frame_equal(
-                    g, w, check_dtype=False, check_exact=True
-                )
-                ok_vals = True
-            except AssertionError as ex:
-                print(str(ex)[:500])
-        status = "OK" if (ok_rows and ok_cols and ok_vals) else "MISMATCH"
+        status, detail = compare_frames(got, want)
         if status != "OK":
             failures += 1
-            print(f"{name:28s} {status} rows {len(g)}/{len(w)} cols {list(g.columns)}/{list(w.columns)}")
+            print(f"{name:28s} {status} {detail}")
         else:
-            print(f"{name:28s} OK ({len(g)} rows)")
+            print(f"{name:28s} OK ({detail})")
     spark.stop()
     return failures
 
