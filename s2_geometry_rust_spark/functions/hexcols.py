@@ -59,33 +59,6 @@ def uv_from_face(face, x, y, z) -> tuple[Column, Column]:
     return u, v
 
 
-def hex_axial_cols(u, v, res: int) -> tuple[Column, Column]:
-    """(u, v) -> integer axial (q, r) at ``res`` — the Column twin of
-    kernels.hexgrid.uv_to_axial, same literal constants, same op order.
-
-    ``u``/``v`` should be materialized attributes: the cube-round
-    duplicates them ~15x, which is fine for an attribute ref but
-    compounds if they are deep expression trees."""
-    u, v = _c(u), _c(v)
-    c, s = F.lit(hg.COS[res]), F.lit(hg.SIN[res])
-    xp = c * u + s * v
-    yp = c * v - s * u
-    qf = F.lit(hg.C1[res]) * xp - F.lit(hg.C2[res]) * yp
-    rf = F.lit(hg.C3[res]) * yp
-    yf = (-qf) - rf
-    rx = F.floor(qf + 0.5)
-    ry = F.floor(yf + 0.5)
-    rz = F.floor(rf + 0.5)
-    dx = F.abs(rx - qf)
-    dy = F.abs(ry - yf)
-    dz = F.abs(rz - rf)
-    fix_x = (dx > dy) & (dx > dz)
-    fix_y = (~fix_x) & (dy > dz)
-    q = F.when(fix_x, -ry - rz).otherwise(rx)
-    r = F.when(fix_x | fix_y, rz).otherwise(-rx - ry)
-    return q.cast("long"), r.cast("long")
-
-
 def hex_pack(face, res: int, q, r) -> Column:
     """Layout: [62:60]=face [59:56]=res [55:28]=q+2^27 [27:0]=r+2^27."""
     face, q, r = _c(face), _c(q), _c(r)

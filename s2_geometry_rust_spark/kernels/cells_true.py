@@ -121,20 +121,6 @@ def cell_center_xyz(ids) -> np.ndarray:
     return np.stack([np.atleast_1d(x), np.atleast_1d(y), np.atleast_1d(z)], axis=-1)
 
 
-def cell_contains_points(cell_id: int, x, y, z, pad: float = 0.0) -> np.ndarray:
-    """True containment test, consistent with from_point (optionally
-    padded outward in UV for conservative use)."""
-    face, u_lo, u_hi, v_lo, v_hi = cell_uv_bounds(np.asarray([cell_id], np.uint64))
-    pf, pu, pv = ci.xyz_to_face_uv(x, y, z)
-    return (
-        (pf == face[0])
-        & (pu >= u_lo[0] - pad)
-        & (pu <= u_hi[0] + pad)
-        & (pv >= v_lo[0] - pad)
-        & (pv <= v_hi[0] + pad)
-    )
-
-
 def cell_bounding_cap(cell_id: int) -> tuple[np.ndarray, float]:
     """(center_xyz, angular radius) — smallest center-based cap around
     the cell's true quad (max angle to its 4 vertices)."""

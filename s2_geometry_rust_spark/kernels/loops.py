@@ -193,26 +193,10 @@ class S2Loop:
                       np.asarray(y, dtype=np.float64),
                       np.asarray(z, dtype=np.float64)], axis=-1)
         flat = p.reshape(-1, 3)
-        n_pts = len(flat)
         v = self.vertices
-        vn = np.roll(v, -1, axis=0)
-        n_edges = len(v)
-
-        # (n_pts, n_edges) triage determinant: (p x v_i) . v_{i+1}
-        px, py, pz = flat[:, 0:1], flat[:, 1:2], flat[:, 2:3]
-        vx, vy, vz = v[:, 0][None, :], v[:, 1][None, :], v[:, 2][None, :]
-        wx, wy, wz = vn[:, 0][None, :], vn[:, 1][None, :], vn[:, 2][None, :]
-        cx = py * vz - pz * vy
-        cy = pz * vx - px * vz
-        cz = px * vy - py * vx
-        det = cx * wx + cy * wy + cz * wz
-        signs = np.where(det > pred.TRIAGE_ERROR_THRESHOLD, 1,
-                         np.where(det < -pred.TRIAGE_ERROR_THRESHOLD, -1, 0)).astype(np.int64)
-        unresolved = np.argwhere(signs == 0)
-        pred.TRIAGE_TOTAL_COUNT += int(signs.size)
-        pred.EXACT_FALLBACK_COUNT += int(len(unresolved))
-        for pi, ei in unresolved:
-            signs[pi, ei] = pred.exact_sign_scalar(flat[pi], v[ei], vn[ei])
+        # (n_pts, n_edges) robust signs of (p, v_i, v_{i+1})
+        signs = pred.sign_batch(flat[:, None, :], v[None, :, :],
+                                np.roll(v, -1, axis=0)[None, :, :])
         inside = signs.sum(axis=1) > 0
         return inside.reshape(np.shape(x))
 

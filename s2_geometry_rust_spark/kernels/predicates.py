@@ -81,7 +81,9 @@ def exact_sign_scalar(a, b, c) -> int:
 
 
 def sign_batch(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """Vectorized robust sign over (n,3) arrays (predicates.rs:99-108)."""
+    """Vectorized robust sign over (..., 3) arrays that broadcast
+    against each other (predicates.rs:99-108); the result has the
+    broadcast shape."""
     global EXACT_FALLBACK_COUNT, TRIAGE_TOTAL_COUNT
     a = np.asarray(a, dtype=np.float64)
     b = np.asarray(b, dtype=np.float64)
@@ -92,16 +94,18 @@ def sign_batch(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
     out = np.where(det > TRIAGE_ERROR_THRESHOLD, 1,
                    np.where(det < -TRIAGE_ERROR_THRESHOLD, -1, 0)).astype(np.int32)
     TRIAGE_TOTAL_COUNT += out.size
-    unresolved = np.flatnonzero(out.ravel() == 0)
+    unresolved = np.flatnonzero(out == 0)
     if unresolved.size:
         EXACT_FALLBACK_COUNT += int(unresolved.size)
-        fa = a.reshape(-1, 3)
-        fb = b.reshape(-1, 3)
-        fc = c.reshape(-1, 3)
-        flat = out.ravel()
-        for i in unresolved:
-            flat[i] = exact_sign_scalar(fa[i], fb[i], fc[i])
-        out = flat.reshape(out.shape)
+        # gather by index in the broadcast shape: an input of shape
+        # (n, 1, 3) against (1, m, 3) has no row per output entry
+        shape = out.shape or (1,)
+        idx = np.unravel_index(unresolved, shape)
+        fa, fb, fc = (np.broadcast_to(v, shape + (3,))[idx]
+                      for v in (a, b, c))
+        flat = out.reshape(-1)
+        for k, i in enumerate(unresolved):
+            flat[i] = exact_sign_scalar(fa[k], fb[k], fc[k])
     return out
 
 

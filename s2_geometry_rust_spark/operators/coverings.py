@@ -80,7 +80,7 @@ def region_from_row(row) -> object:
         ids = np.asarray(row["cell_ids"], dtype=np.int64).view(np.uint64)
         return CellUnionRegion(ids)
     if kind == "polygon":
-        return PolygonRegion(multipolygon_from_loops_col(row["loops"]))
+        return TruePolygonRegion(multipolygon_from_loops_col(row["loops"]))
     raise ValueError(f"unknown region kind: {kind}")
 
 
@@ -102,26 +102,13 @@ def multipolygon_from_loops_col(loops_col) -> S2MultiPolygon:
     return S2MultiPolygon([S2Polygon(by_poly[p]) for p in order])
 
 
-class PolygonRegion:
-    """Adapter over S2MultiPolygonShape semantics
-    (polygon_shape.rs:236-258, 389-393)."""
-
-    def __init__(self, multi: S2MultiPolygon):
-        self.multi = multi
-
-    def contains_points_batch(self, x, y, z) -> np.ndarray:
-        return self.multi.contains_points_batch(x, y, z)
-
-    def contains(self, x, y, z) -> bool:
-        return self.multi.contains_point(x, y, z)
-
-
 class TruePolygonRegion:
-    """Conservative polygon adapter for join filters: a covering of the
-    SHELLS is a sound superset of the polygon (holes only remove
-    points), so may_intersect is the union of the shells'
-    TrueLoopRegion tests; the exact refine stays the full
-    shell-minus-holes PIP."""
+    """The polygon adapter (S2MultiPolygonShape semantics,
+    polygon_shape.rs:236-258, 389-393) for the exact refine and for
+    conservative join filters: a covering of the SHELLS is a sound
+    superset of the polygon (holes only remove points), so
+    may_intersect is the union of the shells' TrueLoopRegion tests;
+    containment stays the full shell-minus-holes PIP."""
 
     def __init__(self, multi: S2MultiPolygon):
         self.multi = multi
@@ -558,9 +545,9 @@ def conservative_region_from_row(row) -> object:
         return TrueCapRegion(base.cap)
     if kind == "rect":
         return TrueRectRegion(base.rect)
-    if kind == "polygon":
-        return TruePolygonRegion(base.multi)
-    return base  # union: id-space containment is exact already
+    # polygon: region_from_row's adapter is the conservative one;
+    # union: id-space containment is exact already
+    return base
 
 
 def conservative_coverings(rows, max_cells: int,

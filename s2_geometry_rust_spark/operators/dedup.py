@@ -558,6 +558,31 @@ def _label_with_sizes(ids: DataFrame, cc: DataFrame) -> DataFrame:
     )
 
 
+def simhash_batch(texts: pd.Series) -> np.ndarray:
+    """64-bit SimHash (int64 view) of each text in one Arrow batch: the
+    sign-sum of the word FNV hashes' bits — the one kernel behind
+    ``simhash_signatures`` and the streaming dedup."""
+    bitcols = np.arange(64, dtype=np.uint64)
+    hashed = _hash_words_batch([s.split() for s in texts.astype(str)])
+    lens = np.fromiter((len(h) for h in hashed), np.int64, count=len(hashed))
+    out = np.zeros(len(texts), dtype=np.uint64)
+    nonempty = np.nonzero(lens > 0)[0]
+    if len(nonempty):
+        flat = np.concatenate([hashed[i] for i in nonempty])
+        # (total_words, 64) bit matrix, summed per doc in one
+        # reduceat — no per-doc Python
+        bits = (flat[:, None] >> bitcols[None, :]) & np.uint64(1)
+        offs = np.concatenate(([0], np.cumsum(lens[nonempty])[:-1]))
+        sums = np.add.reduceat(bits.astype(np.int64), offs, axis=0)
+        # signed: a uint64 vote count would wrap negative
+        # margins to huge positives and set every bit
+        votes = sums * 2 - lens[nonempty][:, None]
+        out[nonempty] = (
+            (votes > 0).astype(np.uint64) << bitcols[None, :]
+        ).sum(axis=1)
+    return out.view(np.int64)
+
+
 def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
     """64-bit SimHash over word FNV hashes (sign-sum of bits)."""
@@ -569,33 +594,9 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bitcols = np.arange(64, dtype=np.uint64)
         for b in batches:
-            docs_words = [s.split() for s in b[text_col].astype(str)]
-            hashed = _hash_words_batch(docs_words)
-            lens = np.fromiter(
-                (len(h) for h in hashed), np.int64, count=len(hashed)
-            )
-            out = np.zeros(len(b), dtype=np.uint64)
-            nonempty = np.nonzero(lens > 0)[0]
-            if len(nonempty):
-                flat = np.concatenate([hashed[i] for i in nonempty])
-                # (total_words, 64) bit matrix, summed per doc in one
-                # reduceat — no per-doc Python
-                bits = (flat[:, None] >> bitcols[None, :]) & np.uint64(1)
-                offs = np.concatenate(
-                    ([0], np.cumsum(lens[nonempty])[:-1])
-                )
-                sums = np.add.reduceat(bits.astype(np.int64), offs, axis=0)
-                # signed: a uint64 vote count would wrap negative
-                # margins to huge positives and set every bit
-                votes = sums * 2 - lens[nonempty][:, None]
-                out[nonempty] = (
-                    ((votes > 0).astype(np.uint64) << bitcols[None, :])
-                ).sum(axis=1)
-            yield pd.DataFrame(
-                {"doc_id": b[id_col].to_numpy(np.int64), "simhash": out.view(np.int64)}
-            )
+            yield pd.DataFrame({"doc_id": b[id_col].to_numpy(np.int64),
+                                "simhash": simhash_batch(b[text_col])})
 
     return docs.select(id_col, text_col).mapInPandas(gen, schema)
 

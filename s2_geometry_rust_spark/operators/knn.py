@@ -280,12 +280,13 @@ def knn_cell_ring(queries: DataFrame, candidates: DataFrame, k: int,
     # chosen is consumed twice (distinct-level probe + final join) —
     # materialize once via localCheckpoint so the density pass and
     # level-choice join run once, not twice (measured: the probe
-    # re-executed the whole upstream chain).  localCheckpoint rather
-    # than persist(): its blocks are released by the ContextCleaner
-    # when the frame goes out of scope, so repeated calls in a
-    # long-lived session don't accumulate cacheManager entries that
-    # only an explicit unpersist would free.
-    chosen = chosen.localCheckpoint(eager=True)
+    # re-executed the whole upstream chain).  Lazy: the probe's own
+    # collect is the job that computes and stores it.  localCheckpoint
+    # rather than persist(): its blocks are released by the
+    # ContextCleaner when the frame goes out of scope, so repeated
+    # calls in a long-lived session don't accumulate cacheManager
+    # entries that only an explicit unpersist would free.
+    chosen = chosen.localCheckpoint(eager=False)
     distinct_lv = [r["lv"] for r in chosen.select("lv").distinct().collect()]
     c_exp = c.select(
         "*",

@@ -53,7 +53,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BooleanType,
-    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -64,16 +63,6 @@ from ..functions import cell_parent
 from ..kernels import latlng as lk
 from ..kernels import polylines as pk
 from ..kernels import predicates as pred
-
-_CAP_SCHEMA = StructType(
-    [
-        StructField("line_id", StringType()),
-        StructField("cx", DoubleType()),
-        StructField("cy", DoubleType()),
-        StructField("cz", DoubleType()),
-        StructField("cos_r", DoubleType()),
-    ]
-)
 
 _COV_SCHEMA = StructType(
     [
@@ -92,29 +81,6 @@ def _verts_xyz(row_vertices) -> np.ndarray:
     )
     x, y, z = lk.latlng_to_xyz(lat, lng)
     return np.stack([x, y, z], axis=-1)
-
-
-def with_bounding_caps(polylines: DataFrame) -> DataFrame:
-    """(line_id, cx, cy, cz, cos_r): centroid direction + cos of the max
-    vertex angle (cos kept so a candidate filter needs no acos)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k.name: [] for k in _CAP_SCHEMA.fields}
-            for _, row in b.iterrows():
-                v = _verts_xyz(row["vertices"])
-                c = v.mean(axis=0)
-                n = np.linalg.norm(c)
-                c = c / n if n > 0 else np.array([1.0, 0.0, 0.0])
-                cos_r = float(np.clip(v @ c, -1.0, 1.0).min())
-                out["line_id"].append(row["line_id"])
-                out["cx"].append(float(c[0]))
-                out["cy"].append(float(c[1]))
-                out["cz"].append(float(c[2]))
-                out["cos_r"].append(cos_r)
-            yield pd.DataFrame(out)
-
-    return polylines.select("line_id", "vertices").mapInPandas(run, _CAP_SCHEMA)
 
 
 def polyline_coverings(polylines: DataFrame, max_cells: int = 64,

@@ -42,11 +42,6 @@ from .coverings import conservative_coverings, cover_regions, region_from_row
 # every other kind (union) is kept — the covering decides
 _PER_REGION = ["loop", "polygon", "rect"]
 
-# Conservative coverings are deterministic per (region, max_cells);
-# repeated joins against the same region set (interactive use, the
-# bench loop, incremental batches) skip recomputation entirely.
-_COVERING_CACHE: dict = {}
-
 # One (total, exact) accumulator pair per SparkContext, keyed by the
 # context's applicationId: registering a fresh pair per join call leaks
 # accumulators, and pairs from a stopped context must never be read
@@ -64,19 +59,6 @@ def _session_accumulators(spark):
             app_id, sc.accumulator(0), sc.accumulator(0), sc
         )
     return FALLBACK_ACCUMULATORS["entry"][1:3]
-
-
-def _region_cache_key(row: dict) -> tuple:
-    def _freeze(v):
-        if isinstance(v, list):
-            return tuple(_freeze(x) for x in v)
-        if isinstance(v, dict):
-            return tuple(sorted((k, _freeze(x)) for k, x in v.items()))
-        if hasattr(v, "asDict"):
-            return tuple(sorted((k, _freeze(x)) for k, x in v.asDict().items()))
-        return v
-
-    return tuple(sorted((k, _freeze(v)) for k, v in row.items()))
 
 
 def _refine_keep(lat_deg, lng_deg, rid, kind, p0, p1, p2,
@@ -231,6 +213,16 @@ def _literal_candidates(points: DataFrame,
 DISTRIBUTED_REGION_THRESHOLD = 5000
 
 
+def _no_matches(points: DataFrame) -> DataFrame:
+    # filter(False), not limit(0): limit is unsupported on streaming
+    # DataFrames, and both paths serve the streaming wrapper
+    # (streaming/spatial.py) when the static region table is empty or
+    # uncoverable.
+    return points.filter(F.lit(False)).withColumn(
+        "region_id", F.lit(None).cast("string")
+    )
+
+
 def point_in_region_join(points: DataFrame, regions: DataFrame,
                          cell_col: str = "cell_id", max_cells: int = 8,
                          refine: bool = True,
@@ -241,29 +233,35 @@ def point_in_region_join(points: DataFrame, regions: DataFrame,
     whose covering contains the point, refined to exact containment when
     ``refine=True`` (filter-and-refine, SURVEY.md §2.5).
 
-    Physical strategy by region count:
-    - small region sets (the common case by contract): coverings are
-      built driver-side by ``conservative_coverings`` (the builder
-      ``cover_regions(conservative=True)`` also uses), memoized by row
-      content, and compiled to literal-InSet codegen filters (or one
-      broadcast equi-join past ~1k cells) — fastest, no extra jobs;
-    - large region sets (``distributed=True``, or auto past
-      DISTRIBUTED_REGION_THRESHOLD when ``distributed=None``, which
-      costs one count() probe job on the regions side): everything
-      stays in DataFrames — coverings via the distributed
-      ``cover_regions`` operator, materialized once per call, candidates
-      via the ancestor-explode equi-join, and the refine reads region
-      geometry joined inline, so NO driver-side collect of regions ever
-      happens.  Jobs: probe, covering plus levels, then the caller's
-      action (see ``point_in_region_join_distributed``).
+    Physical strategy by region count, chosen by ONE bounded read: with
+    ``distributed=None`` the call collects at most
+    DISTRIBUTED_REGION_THRESHOLD + 1 region rows, and more rows than the
+    threshold pick the distributed path (``distributed=False`` collects
+    every row; ``True`` reads nothing here).
+    - small region sets (the common case by contract): the rows read
+      are covered driver-side by ``conservative_coverings`` (the
+      builder ``cover_regions(conservative=True)`` also uses), once per
+      call, and compiled to literal-InSet codegen filters (or one
+      broadcast equi-join past ~1k cells);
+    - large region sets: everything stays in DataFrames — coverings via
+      the distributed ``cover_regions`` operator, candidates via the
+      ancestor-explode equi-join, and the refine reads region geometry
+      joined inline, so NO driver-side collect of regions beyond the
+      bounded read ever happens (``point_in_region_join_distributed``).
+
+    Jobs launched inside the call on a one-partition regions frame: 1
+    for ``None`` under the threshold and for ``False``, 2 for ``True``,
+    3 for ``None`` past the threshold.  A limited collect over more
+    partitions may scan them in more rounds, one job each.
 
     Both paths refine through the one dispatch ``_refine_keep``.
     """
     spark = points.sparkSession
     if distributed is None:
-        distributed = regions.limit(
-            DISTRIBUTED_REGION_THRESHOLD + 1
-        ).count() > DISTRIBUTED_REGION_THRESHOLD
+        rows = regions.limit(DISTRIBUTED_REGION_THRESHOLD + 1).collect()
+        distributed = len(rows) > DISTRIBUTED_REGION_THRESHOLD
+    elif not distributed:
+        rows = regions.collect()
     if distributed:
         # Covering budget floor: at high region cardinality a tight
         # budget is the scale killer, not a saving — the level-
@@ -278,41 +276,21 @@ def point_in_region_join(points: DataFrame, regions: DataFrame,
             max_cells=max(max_cells, 64), refine=refine,
         )
 
-    # The regions side is the small side by contract; collect once and
-    # build the conservative coverings driver-side — this avoids two
-    # tiny mapInPandas stages (worker spin-up dominates them) and gives
-    # the distinct covering levels for free.
+    # The regions side is the small side by contract: build the
+    # conservative coverings driver-side from the rows already read —
+    # this avoids two tiny mapInPandas stages (worker spin-up dominates
+    # them) and gives the distinct covering levels for free.
     from ..kernels import cellid as ck
 
-    def _by_level_of(ids_u: np.ndarray) -> dict[int, list[int]]:
-        lvls = ck.level(ids_u)
-        by_level: dict[int, list[int]] = {}
-        for cid, lv in zip(ids_u.view(np.int64), lvls):
-            by_level.setdefault(int(lv), []).append(int(cid))
-        return by_level
-
-    region_rows = {r["region_id"]: r.asDict() for r in regions.collect()}
-    keys = {rid: (_region_cache_key(row), max_cells)
-            for rid, row in region_rows.items()}
-    covs = {rid: _COVERING_CACHE.get(key) for rid, key in keys.items()}
-    missing = [rid for rid, by_level in covs.items() if by_level is None]
-    built = conservative_coverings(
-        [region_rows[rid] for rid in missing], max_cells
-    )
-    for rid, ids_u in zip(missing, built):
-        covs[rid] = _by_level_of(ids_u)
-        if len(_COVERING_CACHE) > 4096:
-            _COVERING_CACHE.clear()
-        _COVERING_CACHE[keys[rid]] = covs[rid]
-    region_covs = {rid: by_level for rid, by_level in covs.items() if by_level}
+    region_rows = {r["region_id"]: r.asDict() for r in rows}
+    region_covs: dict[str, dict[int, list[int]]] = {}
+    for rid, ids_u in zip(region_rows, conservative_coverings(
+            list(region_rows.values()), max_cells)):
+        for cid, lv in zip(ids_u.view(np.int64), ck.level(ids_u)):
+            region_covs.setdefault(rid, {}).setdefault(
+                int(lv), []).append(int(cid))
     if not region_covs:
-        # filter(False), not limit(0): limit is unsupported on streaming
-        # DataFrames, and this path must also serve the streaming
-        # wrapper (streaming/spatial.py) when the static region table
-        # is empty or uncoverable.
-        return points.filter(F.lit(False)).withColumn(
-            "region_id", F.lit(None).cast("string")
-        )
+        return _no_matches(points)
 
     # Literal InSet compilation wins while the expression stays inside
     # whole-stage codegen; past ~1k covering cells the generated method
@@ -389,9 +367,9 @@ def point_in_region_join_distributed(points: DataFrame, regions: DataFrame,
 
     1. coverings via the distributed ``cover_regions`` operator
        (conservative=True — sound join filters), embarrassingly
-       parallel on the regions side, materialized ONCE per call with
-       ``localCheckpoint(eager=True)``: the distinct-levels read and
-       the candidate join both scan that frame, so the covering never
+       parallel on the regions side, computed ONCE per call: the
+       distinct-levels read materializes a lazy ``localCheckpoint``
+       that the candidate join then scans, so the covering never
        re-runs inside the candidate job;
     2. candidates via the ancestor-explode equi-join (the only data
        that reaches the driver is the <= 31 distinct covering levels);
@@ -399,9 +377,10 @@ def point_in_region_join_distributed(points: DataFrame, regions: DataFrame,
        broadcast vs shuffle by size) and evaluates the exact kernels
        per (batch x region) group inside one Arrow boolean filter.
 
-    Jobs per call: the covering (checkpoint) plus the distinct levels,
-    then the caller's action.  Coverings are not cached across calls:
-    a rewritten regions path must never meet a stale covering.
+    Jobs launched inside the call: 2, the levels read's shuffle-map
+    job (which also computes and stores the covering) and its result
+    job; then the caller's action.  Coverings are not cached across
+    calls: a rewritten regions path must never meet a stale covering.
 
     ``n_salts > 0`` engages explicit deterministic salting of hot
     covering cells in step 2 (see ``_ancestor_candidates``) — for the
@@ -409,22 +388,21 @@ def point_in_region_join_distributed(points: DataFrame, regions: DataFrame,
     clusters.  Defaults off; output is identical either way.
     """
     spark = points.sparkSession
+    # A lazy localCheckpoint: the distinct-levels collect is the job
+    # that computes the covering and stores its blocks, and the
+    # candidate join reads those blocks instead of re-running it.
     # localCheckpoint rather than persist(): the ContextCleaner frees
     # the blocks once the frame goes out of scope, so repeated calls in
     # a long-lived session leave no cacheManager entry to unpersist
     # (the operators/knn.py idiom).
     covs = cover_regions(
         regions, max_cells=max_cells, conservative=True
-    ).select("region_id", "cell_id", "level").localCheckpoint(eager=True)
+    ).select("region_id", "cell_id", "level").localCheckpoint(eager=False)
     levels = sorted(
         r["level"] for r in covs.select("level").distinct().collect()
     )
     if not levels:
-        # filter(False), not limit(0): a streaming DataFrame does not
-        # take limit in every output mode (same rule as the literal path)
-        return points.filter(F.lit(False)).withColumn(
-            "region_id", F.lit(None).cast("string")
-        )
+        return _no_matches(points)
     cand = _ancestor_candidates(
         points, covs.select("region_id", "cell_id"), levels, cell_col,
         broadcast=False, n_salts=n_salts, hot_cells=hot_cells,
@@ -549,7 +527,7 @@ def region_containment_join(regions_a: DataFrame, loops_b: DataFrame,
         _loop_vertices_as_points(b, "b_id"), regions_a, max_cells=max_cells
     )
     counts = matched.groupBy("region_id", "b_id").agg(
-        F.count("*").alias("_n_in")
+        F.expr("count(*)").alias("_n_in")
     )
     sizes = b.select(
         F.col("region_id").alias("b_id"), F.size("vertices").alias("_n_b")

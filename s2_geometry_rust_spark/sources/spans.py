@@ -19,7 +19,12 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import cell_id_from_latlng_deg
 
-_POINT_RE = r"^POINT\(([-+0-9.eE]+) ([-+0-9.eE]+)\)$"
+# one decimal number per group (sign, digits with an optional point,
+# optional exponent): a charset run like ``e`` or ``1-2`` would pass
+# rlike and then fail the ANSI cast.  Inner groups are non-capturing,
+# so groups 1 and 2 stay (lat, lng) for regexp_extract readers.
+_NUM = r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?"
+_POINT_RE = rf"^POINT\(({_NUM}) ({_NUM})\)$"
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:

@@ -43,44 +43,23 @@ def streaming_simhash_dedup(doc_stream: DataFrame,
                             text_col: str = "text") -> DataFrame:
     """Near-dup variant: dedup on the 64-bit SimHash of the document
     (identical simhash ⇒ near-identical token multiset).  The simhash
-    is computed by the same Arrow-batched kernel as the batch operator
-    (operators/dedup.simhash_signatures semantics) but expressed via
-    mapInPandas on the stream — per-batch, stateless — followed by the
+    is the batch operator's own kernel (operators/dedup.simhash_batch),
+    applied per Arrow batch on the stream — stateless — followed by the
     same watermark-bounded key dedup."""
-    from ..operators.dedup import _hash_words_batch
-
-    import numpy as np
-    import pandas as pd
     from collections.abc import Iterator
 
+    import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
+
+    from ..operators.dedup import simhash_batch
 
     out_schema = StructType(
         list(doc_stream.schema.fields) + [StructField("simhash", LongType())]
     )
 
     def add_simhash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bitcols = np.arange(64, dtype=np.uint64)
         for b in batches:
-            docs_words = [s.split() for s in b[text_col].astype(str)]
-            hashed = _hash_words_batch(docs_words)
-            lens = np.fromiter(
-                (len(h) for h in hashed), np.int64, count=len(hashed)
-            )
-            out = np.zeros(len(b), dtype=np.uint64)
-            nonempty = np.nonzero(lens > 0)[0]
-            if len(nonempty):
-                flat = np.concatenate([hashed[i] for i in nonempty])
-                bits = (flat[:, None] >> bitcols[None, :]) & np.uint64(1)
-                offs = np.concatenate(([0], np.cumsum(lens[nonempty])[:-1]))
-                sums = np.add.reduceat(bits.astype(np.int64), offs, axis=0)
-                votes = sums * 2 - lens[nonempty][:, None]
-                out[nonempty] = (
-                    (votes > 0).astype(np.uint64) << bitcols[None, :]
-                ).sum(axis=1)
-            b = b.copy()
-            b["simhash"] = out.view(np.int64)
-            yield b
+            yield b.assign(simhash=simhash_batch(b[text_col]))
 
     s = doc_stream.mapInPandas(add_simhash, out_schema)
     s = s.withWatermark(ts_col, watermark)

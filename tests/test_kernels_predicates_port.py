@@ -80,3 +80,56 @@ def test_anti_symmetry_random():
     for i in range(0, 60, 3):
         a, b, c = v[i], v[i + 1], v[i + 2]
         assert pred.sign_scalar(a, b, c) == -pred.sign_scalar(a, c, b)
+
+
+def _loop_pip_cases():
+    """(loop, points): every fixture loop with its vertices, its edge
+    midpoints (both on an edge's great circle, so they take the exact
+    tier) and seeded random points."""
+    from s2_geometry_rust_spark.fixtures import LOOPS
+    from s2_geometry_rust_spark.kernels.loops import S2Loop
+
+    rng = np.random.default_rng(11)
+    for name, latlngs in LOOPS.items():
+        loop = S2Loop.from_degrees(latlngs)
+        v = loop.vertices
+        mid = v + np.roll(v, -1, axis=0)
+        mid = mid / np.linalg.norm(mid, axis=1, keepdims=True)
+        rnd = rng.normal(size=(40, 3))
+        rnd /= np.linalg.norm(rnd, axis=1, keepdims=True)
+        yield loop, np.concatenate([v, mid, rnd])
+
+
+def test_loop_pip_is_the_robust_sign_sum_per_point_and_edge():
+    """Loop PIP runs on ``sign_batch``: its mask is the per-(point,
+    edge) sign sum, each sign from ``exact_sign_scalar``, and the
+    triage/exact counters grow by the pair count and the exact-tier
+    count."""
+    n_exact_total = 0
+    for loop, p in _loop_pip_cases():
+        v = loop.vertices
+        vn = np.roll(v, -1, axis=0)
+        want = np.array([
+            sum(pred.exact_sign_scalar(q, v[e], vn[e]) for e in range(len(v)))
+            > 0 for q in p])
+        n_exact = sum(
+            abs(pred.triage_det(*q, *v[e], *vn[e]))
+            <= pred.TRIAGE_ERROR_THRESHOLD
+            for q in p for e in range(len(v)))
+        t0, e0 = pred.TRIAGE_TOTAL_COUNT, pred.EXACT_FALLBACK_COUNT
+        got = loop.contains_points_batch(p[:, 0], p[:, 1], p[:, 2])
+        assert np.array_equal(got, want)
+        assert pred.TRIAGE_TOTAL_COUNT - t0 == len(p) * len(v)
+        assert pred.EXACT_FALLBACK_COUNT - e0 == n_exact
+        n_exact_total += n_exact
+    assert n_exact_total > 0
+
+
+def test_sign_batch_broadcast_equals_materialized_inputs():
+    for loop, p in _loop_pip_cases():
+        v = loop.vertices
+        a, b, c = p[:, None, :], v[None, :, :], np.roll(v, -1, axis=0)[None]
+        shape = (len(p), len(v), 3)
+        want = pred.sign_batch(*(np.broadcast_to(x, shape).copy()
+                                 for x in (a, b, c)))
+        assert np.array_equal(pred.sign_batch(a, b, c), want)

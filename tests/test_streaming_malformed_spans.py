@@ -7,11 +7,16 @@ becoming a garbage cell id with ANSI off."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from s2_geometry_rust_spark.sources import DOCUMENTS_SCHEMA, synth_documents
+from s2_geometry_rust_spark.sources import (
+    DOCUMENTS_SCHEMA,
+    extract_geo_points,
+    synth_documents,
+)
 from s2_geometry_rust_spark.streaming import (
     stateful_tile_counts,
     streaming_hex_tile_counts,
@@ -21,7 +26,9 @@ from s2_geometry_rust_spark.streaming import (
 )
 from s2_geometry_rust_spark.streaming.tiles import streaming_tile_assign
 
-BAD_TEXTS = ["POINT(abc)", "not a point", "POINT(1 2"]
+# the last three pass a bare [-+0-9.eE] charset but are no numbers
+BAD_TEXTS = ["POINT(abc)", "not a point", "POINT(1 2",
+             "POINT(e e)", "POINT(1e 2)", "POINT(1-2 3)"]
 
 # name -> (operator, output mode); the aggregates run in complete mode
 # so no open window is held back by the watermark
@@ -94,3 +101,20 @@ def test_malformed_spans_are_dropped(spark, sources, tmp_path, name, capsys):
         q.explain()
         plan = capsys.readouterr().out
         assert "Aggregate" in plan and "ArrowEvalPython" not in plan
+
+
+def test_batch_parser_keeps_numbers_and_drops_non_numbers(spark):
+    """The batch parser keeps Python-repr number forms with the doubles
+    ``float`` reads from them, and drops every malformed span."""
+    good = ["POINT(1e-05 -0.0)", "POINT(1.5e+20 .5)", "POINT(-12. +3E1)"]
+    docs = spark.createDataFrame(
+        [("d", [("geo", t, None, 0) for t in good + BAD_TEXTS])],
+        DOCUMENTS_SCHEMA,
+    )
+    got = (extract_geo_points(docs).select("span_idx", "lat", "lng")
+           .orderBy("span_idx").toPandas())
+    assert got["span_idx"].tolist() == list(range(len(good)))
+    want = np.array([[float(x) for x in t[6:-1].split(" ")] for t in good])
+    got_ll = got[["lat", "lng"]].to_numpy()
+    assert np.array_equal(got_ll, want)
+    assert np.array_equal(np.signbit(got_ll), np.signbit(want))
