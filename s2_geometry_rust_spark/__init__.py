@@ -20,15 +20,22 @@ Layers
 
 Python UDF workers
 ------------------
-Every engine UDF imports this package when a Spark Python worker
-unpickles it.  Spark's worker calls ``importlib.invalidate_caches()`` at
-the start of every task, and on CPython 3.10-3.12 every ``zipimporter``
-then re-reads its archive's whole directory (``pyspark.zip``: ~1,300
-entries, once per imported pyspark subpackage), over 100 ms of CPU per
-task.  On those versions the package makes that re-read stat-keyed
+Spark's worker calls ``importlib.invalidate_caches()`` at the start of
+every task, and on CPython 3.10-3.12 every ``zipimporter`` then re-reads
+its archive's whole directory (``pyspark.zip``: ~1,300 entries, once per
+imported pyspark subpackage), over 100 ms of CPU per task.  On those
+versions importing the package makes that re-read stat-keyed
 (``_stat_keyed_zip_invalidation``); a rewritten archive, such as a new
 ``--py-files`` zip, is still re-read.  CPython >= 3.13 re-reads lazily
 by itself and is left untouched.
+
+A ``session.get_spark`` session starts its workers from the daemon
+module ``_daemon``, which imports this package before it forks any
+worker, so every task has the rule, also one that never imports the
+package.  Elsewhere (a cluster's ``spark-submit --py-files``) a worker
+installs it when a task first imports the package, as every engine UDF
+does when it is unpickled.  This module imports only ``sys`` at the top
+level, so the daemon loads nothing else before it forks.
 """
 
 import sys

@@ -169,9 +169,14 @@ def knn_cell_ring(queries: DataFrame, candidates: DataFrame, k: int,
     the query's cell at level L, widening L <- L-1 until >= k
     candidates, then exact squared-chord distance + top-k.
 
-    Physical plan — 3 jobs total, independent of how many levels the
+    Physical plan — 3 passes, independent of how many levels the
     widening logically visits (the naive per-level driver loop runs
-    2 jobs *per level*):
+    2 jobs *per level*).  AQE runs each shuffle and broadcast stage as
+    a Spark job of its own, and building the frame already runs passes
+    1-2 (the distinct-levels read of pass 3 materializes ``chosen``):
+    on cached 200-query x 3,000-candidate frames (k=5, local[4]) the
+    build launches 6 jobs and a ``count()`` of the result 4 more; with
+    ``exact=True``, 22 and 6.
 
     1. density pass: one groupBy over candidates counting per-cell
        candidates at every level in [0, start_level] simultaneously

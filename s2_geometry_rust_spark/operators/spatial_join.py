@@ -249,19 +249,23 @@ def point_in_region_join(points: DataFrame, regions: DataFrame,
       joined inline, so NO driver-side collect of regions beyond the
       bounded read ever happens (``point_in_region_join_distributed``).
 
-    Jobs launched inside the call on a one-partition regions frame: 1
-    for ``None`` under the threshold and for ``False``, 2 for ``True``,
-    3 for ``None`` past the threshold.  A limited collect over more
-    partitions may scan them in more rounds, one job each.
+    The read is one task over every regions partition (``coalesce(1)``),
+    so jobs launched inside the call do not depend on how many files or
+    partitions the regions frame has: 1 for ``None`` under the
+    threshold and for ``False``, 2 for ``True``, 3 for ``None`` past the
+    threshold.
 
     Both paths refine through the one dispatch ``_refine_keep``.
     """
     spark = points.sparkSession
+    # coalesce(1): one task reads every partition, so the limited collect
+    # is one job (it would otherwise scan one partition, then more rounds)
     if distributed is None:
-        rows = regions.limit(DISTRIBUTED_REGION_THRESHOLD + 1).collect()
+        rows = (regions.coalesce(1)
+                .limit(DISTRIBUTED_REGION_THRESHOLD + 1).collect())
         distributed = len(rows) > DISTRIBUTED_REGION_THRESHOLD
     elif not distributed:
-        rows = regions.collect()
+        rows = regions.coalesce(1).collect()
     if distributed:
         # Covering budget floor: at high region cardinality a tight
         # budget is the scale killer, not a saving — the level-

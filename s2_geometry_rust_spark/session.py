@@ -28,6 +28,15 @@ def _ensure_package_on_executor_path() -> None:
 
 def get_spark(app: str = "s2spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    """Local-mode session (``local[cpus]``, default ``SPARK_GRAFT_CPUS``
+    or 32) with the engine's configuration.
+
+    Its Python workers find the package on ``PYTHONPATH`` and are forked
+    by the engine's daemon module (``spark.python.daemon.module`` =
+    ``s2_geometry_rust_spark._daemon``), which installs the package's
+    stat-keyed zip rule before the first fork: no task re-reads
+    ``pyspark.zip``'s directory, whether or not it imports the package.
+    """
     _ensure_package_on_executor_path()
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -44,5 +53,6 @@ def get_spark(app: str = "s2spark", cpus: int | None = None,
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", "s2_geometry_rust_spark._daemon")
         .getOrCreate()
     )

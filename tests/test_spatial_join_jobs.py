@@ -22,13 +22,19 @@ def points(spark):
 
 
 @pytest.fixture(scope="module")
-def regions_path(spark, tmp_path_factory):
-    """The 7 headline regions as one parquet file: one partition."""
-    path = str(tmp_path_factory.mktemp("jobs") / "regions")
-    fixtures.cap_regions(spark).unionByName(
+def regions_paths(spark, tmp_path_factory):
+    """The 7 headline regions as one parquet file (one partition) and as
+    4 files (4 partitions)."""
+    regions = fixtures.cap_regions(spark).unionByName(
         fixtures.loop_regions(spark, ["arctic_80", "candy_cane", "small_ne_cw"])
-    ).coalesce(1).write.parquet(path)
-    return path
+    )
+    paths = {}
+    for files in (1, 4):
+        path = str(tmp_path_factory.mktemp("jobs") / f"regions{files}")
+        regions.repartition(files).write.parquet(path)
+        assert spark.read.parquet(path).rdd.getNumPartitions() == files
+        paths[files] = path
+    return paths
 
 
 def _jobs_and_pairs(spark, points, regions, distributed, group):
@@ -45,22 +51,26 @@ def _jobs_and_pairs(spark, points, regions, distributed, group):
     return n, pairs
 
 
-# (distributed, lowered threshold or None, jobs).  A separate count
-# probe and an eager covering checkpoint made these 3, 1, 3 and 5.
+# (distributed, lowered threshold or None, jobs), the same for one and
+# for 4 regions files.  A separate count probe and an eager covering
+# checkpoint made these 3, 1, 3 and 5 on one file; a limited collect
+# without coalesce(1) scans 4 files in 2 rounds (2 and 4 jobs for None).
 CASES = [(None, None, 1), (False, None, 1), (True, None, 2), (None, 3, 3)]
 
 
-def test_jobs_per_call_and_same_pairs(spark, points, regions_path):
+def test_jobs_per_call_and_same_pairs(spark, points, regions_paths):
     old = sj.DISTRIBUTED_REGION_THRESHOLD
     got = {}
     try:
-        for distributed, threshold, want_jobs in CASES:
-            sj.DISTRIBUTED_REGION_THRESHOLD = threshold or old
-            regions = spark.read.parquet(regions_path)
-            n, pairs = _jobs_and_pairs(spark, points, regions, distributed,
-                                       f"pip-jobs-{distributed}-{threshold}")
-            assert n == want_jobs, (distributed, threshold, n)
-            got[(distributed, threshold)] = pairs
+        for files, path in regions_paths.items():
+            for distributed, threshold, want_jobs in CASES:
+                sj.DISTRIBUTED_REGION_THRESHOLD = threshold or old
+                regions = spark.read.parquet(path)
+                n, pairs = _jobs_and_pairs(
+                    spark, points, regions, distributed,
+                    f"pip-jobs-{files}-{distributed}-{threshold}")
+                assert n == want_jobs, (files, distributed, threshold, n)
+                got[(files, distributed, threshold)] = pairs
     finally:
         sj.DISTRIBUTED_REGION_THRESHOLD = old
     first = next(iter(got.values()))

@@ -13,6 +13,12 @@ produces a zip of the s2_geometry_rust_spark package suitable for
 
 (the executor-side PYTHONPATH handling in session.get_spark is the
 local-mode equivalent; on a cluster the zip rides the job).
+
+``get_spark`` also sets ``spark.python.daemon.module`` to the engine's
+daemon module, a local-mode setting that gives every Python worker the
+package's stat-keyed zip rule before it forks.  A spark-submit job does
+not set it: there a worker installs the rule when a task first imports
+the package, as every engine UDF does.
 """
 
 from __future__ import annotations
