@@ -1,9 +1,10 @@
 """Malformed geo spans on every streaming tiler: each one parses spans
 through ``sources.extract_geo_points``, so a span the POINT pattern
-rejects is dropped — the output equals the output on the valid
-documents alone — instead of failing the stream on an ANSI
-``CAST_INVALID_INPUT`` (ANSI mode is on as ``get_spark`` leaves it) or
-becoming a garbage cell id with ANSI off."""
+rejects, or whose number overflows to +-Infinity, is dropped — the
+output equals the output on the valid documents alone — instead of
+failing the stream on an ANSI ``CAST_INVALID_INPUT`` (ANSI mode is on
+as ``get_spark`` leaves it) or becoming a garbage cell id with ANSI
+off."""
 
 from __future__ import annotations
 
@@ -26,9 +27,11 @@ from s2_geometry_rust_spark.streaming import (
 )
 from s2_geometry_rust_spark.streaming.tiles import streaming_tile_assign
 
-# the last three pass a bare [-+0-9.eE] charset but are no numbers
+# "POINT(e e)" and the next two pass a bare [-+0-9.eE] charset but are no
+# numbers; the last three are numbers past the double range (+-Infinity)
 BAD_TEXTS = ["POINT(abc)", "not a point", "POINT(1 2",
-             "POINT(e e)", "POINT(1e 2)", "POINT(1-2 3)"]
+             "POINT(e e)", "POINT(1e 2)", "POINT(1-2 3)",
+             "POINT(1e400 0)", "POINT(0 -1e400)", f"POINT({'9' * 400} 0)"]
 
 # name -> (operator, output mode); the aggregates run in complete mode
 # so no open window is held back by the watermark
@@ -106,7 +109,8 @@ def test_malformed_spans_are_dropped(spark, sources, tmp_path, name, capsys):
 def test_batch_parser_keeps_numbers_and_drops_non_numbers(spark):
     """The batch parser keeps Python-repr number forms with the doubles
     ``float`` reads from them, and drops every malformed span."""
-    good = ["POINT(1e-05 -0.0)", "POINT(1.5e+20 .5)", "POINT(-12. +3E1)"]
+    good = ["POINT(1e-05 -0.0)", "POINT(1.5e+20 .5)", "POINT(-12. +3E1)",
+            f"POINT({'0' * 400}1.5 2)"]
     docs = spark.createDataFrame(
         [("d", [("geo", t, None, 0) for t in good + BAD_TEXTS])],
         DOCUMENTS_SCHEMA,
