@@ -30,8 +30,10 @@ import time
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
 
+from s2_geometry_rust_spark.session import default_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+CPUS = default_cpus()
 # independent sessions of the per-query timings; a query's number is its
 # minimum over all of them
 SESSIONS = 2

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -202,12 +203,30 @@ def loop_vertex_rows(names: list[str] | None = None
     return rows
 
 
+LOOP_VERTEX_SCHEMA = StructType(
+    [StructField("region_id", StringType()), StructField("vid", IntegerType())]
+    + [StructField(c, DoubleType()) for c in ("vx", "vy", "vz")]
+)
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple],
+                 schema: StructType) -> DataFrame:
+    """Fixture rows as a ``LocalRelation`` frame: built from an Arrow
+    table, so reading it is a JVM-only job.  ``createDataFrame`` of a
+    Python list would be a ``LogicalRDD`` whose every read runs a Python
+    worker task."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.names
+    table = pa.Table.from_pylist([dict(zip(names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 def loop_vertices(spark: SparkSession,
                   names: list[str] | None = None) -> DataFrame:
-    return spark.createDataFrame(
-        loop_vertex_rows(names),
-        "region_id string, vid int, vx double, vy double, vz double",
-    )
+    return _local_frame(spark, loop_vertex_rows(names), LOOP_VERTEX_SCHEMA)
 
 
 def loop_regions(spark: SparkSession, names: list[str] | None = None) -> DataFrame:
@@ -217,7 +236,7 @@ def loop_regions(spark: SparkSession, names: list[str] | None = None) -> DataFra
          [(float(a), float(b)) for a, b in LOOPS[n]], None, None)
         for n in names
     ]
-    return spark.createDataFrame(rows, REGIONS_SCHEMA)
+    return _local_frame(spark, rows, REGIONS_SCHEMA)
 
 
 def cap_regions(spark: SparkSession, names: list[str] | None = None,
@@ -229,7 +248,7 @@ def cap_regions(spark: SparkSession, names: list[str] | None = None,
         (n, "cap", *map(float, catalog[n]), None, None, None, None)
         for n in names
     ]
-    return spark.createDataFrame(rows, REGIONS_SCHEMA)
+    return _local_frame(spark, rows, REGIONS_SCHEMA)
 
 
 def rect_regions(spark: SparkSession, names: list[str] | None = None) -> DataFrame:
@@ -238,7 +257,7 @@ def rect_regions(spark: SparkSession, names: list[str] | None = None) -> DataFra
         (n, "rect", *map(float, RECTS[n]), None, None, None)
         for n in names
     ]
-    return spark.createDataFrame(rows, REGIONS_SCHEMA)
+    return _local_frame(spark, rows, REGIONS_SCHEMA)
 
 
 def polygon_regions(spark: SparkSession,
@@ -251,7 +270,7 @@ def polygon_regions(spark: SparkSession,
           for poly, loop_name in POLYGONS[n]])
         for n in names
     ]
-    return spark.createDataFrame(rows, REGIONS_SCHEMA)
+    return _local_frame(spark, rows, REGIONS_SCHEMA)
 
 
 def all_regions(spark: SparkSession) -> DataFrame:

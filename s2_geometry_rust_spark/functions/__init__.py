@@ -23,6 +23,7 @@ from .columns import (  # noqa: F401
     cell_lsb,
     cell_maximum_tile,
     cell_parent,
+    cell_parent_sql,
     cell_range_max,
     cell_range_min,
     cell_token,

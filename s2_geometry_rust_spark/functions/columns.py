@@ -84,6 +84,19 @@ def cell_parent(col, level: int) -> Column:
     return F.when(cell_level(c) <= level, c).otherwise(p)
 
 
+def cell_parent_sql(name: str, level: int) -> str:
+    """SQL text of ``cell_parent(name, level)``: the same bit expression
+    (``cell_level`` included), for predicates built as one ``F.expr``
+    instead of one py4j call per Column node.  The text holds only
+    numbers and the backquoted column ``name``."""
+    c = "`" + name.replace("`", "``") + "`"
+    lsb = _lsb_for_level(level)
+    lvl = (f"CASE WHEN {c} = 0 THEN -1 "
+           f"ELSE {MAX_LEVEL} - shiftright(bit_count(({c} & -{c}) - 1), 1) END")
+    return (f"CASE WHEN {lvl} <= {level} THEN {c} "
+            f"ELSE ({c} & {-lsb}L) | {lsb}L END")
+
+
 def cell_range_min(col) -> Column:
     """id - (lsb - 1) (cell_id.rs:484-487)."""
     c = _c(col)

@@ -26,10 +26,17 @@ def _ensure_package_on_executor_path() -> None:
         )
 
 
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the cores this process may
+    run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+
+
 def get_spark(app: str = "s2spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    """Local-mode session (``local[cpus]``, default ``SPARK_GRAFT_CPUS``
-    or 32) with the engine's configuration.
+    """Local-mode session (``local[cpus]``, default ``default_cpus()``)
+    with the engine's configuration.
 
     Its Python workers find the package on ``PYTHONPATH`` and are forked
     by the engine's daemon module (``spark.python.daemon.module`` =
@@ -39,7 +46,7 @@ def get_spark(app: str = "s2spark", cpus: int | None = None,
     """
     _ensure_package_on_executor_path()
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     return (

@@ -4,6 +4,7 @@ numpy kernels (which themselves mirror /root/reference/src/cell_id.rs)."""
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from s2_geometry_rust_spark.functions import (
     cell_contains,
@@ -15,6 +16,7 @@ from s2_geometry_rust_spark.functions import (
     cell_is_valid,
     cell_level,
     cell_parent,
+    cell_parent_sql,
     cell_range_max,
     cell_range_min,
     cell_token,
@@ -83,6 +85,33 @@ def test_column_hierarchy_math_matches_kernels(spark, ids_df):
     np.testing.assert_array_equal(
         out["token"].to_numpy(object), ck.to_token(ids)
     )
+
+
+def test_cell_parent_sql_equals_column_form(spark):
+    """cell_parent_sql is the SQL text of cell_parent: equal values at
+    levels 0, 1, 29 and 30 on leaf and non-leaf ids of face 0 and of
+    faces 4-5 (negative as int64), and on id 0.  The column name needs
+    backquoting, escapes included."""
+    pts = np.array([[1.0, 0.2, -0.3], [0.1, -1.0, 0.4], [-0.2, 0.3, -1.0]])
+    leaf = ck.from_point(pts[:, 0], pts[:, 1], pts[:, 2])
+    assert list(ck.face(leaf)) == [0, 4, 5]
+    ids = np.concatenate([[np.uint64(0)], leaf] + [
+        ck.parent(leaf, np.full(3, lv)) for lv in (0, 1, 12, 29)])
+    name = "cell.`id`"
+    df = spark.createDataFrame(pd.DataFrame({name: ids.view(np.int64)}))
+    levels = (0, 1, 29, 30)
+    out = df.select(
+        *[cell_parent("`cell.``id```", lv).alias(f"col{lv}")
+          for lv in levels],
+        *[F.expr(cell_parent_sql(name, lv)).alias(f"sql{lv}")
+          for lv in levels],
+    ).toPandas()
+    for lv in levels:
+        np.testing.assert_array_equal(out[f"sql{lv}"], out[f"col{lv}"])
+        np.testing.assert_array_equal(
+            out[f"sql{lv}"].to_numpy(np.int64)[1:].view(np.uint64),
+            ck.parent_at_level(ids[1:], lv))
+    assert (out.iloc[0] == 0).all()
 
 
 def test_unsigned_sort_key_orders_like_u64(spark, ids_df):

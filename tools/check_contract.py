@@ -75,7 +75,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str | None = None) -> int:
     import __spark_entry__ as e
     from s2_geometry_rust_spark.session import get_spark
 
-    spark = get_spark("contract-check", cpus=8)
+    spark = get_spark("contract-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -56,7 +56,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> int:
     import __spark_entry__ as e
     from s2_geometry_rust_spark.session import get_spark
 
-    spark = get_spark("plan-audit", cpus=8)
+    spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("OFF")
     failures = 0
     for name, fn in e.queries().items():
