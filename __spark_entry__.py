@@ -3,7 +3,11 @@
 entry()    — flagship interleaved-document pipeline on sf0.001.
 queries()  — named operators from SURVEY.md §2 (grown per milestone).
 oracle_sql() — DuckDB-equivalent SQL per query (incl. a pure-SQL
-               Hilbert cell-id encoder, see s2_geometry_rust_spark.oracle).
+               Hilbert cell-id encoder, see contract.oracle).
+
+The engine is the ``s2_geometry_rust_spark`` package; the query registry
+and its oracle SQL live in the sibling ``contract`` package, which runs
+on the driver only and is not part of the ``--py-files`` zip.
 """
 
 from __future__ import annotations
@@ -35,12 +39,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from s2_geometry_rust_spark.engine_queries import QUERIES
+    from contract.engine_queries import QUERIES
 
     return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    from s2_geometry_rust_spark.engine_queries import ORACLES
+    from contract.engine_queries import ORACLES
 
     return dict(ORACLES)

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import oracle
-from .functions import (
+from s2_geometry_rust_spark.functions import (
     cell_face,
     cell_id_from_xyz,
     cell_parent,
@@ -89,7 +89,7 @@ def _derived_latlng(spark: SparkSession, sf_dir: str,
 def point_in_rect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-latlng-rect join (latlng_rect.rs:297-341 semantics incl.
     antimeridian wraparound) — pure JVM filter-join."""
-    from .operators.spatial_join import point_in_rect_join
+    from s2_geometry_rust_spark.operators.spatial_join import point_in_rect_join
 
     pts = _derived_latlng(spark, sf_dir)
     rects = spark.createDataFrame(
@@ -108,7 +108,7 @@ def point_in_rect(spark: SparkSession, sf_dir: str) -> DataFrame:
 def distance_join_chord(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distance-threshold theta-join on squared chord length
     (chord_angle.rs:90-95)."""
-    from .operators.spatial_join import distance_join
+    from s2_geometry_rust_spark.operators.spatial_join import distance_join
 
     pts = _derived_points(spark, sf_dir)
     centers = spark.createDataFrame(
@@ -128,7 +128,7 @@ def knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact kNN (k=10): streaming local top-k + global window; the
     north-star's exact-distance contract (cell-ring variant is the
     approximate scale path, tested separately)."""
-    from .operators.knn import knn_bruteforce
+    from s2_geometry_rust_spark.operators.knn import knn_bruteforce
 
     queries = _derived_points(spark, sf_dir, "supplier", "s_suppkey").filter(
         F.col("point_id") < 20
@@ -140,28 +140,28 @@ def knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import exact_dedup
+    from s2_geometry_rust_spark.operators.dedup import exact_dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return exact_dedup(docs)
 
 
 def token_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text import with_token_count
+    from s2_geometry_rust_spark.operators.text import with_token_count
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return with_token_count(docs).select("doc_id", "n_tokens")
 
 
 def bpe_token_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text import with_bpe_token_count
+    from s2_geometry_rust_spark.operators.text import with_bpe_token_count
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return with_bpe_token_count(docs).select("doc_id", "n_bpe_tokens")
 
 
 def text_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text import with_quality_score
+    from s2_geometry_rust_spark.operators.text import with_quality_score
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return with_quality_score(docs).select(
@@ -171,7 +171,7 @@ def text_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lang_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text import with_lang_id
+    from s2_geometry_rust_spark.operators.text import with_lang_id
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return with_lang_id(docs).select("doc_id", "lang_pred")
@@ -180,8 +180,8 @@ def lang_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def union_leaf_cells_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cell-union leaf-count aggregate (cell_union.rs:472-479) over
     unions assembled from derived points at mixed levels."""
-    from .functions import cell_id_from_xyz
-    from .operators.geom_aggs import union_leaf_cells_covered
+    from s2_geometry_rust_spark.functions import cell_id_from_xyz
+    from s2_geometry_rust_spark.operators.geom_aggs import union_leaf_cells_covered
 
     pts = _derived_points(spark, sf_dir)
     cells = (
@@ -205,7 +205,7 @@ def _mixed_level_unions(spark: SparkSession, sf_dir: str,
     """Mixed-level member cells (union_id = point_id % 10, level =
     point_id % 21 + 10) — the union_leaf_cells construction, shared by
     the set-algebra contract queries."""
-    from .functions import cell_id_from_xyz
+    from s2_geometry_rust_spark.functions import cell_id_from_xyz
 
     pts = _derived_points(spark, sf_dir, table, key)
     return (
@@ -224,7 +224,7 @@ def union_normalize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cell_union.rs:600-629 semantics; unions_ops.normalize_distributed)
     — verified against the pure-SQL drop-contained + sibling-collapse
     oracle."""
-    from .operators.unions_ops import normalize_distributed
+    from s2_geometry_rust_spark.operators.unions_ops import normalize_distributed
 
     return normalize_distributed(
         _mixed_level_unions(spark, sf_dir)
@@ -234,7 +234,7 @@ def union_normalize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def union_intersect_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CellUnion::intersection two-pointer merge (cell_union.rs:632-666)
     of customer-derived vs supplier-derived unions per union_id."""
-    from .operators.unions_ops import intersection_grouped, normalize_grouped
+    from s2_geometry_rust_spark.operators.unions_ops import intersection_grouped, normalize_grouped
 
     def as_str(df):  # the grouped kernels key unions by string id
         return df.withColumn("union_id", F.col("union_id").cast("string"))
@@ -252,7 +252,7 @@ def union_difference_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CellUnion::difference recursive child subdivision
     (cell_union.rs:669-678) of customer-derived minus supplier-derived
     unions per union_id."""
-    from .operators.unions_ops import difference_grouped, normalize_grouped
+    from s2_geometry_rust_spark.operators.unions_ops import difference_grouped, normalize_grouped
 
     def as_str(df):
         return df.withColumn("union_id", F.col("union_id").cast("string"))
@@ -269,7 +269,7 @@ def union_difference_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def union_expand_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CellUnion::expand to level 12 (cell_union.rs:427-444, with the
     reference's placeholder id-space neighbors, SURVEY.md §8.3)."""
-    from .operators.unions_ops import expand_grouped, normalize_grouped
+    from s2_geometry_rust_spark.operators.unions_ops import expand_grouped, normalize_grouped
 
     cells = _mixed_level_unions(spark, sf_dir).withColumn(
         "union_id", F.col("union_id").cast("string")
@@ -282,8 +282,8 @@ def union_expand_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def raster_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster-tile <-> vector equi-join at level 6 (SURVEY.md §2.5):
     customer points against the distinct supplier tile set."""
-    from .functions import cell_id_from_xyz
-    from .operators.tiling import raster_vector_join
+    from s2_geometry_rust_spark.functions import cell_id_from_xyz
+    from s2_geometry_rust_spark.operators.tiling import raster_vector_join
 
     pts = _derived_points(spark, sf_dir).withColumn(
         "cell_id", cell_id_from_xyz("x", "y", "z")
@@ -307,8 +307,8 @@ def covering_cells_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership (proof in oracle.covering_cells_sql), so DuckDB can
     re-derive the output from the region adapters' may_intersect
     against the 6 face cells."""
-    from . import fixtures
-    from .operators.coverings import cover_regions
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.coverings import cover_regions
 
     return cover_regions(fixtures.all_regions(spark), max_cells=8)
 
@@ -326,9 +326,9 @@ def point_in_region_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     applies itself.  Output is budget-independent: the refine stage is
     exact.
     """
-    from . import fixtures
-    from .operators.spatial_join import point_in_region_join
-    from .sources import extract_geo_points, interleave_flat_documents
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.spatial_join import point_in_region_join
+    from s2_geometry_rust_spark.sources import extract_geo_points, interleave_flat_documents
 
     flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pts = extract_geo_points(interleave_flat_documents(flat))
@@ -348,8 +348,8 @@ def covering_cells_cons_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hilbert via the embedded LOOKUP_IJ table, true cell-quad geometry,
     frontier expansion with the budget stop, and the normalize
     sibling-collapse."""
-    from . import fixtures
-    from .operators.coverings import cover_regions
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.coverings import cover_regions
 
     sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
     k = F.col("s_suppkey")
@@ -371,8 +371,8 @@ def covering_cells_cons_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def knn_cell_ring_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions import cell_id_from_xyz
-    from .operators.knn import knn_cell_ring
+    from s2_geometry_rust_spark.functions import cell_id_from_xyz
+    from s2_geometry_rust_spark.operators.knn import knn_cell_ring
 
     queries = (
         _derived_points(spark, sf_dir, "supplier", "s_suppkey")
@@ -394,8 +394,8 @@ def knn_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     force, the oracle is plain brute-force kNN SQL — fully independent
     of the ring algorithm, so a green row means EXACT kNN, not just
     deterministic replay."""
-    from .functions import cell_id_from_xyz
-    from .operators.knn import knn_cell_ring
+    from s2_geometry_rust_spark.functions import cell_id_from_xyz
+    from s2_geometry_rust_spark.operators.knn import knn_cell_ring
 
     queries = (
         _derived_points(spark, sf_dir, "supplier", "s_suppkey")
@@ -413,7 +413,7 @@ def cap_point_bounds_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2Cap running point bound per group (cap.rs:188-205 add_point
     fold, incl. the chord_angle.rs:90-98 clamp at 4.0) — the r3 verdict
     item promoting the T-only cap add_point kernel into a driver row."""
-    from .operators.geom_aggs import cap_add_point_bounds
+    from s2_geometry_rust_spark.operators.geom_aggs import cap_add_point_bounds
 
     pts = _derived_points(spark, sf_dir).withColumn(
         "group_id", (F.col("point_id") % 16).cast("long")
@@ -425,7 +425,7 @@ def maximum_tile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """maximum_tile climb (cell_id.rs:673-685) from each derived
     point's leaf toward an unaligned range end — the min-satisfying-
     level reformulation runs as one codegen array expression."""
-    from .functions import (
+    from s2_geometry_rust_spark.functions import (
         cell_id_from_xyz,
         cell_level,
         cell_maximum_tile,
@@ -458,7 +458,7 @@ def canonical_covering_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixed-level fixture unions: level clamp to [8,14] with level_mod=2
     (exercising the descending upward snap), normalize, truncate to 16
     by (level, unsigned id)."""
-    from .operators.unions_ops import canonicalize_covering_distributed
+    from s2_geometry_rust_spark.operators.unions_ops import canonicalize_covering_distributed
 
     return canonicalize_covering_distributed(
         _mixed_level_unions(spark, sf_dir),
@@ -467,7 +467,7 @@ def canonical_covering_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import near_dedup_minhash
+    from s2_geometry_rust_spark.operators.dedup import near_dedup_minhash
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return near_dedup_minhash(docs, threshold=0.5, n_bands=32)
@@ -478,7 +478,7 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup pairs -> alternating-star connected components -> every doc
     labeled (cluster_id = min doc_id reachable, cluster_size).  Oracle
     re-derives components as a recursive reachability closure in SQL."""
-    from .operators.dedup import duplicate_clusters
+    from s2_geometry_rust_spark.operators.dedup import duplicate_clusters
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return duplicate_clusters(docs, threshold=0.5, n_bands=32)
@@ -489,7 +489,7 @@ def corpus_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     language gate + exact-dup keeper + near-dup cluster keeper
     (operators/corpus.py) — the composition query a real data pipeline
     runs; oracled by composing the proven sub-oracles."""
-    from .operators.corpus import build_training_corpus
+    from s2_geometry_rust_spark.operators.corpus import build_training_corpus
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return build_training_corpus(docs, quality_min=0.5, langs=("en",))
@@ -502,7 +502,7 @@ def tile_counts_salted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiles' as a graded query.  Level 6 makes city-scale hot tiles; the
     salt is a deterministic row function, and the result is provably
     salt-invariant, so the oracle is the plain GROUP BY."""
-    from .plans.salting import salted_counts
+    from s2_geometry_rust_spark.plans.salting import salted_counts
 
     pts = _derived_points(spark, sf_dir, "lineitem", "l_orderkey")
     tiles = pts.select(
@@ -559,14 +559,14 @@ def events_hourly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text import fingerprints
+    from s2_geometry_rust_spark.operators.text import fingerprints
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return fingerprints(docs)
 
 
 def simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import simhash_signatures
+    from s2_geometry_rust_spark.operators.dedup import simhash_signatures
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return simhash_signatures(docs)
@@ -579,8 +579,8 @@ def loop_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1 ulp, and rounding to 1e-9 absorbs that while still verifying 9
     significant decimals of every statistic.  The full double-precision
     surface (incl. rect bounds) stays pinned by the pytest parity suite."""
-    from . import fixtures
-    from .operators.geom_aggs import loop_stats
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.geom_aggs import loop_stats
 
     def nano(c: str) -> F.Column:
         return F.round(F.col(c) * 1e9, 0).cast("long")
@@ -613,8 +613,8 @@ def edge_crossings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mutable_shape_index.rs semantics + predicates.rs crossing_sign).
     Fixture-scale edges share cells only at face level, so the index
     level is 0 here; the operator defaults to the reference's 15."""
-    from . import fixtures
-    from .operators.shape_index import edge_crossing_join, edges_from_loops
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.shape_index import edge_crossing_join, edges_from_loops
 
     edges = edges_from_loops(
         spark, {n: fixtures.LOOPS[n] for n in EDGE_CROSS_LOOPS}
@@ -644,7 +644,7 @@ POLYLINE_LINES = {
 def polyline_crossings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polyline-intersection join (polyline.rs:316-338 semantics as a
     distributed filter-and-refine join)."""
-    from .operators.polyline_join import polyline_intersection_join
+    from s2_geometry_rust_spark.operators.polyline_join import polyline_intersection_join
 
     df = spark.createDataFrame(
         [(k, [(float(a), float(b)) for a, b in v])
@@ -681,7 +681,7 @@ def polyline_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the fixture lines, nano-scaled like loop_stats (engine numpy
     trig vs oracle SQL trig agree to ~1 ulp; margin guards in
     tests/test_round3_oracles.py)."""
-    from .operators.geom_aggs import polyline_stats
+    from s2_geometry_rust_spark.operators.geom_aggs import polyline_stats
 
     df = spark.createDataFrame(
         [(k, [(float(a), float(b)) for a, b in v])
@@ -726,7 +726,7 @@ def chain_crossings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the S2EdgeCrosser chain state (edge_crosser.rs:106-170) —
     shape-index candidate path at face level (fixture edges only share
     face cells), applyInPandas chain walk refine."""
-    from .operators.shape_index import edges_from_loops, polyline_edge_crossings
+    from s2_geometry_rust_spark.operators.shape_index import edges_from_loops, polyline_edge_crossings
 
     edges = edges_from_loops(spark, CHAIN_LOOPS)
     lines = spark.createDataFrame(
@@ -744,7 +744,7 @@ def union_areas_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned-UV-bounds quirk the per-cell approximation reduces exactly
     to average_area_at_level); exact_area is the avg-edge-squared trig
     formula compared at 1e-18 with margin guards."""
-    from .operators.geom_aggs import union_bounds
+    from s2_geometry_rust_spark.operators.geom_aggs import union_bounds
 
     def atto(c: str) -> F.Column:
         return F.round(F.col(c) * 1e18, 0).cast("long")
@@ -761,14 +761,14 @@ def emb_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact embedding-cosine near-dup threshold join (the oracle
     baseline; cosine_threshold_pairs_lsh is the bucketed scale path,
     recall-tested in pytest, and ivf_topk the ANN scale path)."""
-    from .operators.similarity import cosine_threshold_pairs_exact
+    from s2_geometry_rust_spark.operators.similarity import cosine_threshold_pairs_exact
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return cosine_threshold_pairs_exact(emb, 0.4)
 
 
 def ann_cosine_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import cosine_topk_bruteforce
+    from s2_geometry_rust_spark.operators.similarity import cosine_topk_bruteforce
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 20)
@@ -785,8 +785,8 @@ def media_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     The feature vector is posexploded to scalar (dim_idx, feature) rows
     so every output column is driver-canonicalizable (a raw
     array<double> column breaks hash canonicalization)."""
-    from .operators.multimodal import extract_media_features, media_spans
-    from .sources import interleave_flat_documents
+    from s2_geometry_rust_spark.operators.multimodal import extract_media_features, media_spans
+    from s2_geometry_rust_spark.sources import interleave_flat_documents
 
     flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs = interleave_flat_documents(flat, with_media=True)
@@ -802,7 +802,7 @@ def ann_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline (assign -> probe -> bucket join -> exact re-rank) verifies
     against the pure-SQL oracle; the kmeans-trained path is the
     production default, recall-tested in pytest."""
-    from .operators.similarity import ivf_topk
+    from s2_geometry_rust_spark.operators.similarity import ivf_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 20)
@@ -818,7 +818,7 @@ def ann_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle replays the full pipeline (bucket -> collision join ->
     exact cosine re-rank) bit-for-bit; the Gaussian-plane variant is the
     recall-tested production default."""
-    from .operators.similarity import lsh_bucketed_topk
+    from s2_geometry_rust_spark.operators.similarity import lsh_bucketed_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 20)
@@ -841,7 +841,7 @@ def chain_crossing_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout), and the join propagates ChainPosition.chain_id on both
     sides.  Fixture lines are transversal (margins pytest-pinned), so
     the oracle replays crossing_sign in plain f64."""
-    from .operators.shape_index import edge_crossing_join, edges_from_chains
+    from s2_geometry_rust_spark.operators.shape_index import edge_crossing_join, edges_from_chains
 
     shapes = {
         "a_lines": [POLYLINE_LINES[n] for n in MULTI_CHAIN_A],
@@ -863,9 +863,9 @@ def point_in_polygon_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     polygon_shape.rs:78-95, 236-258, 389-393).  Rides the same
     filter-and-refine path as point_in_region: conservative shell
     coverings filter, exact shell-minus-holes winding PIP refine."""
-    from . import fixtures
-    from .operators.spatial_join import point_in_region_join
-    from .sources import extract_geo_points, interleave_flat_documents
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.spatial_join import point_in_region_join
+    from s2_geometry_rust_spark.sources import extract_geo_points, interleave_flat_documents
 
     flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pts = extract_geo_points(interleave_flat_documents(flat))
@@ -885,13 +885,13 @@ def builder_graph_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the full build: snap grid, slot-rank vertex ids,
     dedup, edge ranks.  Rounding/pole margins are pytest-pinned
     (test_builder_oracle_margins)."""
-    from .operators.builder import (
+    from s2_geometry_rust_spark.operators.builder import (
         SnapFunction,
         build_graph,
         edges_from_latlng,
         with_int_grid,
     )
-    from .sources import extract_geo_points, interleave_flat_documents
+    from s2_geometry_rust_spark.sources import extract_geo_points, interleave_flat_documents
 
     flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pts = extract_geo_points(interleave_flat_documents(flat)).select(
@@ -948,7 +948,7 @@ def builder_graph_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def repetition_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signals — zero-shuffle per-row
     array math (see text.with_repetition_stats)."""
-    from .operators.text import with_repetition_stats
+    from s2_geometry_rust_spark.operators.text import with_repetition_stats
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return with_repetition_stats(docs).select(
@@ -960,7 +960,7 @@ def repetition_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def session_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization rollup — one shuffle on user_id, two
     codegen window passes (see events.session_stats)."""
-    from .operators.events import session_stats
+    from s2_geometry_rust_spark.operators.events import session_stats
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return session_stats(ev)
@@ -970,7 +970,7 @@ def stratified_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-language quota sample in md5(doc_id) order —
     reproducible across runs and cluster sizes (see
     sampling.stratified_sample)."""
-    from .operators.sampling import stratified_sample
+    from s2_geometry_rust_spark.operators.sampling import stratified_sample
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return stratified_sample(docs, ["lang"], 50).select(
@@ -981,7 +981,7 @@ def stratified_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def vocab_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-100 corpus vocabulary — one map-side-combined shuffle plus a
     WindowGroupLimit-pruned global top-k (see vocab.vocab_topk)."""
-    from .operators.vocab import vocab_topk
+    from s2_geometry_rust_spark.operators.vocab import vocab_topk
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return vocab_topk(docs, 100)
@@ -990,7 +990,7 @@ def vocab_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bigram_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus bigram count table with min-frequency cut — per-row array
     n-gram expansion (zero shuffle) + one combined groupBy."""
-    from .operators.vocab import ngram_counts
+    from s2_geometry_rust_spark.operators.vocab import ngram_counts
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return ngram_counts(docs, n=2, min_count=2)
@@ -1001,7 +1001,7 @@ def label_centroids_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     treeAggregate-shaped partial sums (one exchange row per
     (label, partition), never per vector; see
     vocab.label_centroid_sums)."""
-    from .operators.vocab import label_centroid_sums
+    from s2_geometry_rust_spark.operators.vocab import label_centroid_sums
 
     embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return label_centroid_sums(embs)
@@ -1019,8 +1019,8 @@ def region_contains_loop_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Region-contains-loop join (vertex-containment semantics,
     loop.rs:397-415) over fixture hemispheres/rings/caps — the
     filter-and-refine point join lifted to region x region."""
-    from . import fixtures
-    from .operators.spatial_join import region_containment_join
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.spatial_join import region_containment_join
 
     a = fixtures.loop_regions(spark, CONTAIN_A_LOOPS).unionByName(
         fixtures.cap_regions(spark)
@@ -1040,8 +1040,8 @@ INTERSECT_B_LOOPS = ["candy_cane", "loop_a", "loop_b"]
 def loop_intersections_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Loop-intersects-loop join (mutual vertex probing,
     loop.rs:418-441) over margin-guarded fixture sets."""
-    from . import fixtures
-    from .operators.spatial_join import loop_intersection_join
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.spatial_join import loop_intersection_join
 
     a = fixtures.loop_regions(spark, INTERSECT_A_LOOPS)
     b = fixtures.loop_regions(spark, INTERSECT_B_LOOPS)
@@ -1063,8 +1063,8 @@ def loop_intersections_strict_q(spark: SparkSession,
     reference left TODO (loop.rs:413,439): mutual vertex probing OR any
     proper boundary crossing (crossing_sign_complete).  Opt-in strict
     mode — the parity default stays loop_intersections_q."""
-    from . import fixtures
-    from .operators.spatial_join import loop_intersection_join
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.spatial_join import loop_intersection_join
 
     a = fixtures.loop_regions(spark, STRICT_A_LOOPS)
     b = fixtures.loop_regions(spark, STRICT_B_LOOPS)
@@ -1076,7 +1076,7 @@ def decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-gram with the held-out set (doc_id < 10 as the eval stand-in;
     n=3 keeps the contract comparison dense at small SF — production
     default is 5) — broadcast semi-join, corpus side never shuffled."""
-    from .operators.vocab import decontaminate
+    from s2_geometry_rust_spark.operators.vocab import decontaminate
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bench = docs.filter(F.col("doc_id") < 10)
@@ -1087,7 +1087,7 @@ def decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def funnel_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered view -> click -> purchase funnel over events — per-step
     user-keyed aggregates, no self-join explosion."""
-    from .operators.events import funnel_counts
+    from s2_geometry_rust_spark.operators.events import funnel_counts
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return funnel_counts(ev)
@@ -1099,8 +1099,8 @@ def tile_lang_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's predicted language — per-tile language distribution.
     One extraction pass + one broadcastable lang join + one aggregate
     shuffle; everything before the groupBy is codegen + one Arrow UDF."""
-    from .operators.text import with_lang_id
-    from .sources import extract_geo_points, interleave_flat_documents
+    from s2_geometry_rust_spark.operators.text import with_lang_id
+    from s2_geometry_rust_spark.sources import extract_geo_points, interleave_flat_documents
 
     flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pts = extract_geo_points(interleave_flat_documents(flat)).withColumn(
@@ -1124,7 +1124,7 @@ def tile_lang_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def retention_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention over events — distinct (user, day) activity,
     first-day cohorts, day-offset counts."""
-    from .operators.events import retention_counts
+    from s2_geometry_rust_spark.operators.events import retention_counts
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return retention_counts(ev)
@@ -1136,7 +1136,7 @@ def point_cloud_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     point a degenerate edge in its within-shape order, rolled up to
     per-(shape, level-15 index cell) clipped-shape stats.  One window
     shuffle + one partial-agg shuffle; cell math is codegen bit ops."""
-    from .operators.shape_index import point_cloud_index
+    from s2_geometry_rust_spark.operators.shape_index import point_cloud_index
 
     pts = leaf_assign(spark, sf_dir).withColumn(
         "shape_id", F.pmod("point_id", F.lit(32)).cast("long")
@@ -1159,7 +1159,7 @@ def ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (near_dup_pairs).  Candidates come only from each doc's rarest-
     n-gram prefix (provably lossless at the threshold), so the join key
     distribution is anti-skewed by construction."""
-    from .operators.dedup import ngram_jaccard_pairs
+    from s2_geometry_rust_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return ngram_jaccard_pairs(docs, threshold=0.5, n=3)
@@ -1172,7 +1172,7 @@ def asof_last_error_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal error event of the same user (union + sorted carry-forward —
     one shuffle, no row amplification).  Oracle: DuckDB's native
     ASOF JOIN, an independent implementation of the same semantics."""
-    from .operators.events import asof_join
+    from s2_geometry_rust_spark.operators.events import asof_join
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     clicks = ev.filter(F.col("event_type") == "click")
@@ -1188,7 +1188,7 @@ def range_join_windows_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     its <=2 overlapped buckets, equi-join on (user, bucket), exact
     microsecond range filter; never the equi-join-then-filter
     explosion."""
-    from .operators.events import range_join_buckets
+    from s2_geometry_rust_spark.operators.events import range_join_buckets
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     clicks = ev.filter(F.col("event_type") == "click")
@@ -1215,7 +1215,7 @@ def events_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style continuous aggregate: hour/day/week counts and
     exact cent sums per event_type in ONE pass (GROUPING SETS — one
     scan + one shuffle instead of one scan per granularity)."""
-    from .operators.events import multi_granularity_rollup
+    from s2_geometry_rust_spark.operators.events import multi_granularity_rollup
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return multi_granularity_rollup(ev)
@@ -1230,7 +1230,7 @@ def ann_pq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-breaks — the whole encode -> ADC -> top-k pipeline replays
     bit-for-bit in SQL.  The kmeans-codebook path is the production
     default, recall-tested in pytest."""
-    from .operators.similarity import pq_topk
+    from s2_geometry_rust_spark.operators.similarity import pq_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 20)
@@ -1241,7 +1241,7 @@ def boilerplate_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style cross-document boilerplate coverage: tokens covered
     by any exact 8-gram that occurs in >= 2 distinct documents (the
     planted near-duplicate corpus makes the shared spans)."""
-    from .operators.text import boilerplate_coverage
+    from s2_geometry_rust_spark.operators.text import boilerplate_coverage
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return boilerplate_coverage(docs, n=8, min_docs=2)
@@ -1250,7 +1250,7 @@ def boilerplate_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pack_chunks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence-packing prep: fixed 64-token training chunks per
     document with tail-pad bookkeeping.  Zero-shuffle codegen."""
-    from .operators.text import chunk_documents
+    from s2_geometry_rust_spark.operators.text import chunk_documents
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return chunk_documents(docs, window=64)
@@ -1259,7 +1259,7 @@ def pack_chunks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kmv_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV distinct-token sketch per language, exact-replayable
     registers (md5-prefix hash) — estimate vs exact side by side."""
-    from .operators.sketches import kmv_distinct_per_group
+    from s2_geometry_rust_spark.operators.sketches import kmv_distinct_per_group
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return kmv_distinct_per_group(docs, k=64)
@@ -1270,8 +1270,8 @@ def cap_intersect_terms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern: (marker, cell) inverted-index terms -> one hash equi-join
     -> exact chord-space refine (cap.rs intersects).  The all-pairs
     DuckDB oracle catches both missed candidates and refine drift."""
-    from . import fixtures
-    from .operators.term_index import cap_intersect_join_terms
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.term_index import cap_intersect_join_terms
 
     q = fixtures.cap_regions(spark, catalog=fixtures.TERM_QUERY_CAPS)
     i = fixtures.cap_regions(spark, catalog=fixtures.TERM_INDEX_CAPS)
@@ -1283,8 +1283,8 @@ def closest_edge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     S2ClosestEdgeQuery surface (the reference stubs its query system).
     Broadcast exact path; the indexed variant is parity-tested against
     it in tests/test_closest_edge.py."""
-    from . import fixtures
-    from .operators.closest_edge import closest_edge_join
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.closest_edge import closest_edge_join
 
     pts = _derived_points(spark, sf_dir)
     edges = spark.createDataFrame(
@@ -1298,7 +1298,7 @@ def closest_edge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def wrs_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted reservoir sample (A-ES, deterministic hash randomness):
     20 docs per source, probability proportional to n_chars."""
-    from .operators.sampling import weighted_sample_per_group
+    from s2_geometry_rust_spark.operators.sampling import weighted_sample_per_group
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return weighted_sample_per_group(docs, k=20).select(
@@ -1310,7 +1310,7 @@ def dup_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicated-substring spans (Lee et al. exact-substring
     dedup, Spark-native): maximal runs of 8-token windows recurring in
     >= 2 distinct documents."""
-    from .operators.dedup import duplicate_spans
+    from s2_geometry_rust_spark.operators.dedup import duplicate_spans
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return duplicate_spans(docs, window=8, min_docs=2)
@@ -1321,7 +1321,7 @@ def hex_tile_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     side of the north rule's "H3/S2 index".  Fully JVM: projection,
     rotation, cube rounding and packing are Column arithmetic inside
     whole-stage codegen (functions/hexcols.py); one shuffle (the agg)."""
-    from .functions.hexcols import hex_token, with_hex_cell
+    from s2_geometry_rust_spark.functions.hexcols import hex_token, with_hex_cell
 
     pts = _derived_points(spark, sf_dir)
     return (
@@ -1336,7 +1336,7 @@ def hex_parent_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aperture-7 hierarchy rollup: assign at res 3, rebin each child's
     center at res 2 (center-containment parenthood, like H3
     child->parent), aggregate points and distinct children per parent."""
-    from .functions.hexcols import hex_token, with_hex_cell, with_hex_parent
+    from s2_geometry_rust_spark.functions.hexcols import hex_token, with_hex_cell, with_hex_parent
 
     pts = _derived_points(spark, sf_dir)
     df = with_hex_cell(pts, "x", "y", "z", 3, out="child_id", keep=[])
@@ -1362,14 +1362,14 @@ def hex_ring_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query side expands to its 19-cell disk (JVM explode of literal
     offsets) and broadcast-equi-joins the billion-row point side on
     hex_id — the point side is never shuffled."""
-    from .functions.hexcols import (
+    from s2_geometry_rust_spark.functions.hexcols import (
         hex_face,
         hex_pack,
         hex_q,
         hex_r,
         with_hex_cell,
     )
-    from .kernels.hexgrid import disk_offsets
+    from s2_geometry_rust_spark.kernels.hexgrid import disk_offsets
 
     res, k = 2, 2
     pts = with_hex_cell(
@@ -1424,7 +1424,7 @@ def tile_pyramid_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUPING SETS — one scan + Expand + single shuffle instead of one
     scan per zoom level (the heatmap-pyramid shape every map tiler
     needs; at 100 TB the saved scans dominate)."""
-    from .operators.tiling import tile_pyramid
+    from s2_geometry_rust_spark.operators.tiling import tile_pyramid
 
     pts = leaf_assign(spark, sf_dir)
     return tile_pyramid(pts, levels=(4, 8, 12))
@@ -1436,7 +1436,7 @@ def trajectory_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_orderkey, order = l_linenumber) with normalized derived
     directions; hop lengths are integer-scaled before summing so the
     totals are order-independent and exactly oracled."""
-    from .operators.geom_aggs import trajectory_stats
+    from s2_geometry_rust_spark.operators.geom_aggs import trajectory_stats
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     k = F.col("l_orderkey") * 7 + F.col("l_linenumber")
@@ -1466,7 +1466,7 @@ def group_quantiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression — the window touches only the distinct-length
     histogram, never the rows, so exact quantiles stay cheap at
     100 TB."""
-    from .operators.sketches import exact_group_quantiles
+    from s2_geometry_rust_spark.operators.sketches import exact_group_quantiles
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return exact_group_quantiles(docs, "lang", "n_chars")
@@ -1476,7 +1476,7 @@ def pack_sequences_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-chunk training-sequence packing (capacity 256) with a
     bucketed distributed prefix sum — the oracle's single-partition
     running sum checks the distributed decomposition exactly."""
-    from .operators.text import pack_sequences
+    from s2_geometry_rust_spark.operators.text import pack_sequences
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return pack_sequences(docs, capacity=256)
@@ -1487,7 +1487,7 @@ def bm25_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries — query terms broadcast into the postings, corpus shuffled
     exactly once, contributions integer-scaled so the ranking replays
     bit-for-bit in SQL."""
-    from .operators.retrieval import bm25_topk
+    from s2_geometry_rust_spark.operators.retrieval import bm25_topk
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     queries = docs.filter(F.col("doc_id").isin(3, 7, 11)).select(
@@ -1503,8 +1503,8 @@ def tile_modality_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     One extraction pass per span kind + one equi-join on doc_id + one
     aggregate shuffle; span-sequence order is untouched (the join reads
     spans, never rewrites them)."""
-    from .operators.multimodal import media_spans
-    from .sources import extract_geo_points, interleave_flat_documents
+    from s2_geometry_rust_spark.operators.multimodal import media_spans
+    from s2_geometry_rust_spark.sources import extract_geo_points, interleave_flat_documents
 
     flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
     inter = interleave_flat_documents(flat, with_media=True)
@@ -1542,7 +1542,7 @@ def _derived_traj_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tile_transitions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tile-boundary crossing flows at level 8 over the lineitem
     trajectories — the geofence/flow-graph primitive."""
-    from .operators.tiling import tile_transitions
+    from s2_geometry_rust_spark.operators.tiling import tile_transitions
 
     return tile_transitions(_derived_traj_cells(spark, sf_dir), level=8)
 
@@ -1551,7 +1551,7 @@ def od_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Origin-destination tile matrix at level 4: first/last fix per
     trajectory via min/max over (seq, tile) structs — aggregation only,
     no sort window."""
-    from .operators.tiling import od_matrix
+    from s2_geometry_rust_spark.operators.tiling import od_matrix
 
     return od_matrix(_derived_traj_cells(spark, sf_dir), level=4)
 
@@ -1561,8 +1561,8 @@ def corridor_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~16 deg) of any edge of 4 fixture routes — broadcast exact
     distances, per-(point, route) min as one partial aggregate,
     nano-integer threshold replayed exactly in SQL."""
-    from . import fixtures
-    from .operators.closest_edge import corridor_join
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.closest_edge import corridor_join
 
     pts = _derived_points(spark, sf_dir)
     edges = spark.createDataFrame(
@@ -1577,7 +1577,7 @@ def webmerc_tiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Web-mercator (slippy z/x/y) tile counts at zoom 6 — the raster
     web-map standard alongside the S2 quad and aperture-7 hex tilers;
     pure JVM trig, one shuffle."""
-    from .operators.tiling import webmerc_tile_counts
+    from s2_geometry_rust_spark.operators.tiling import webmerc_tile_counts
 
     return webmerc_tile_counts(_derived_latlng(spark, sf_dir), zoom=6)
 
@@ -1586,7 +1586,7 @@ def hex_focal_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hex focal sum (7-cell neighborhood smoothing) at res 2 — the
     neighbor fan-out runs on the per-hex counts table, never 7x the
     input."""
-    from .operators.tiling import hex_focal_counts
+    from s2_geometry_rust_spark.operators.tiling import hex_focal_counts
 
     return hex_focal_counts(_derived_points(spark, sf_dir), res=2)
 
@@ -1594,8 +1594,8 @@ def hex_focal_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def polygon_areas_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygon-with-holes areas (shell minus holes, nano-exact
     combination) over the polygon fixture catalog."""
-    from . import fixtures
-    from .operators.geom_aggs import polygon_areas
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.geom_aggs import polygon_areas
 
     return polygon_areas(fixtures.polygon_regions(spark))
 
@@ -1604,7 +1604,7 @@ def colocated_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trajectory co-location mining: pairs visiting >= 2 common
     level-6 tiles — distinct-first self-join on tile_id, AQE skew-join
     backstopped."""
-    from .operators.tiling import colocated_pairs
+    from s2_geometry_rust_spark.operators.tiling import colocated_pairs
 
     return colocated_pairs(
         _derived_traj_cells(spark, sf_dir), level=6, min_shared=2
@@ -1626,8 +1626,8 @@ def span_sequences_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the geo doubles, which no SQL engine reproduces byte-for-byte —
     documented gap, covered by pytest instead; coalesced to -1 so no
     column carries NULLs)."""
-    from .sources import interleave_flat_documents
-    from .sources.spans import _POINT_RE, explode_spans
+    from s2_geometry_rust_spark.sources import interleave_flat_documents
+    from s2_geometry_rust_spark.sources.spans import _POINT_RE, explode_spans
 
     flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
     s = explode_spans(interleave_flat_documents(flat, with_media=True))
@@ -1662,8 +1662,8 @@ def tile_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     level-8 tile-transition flow graph — an iterative graph algorithm
     whose every intermediate is an exact int64, replayed bit-for-bit
     by unrolled SQL rounds."""
-    from .operators.graph import pagerank_exact
-    from .operators.tiling import tile_transitions
+    from s2_geometry_rust_spark.operators.graph import pagerank_exact
+    from s2_geometry_rust_spark.operators.tiling import tile_transitions
 
     edges = tile_transitions(_derived_traj_cells(spark, sf_dir), level=8)
     pr = pagerank_exact(
@@ -1724,7 +1724,7 @@ def corpus_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-mixture targeting: a 60-doc sample matching a 4:3:2:1
     source mix, deterministic md5-ordered quotas (WindowGroupLimit
     partial top-k per source)."""
-    from .operators.sampling import corpus_mix
+    from s2_geometry_rust_spark.operators.sampling import corpus_mix
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return corpus_mix(docs, CORPUS_MIX, budget=60).select(
@@ -1736,7 +1736,7 @@ def rolling_anomalies_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 24-bucket anomaly detection over hourly event counts —
     exact-int window inputs make the rolling mean/var (and the flag)
     bit-identical across engines."""
-    from .operators.events import rolling_anomalies
+    from s2_geometry_rust_spark.operators.events import rolling_anomalies
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return rolling_anomalies(ev)
@@ -1746,7 +1746,7 @@ def vocab_topk_per_lang_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 tokens per language: per-group ranking via a partitioned
     window with the WindowGroupLimit cut (the global vocab_topk rides
     TakeOrderedAndProject instead — both shapes covered)."""
-    from .operators.vocab import vocab_topk_per_group
+    from s2_geometry_rust_spark.operators.vocab import vocab_topk_per_group
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return vocab_topk_per_group(docs, k=5)
@@ -1757,7 +1757,7 @@ def profile_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts + min/max per column) — the data-quality gate an ingest job
     runs before committing a partition; multiple COUNT(DISTINCT) share
     one scan via Expand."""
-    from .operators.profiling import profile_table
+    from s2_geometry_rust_spark.operators.profiling import profile_table
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return profile_table(
@@ -1769,7 +1769,7 @@ def geohash_tiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geohash (base-32) tile counts at precision 6 — the fourth
     tiling standard (S2 quad / hex / slippy / geohash) and the only
     one that is pure integer bit math end-to-end."""
-    from .operators.tiling import geohash_tile_counts
+    from s2_geometry_rust_spark.operators.tiling import geohash_tile_counts
 
     return geohash_tile_counts(_derived_latlng(spark, sf_dir), precision=6)
 
@@ -1779,7 +1779,7 @@ def hilbert_partition_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic md5-prefix sample) with per-partition balance stats
     — the explicit cell-id-range partitioning audit a 100-TB write
     runs; Spark's RangePartitioner design made replayable."""
-    from .plans.partitioning import hilbert_partition_stats
+    from s2_geometry_rust_spark.plans.partitioning import hilbert_partition_stats
 
     cells = leaf_assign(spark, sf_dir)
     return hilbert_partition_stats(cells, n_partitions=16)
@@ -1789,7 +1789,7 @@ def label_similarity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise label-centroid cosine similarity — exact-int sum
     vectors (cosine is scale-invariant), int64 dots/norms, one
     sqrt/divide at the end."""
-    from .operators.vocab import label_similarity
+    from s2_geometry_rust_spark.operators.vocab import label_similarity
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return label_similarity(emb)
@@ -1798,7 +1798,7 @@ def label_similarity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gate_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus filter-funnel report: survivors of each successive
     quality gate, ONE scan with conditional sums."""
-    from .operators.corpus import gate_funnel
+    from s2_geometry_rust_spark.operators.corpus import gate_funnel
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return gate_funnel(docs)
@@ -1807,7 +1807,7 @@ def gate_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def event_transitions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user event-type transition (Markov) counts — the
     behavioral-flow twin of tile_transitions."""
-    from .operators.events import event_transitions
+    from s2_geometry_rust_spark.operators.events import event_transitions
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return event_transitions(ev)
@@ -1816,7 +1816,7 @@ def event_transitions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quality_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quality-score histogram (10 buckets) — identical
     double trees both engines, so bucket-edge rows land identically."""
-    from .operators.text import quality_histogram
+    from s2_geometry_rust_spark.operators.text import quality_histogram
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return quality_histogram(docs)
@@ -1827,8 +1827,8 @@ def tile_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact micro-scaled quality-score sum (geo spans -> Hilbert tile,
     joined to the quality trees) — the map layer a curation dashboard
     renders."""
-    from .operators.text import with_quality_score
-    from .sources import extract_geo_points, interleave_flat_documents
+    from s2_geometry_rust_spark.operators.text import with_quality_score
+    from s2_geometry_rust_spark.sources import extract_geo_points, interleave_flat_documents
 
     flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pts = extract_geo_points(interleave_flat_documents(flat)).withColumn(
@@ -1862,7 +1862,7 @@ def source_bbox_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max doubles would fail an exact hash compare (min/max row
     CHOICE is stable, distinct coordinates are far apart; only the
     emitted bits drift)."""
-    from .sources import extract_geo_points, interleave_flat_documents
+    from s2_geometry_rust_spark.sources import extract_geo_points, interleave_flat_documents
 
     flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pts = extract_geo_points(interleave_flat_documents(flat)).withColumn(
@@ -2012,11 +2012,12 @@ def point_in_region_salted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rows are identical to point_in_region's — the oracle is the
     SAME independent exact-membership recomputation, which makes the
     green row a driver-checked proof that the salted plan changes the
-    shuffle layout and nothing else (tools/pip_skew_soak.py measures
-    the layout change itself: max/mean 12.56 -> 5.35 at 2M points)."""
-    from . import fixtures
-    from .operators.spatial_join import point_in_region_join_distributed
-    from .sources import extract_geo_points, interleave_flat_documents
+    shuffle layout and nothing else
+    (test_point_in_region_distributed_salted_matches_unsalted pins the
+    same equality on the test fixture)."""
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.spatial_join import point_in_region_join_distributed
+    from s2_geometry_rust_spark.sources import extract_geo_points, interleave_flat_documents
 
     flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pts = extract_geo_points(interleave_flat_documents(flat))
@@ -2038,7 +2039,7 @@ def near_dup_pairs_capped_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept-subset ordering, not a no-op.  The truncation is documented loss,
     and because it is a pure function of doc_id the DuckDB oracle
     replays the kept subset — and therefore the loss — exactly."""
-    from .operators.dedup import near_dedup_minhash
+    from s2_geometry_rust_spark.operators.dedup import near_dedup_minhash
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return near_dedup_minhash(docs, threshold=0.5, n_bands=32,
@@ -2089,7 +2090,7 @@ def pii_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planted PII is a deterministic function of doc_id replayed
     identically by the oracle, which re-counts with RE2 and re-derives
     every redacted byte (md5-compared)."""
-    from .operators.pii import pii_report
+    from s2_geometry_rust_spark.operators.pii import pii_report
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return pii_report(_plant_pii(docs))
@@ -2101,7 +2102,7 @@ def dedup_keep_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the argmax as an algebraic max(struct(quality, -doc_id)) — map-side
     combinable, no per-cluster sort; the oracle re-derives clusters via
     the recursive closure and ranks with row_number()."""
-    from .operators.dedup import dedup_keep_best
+    from s2_geometry_rust_spark.operators.dedup import dedup_keep_best
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return dedup_keep_best(docs, threshold=0.5, n_bands=32)
@@ -2242,7 +2243,7 @@ def ann_ivfpq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, replayed bit-for-bit by oracle.ann_ivfpq_sql; the
     kmeans-trained path is the production default, recall-tested in
     pytest."""
-    from .operators.similarity import ivfpq_topk
+    from s2_geometry_rust_spark.operators.similarity import ivfpq_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 20)
@@ -2257,7 +2258,7 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dot^2 * 10^8 vs t_num^2 * |a|^2 * |b|^2, decimal(38,0) vs the
     oracle's HUGEINT), so the survivor set is bit-exact across
     engines."""
-    from .operators.similarity import semantic_dedup
+    from s2_geometry_rust_spark.operators.similarity import semantic_dedup
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return semantic_dedup(emb, threshold=0.3, n_clusters=16,
@@ -2271,7 +2272,7 @@ def bloom_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     are flagged when all k md5-derived positions are set.  The Bloom
     false positives are part of the semantics and replay
     deterministically in the oracle (same md5 bytes both engines)."""
-    from .operators.vocab import bloom_decontaminate
+    from s2_geometry_rust_spark.operators.vocab import bloom_decontaminate
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bench = docs.filter(F.col("doc_id") < 10)
@@ -2294,7 +2295,7 @@ def classifier_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights stand in for trained coefficients, logit = exact int64 sum.
     ZERO shuffle: scan -> tokenize (JVM) -> one Arrow pass that hashes
     only the batch's UNIQUE words -> row-local reduction."""
-    from .operators.text import classifier_scores
+    from s2_geometry_rust_spark.operators.text import classifier_scores
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return classifier_scores(docs)
@@ -2309,7 +2310,7 @@ def classifier_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     logit with the threshold computed exactly (k-th largest logit via a
     cumulative window over the distinct-logit HISTOGRAM — never a
     raw-row sort; ties at the threshold kept)."""
-    from .operators.text import classifier_gate
+    from s2_geometry_rust_spark.operators.text import classifier_gate
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return classifier_gate(docs, keep_rate=0.6)
@@ -2335,7 +2336,7 @@ def incremental_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id (replayed identically by the oracle): the planted values
     repeat across the md5 split, so the exact_index AND exact_batch
     branches are genuinely exercised, not vacuously green."""
-    from .operators.dedup import incremental_dedup
+    from s2_geometry_rust_spark.operators.dedup import incremental_dedup
 
     d = F.col("doc_id")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").withColumn(
@@ -2361,7 +2362,7 @@ def lm_bigram_novelty_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-frequency — the count-based stand-in for LM perplexity that
     stays bit-exact across engines (ratios are single int64->double
     divisions, never accumulated floats)."""
-    from .operators.vocab import lm_bigram_novelty
+    from s2_geometry_rust_spark.operators.vocab import lm_bigram_novelty
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return lm_bigram_novelty(docs, min_df=30)
@@ -2378,7 +2379,7 @@ def snapshot_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id%10==1; new drops doc_id%10==0), so added / removed /
     changed / unchanged all genuinely occur; ONE full-outer md5
     equi-join, text bodies never leave the scan."""
-    from .operators.corpus import snapshot_diff
+    from s2_geometry_rust_spark.operators.corpus import snapshot_diff
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     d = F.col("doc_id")
@@ -2404,7 +2405,7 @@ def tile_counts_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute of the new snapshot bit-for-bit — and the oracle IS that
     full recompute (tile_counts_sql over the new snapshot), so the
     green row proves the maintenance algebra, not just plumbing."""
-    from .operators.tiling import apply_tile_count_delta, tile_counts
+    from s2_geometry_rust_spark.operators.tiling import apply_tile_count_delta, tile_counts
 
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         F.col("c_custkey").alias("k")
@@ -2441,7 +2442,7 @@ def collocations_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining (vocab.collocations): top-50 bigrams by
     exact-integer lift (>= 5 occurrences) — monotone-equivalent to PMI
     ranking but bit-exact (one double division, never a log)."""
-    from .operators.vocab import collocations
+    from s2_geometry_rust_spark.operators.vocab import collocations
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return collocations(docs, min_count=5, k=50)
@@ -2461,7 +2462,7 @@ def incremental_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the full-corpus recompute, and the oracle IS the
     full-corpus recursive closure (dedup_clusters_sql) — same pair
     universe, same components, same min-id labels."""
-    from .operators.dedup import (
+    from s2_geometry_rust_spark.operators.dedup import (
         duplicate_clusters,
         incremental_duplicate_clusters,
     )
@@ -2490,8 +2491,8 @@ def image_resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-output-row rows (exact int sums + one division).  The resize
     kernel is pluggable like the decoders; the fake grid stands in for
     PIL and replays bit-for-bit in SQL."""
-    from .operators.multimodal import media_spans, resize_images
-    from .sources import interleave_flat_documents
+    from s2_geometry_rust_spark.operators.multimodal import media_spans, resize_images
+    from s2_geometry_rust_spark.sources import interleave_flat_documents
 
     flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs = interleave_flat_documents(flat, with_media=True)
@@ -2503,8 +2504,8 @@ def frame_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (multimodal.sample_frames): every 4th frame of each video span,
     decimated INSIDE the scan partition (the full frame stream never
     hits an exchange)."""
-    from .operators.multimodal import media_spans, sample_frames
-    from .sources import interleave_flat_documents
+    from s2_geometry_rust_spark.operators.multimodal import media_spans, sample_frames
+    from s2_geometry_rust_spark.sources import interleave_flat_documents
 
     flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs = interleave_flat_documents(flat, with_media=True)
@@ -2525,7 +2526,7 @@ def ivf_assign_delta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     side — exact-integer argmin end-to-end (no float margins), d2
     emitted so every row self-verifies.  Zero shuffle: scan ->
     broadcast quantizer -> one Arrow matmul pass."""
-    from .operators.similarity import ivf_assign_delta
+    from s2_geometry_rust_spark.operators.similarity import ivf_assign_delta
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     split = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1) < "8"
@@ -2544,7 +2545,7 @@ def embedding_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     two corpus generations; exact int64 grid sums per dim, means and
     mean-delta as single double ops — the distribution-shift check a
     continuous embedding pipeline runs per delta batch."""
-    from .operators.similarity import embedding_drift
+    from s2_geometry_rust_spark.operators.similarity import embedding_drift
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     split = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1) < "8"
@@ -2561,8 +2562,8 @@ def union_expand_radius_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0.0003) = 13).  The fixture varies the per-union minimum level
     (8 + union_id % 5, union_id = point_id % 7) so both arms of the
     least() are live across the seven unions."""
-    from .functions import cell_id_from_xyz
-    from .operators.unions_ops import (
+    from s2_geometry_rust_spark.functions import cell_id_from_xyz
+    from s2_geometry_rust_spark.operators.unions_ops import (
         expand_with_radius_grouped,
         normalize_grouped,
     )
@@ -2599,8 +2600,8 @@ def loop_nearest_boundary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics) per (derived point, fixture loop): nano-rounded
     boundary distance and the exact winning vertex (earliest on
     ties, the reference's strict-< scan)."""
-    from . import fixtures
-    from .operators.geom_aggs import nearest_boundary_join
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.operators.geom_aggs import nearest_boundary_join
 
     return nearest_boundary_join(
         _derived_points(spark, sf_dir),
@@ -2618,8 +2619,8 @@ def union_expand_radius_dist_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen +/- step candidates in the usk domain + the distributed
     normalize fixpoint, no whole-union-per-task requirement.  Same
     fixture, same oracle SQL as the grouped query."""
-    from .functions import cell_id_from_xyz
-    from .operators.unions_ops import (
+    from s2_geometry_rust_spark.functions import cell_id_from_xyz
+    from s2_geometry_rust_spark.operators.unions_ops import (
         expand_with_radius_distributed,
         normalize_grouped,
     )

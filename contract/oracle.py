@@ -15,10 +15,26 @@ two's-complement bit arithmetic, identical to the u64 semantics.
 
 from __future__ import annotations
 
-from .kernels.hilbert import lookup_pos_sql_values
+from s2_geometry_rust_spark.kernels.hilbert import LOOKUP_IJ, LOOKUP_POS
 
 U63 = 9223372036854775808  # 2^63
 U64 = 18446744073709551616  # 2^64
+
+
+def lookup_pos_sql_values() -> str:
+    """The LOOKUP_POS table as a SQL VALUES list ``(idx, val)``.
+
+    Used to embed the Hilbert encoding into DuckDB oracle SQL so that even
+    the cell-id math itself can be verified by an independent engine.
+    """
+    return ", ".join(f"({i}, {int(v)})" for i, v in enumerate(LOOKUP_POS))
+
+
+def lookup_ij_sql_values() -> str:
+    """The LOOKUP_IJ (inverse) table as a SQL VALUES list ``(idx, val)``
+    — lets oracle SQL run the exact Hilbert inverse (cell id -> face,i,j)
+    and therefore recompute true cell geometry independently."""
+    return ", ".join(f"({i}, {int(v)})" for i, v in enumerate(LOOKUP_IJ))
 
 
 def derived_points_sql(table: str = "customer", key: str = "c_custkey") -> str:
@@ -794,8 +810,8 @@ def _loop_edge_rows(names: list[str]) -> list[tuple]:
     as operators/shape_index.py:edges_from_loops."""
     import numpy as np
 
-    from . import fixtures
-    from .kernels import latlng as lk
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.kernels import latlng as lk
 
     rows = []
     for sid, (name, pts) in enumerate(sorted(
@@ -864,7 +880,7 @@ def chain_crossing_pairs_sql(level: int = 0) -> str:
     import numpy as np
 
     from .engine_queries import MULTI_CHAIN_A, MULTI_CHAIN_B, POLYLINE_LINES
-    from .kernels import latlng as lk
+    from s2_geometry_rust_spark.kernels import latlng as lk
 
     shapes = {
         "a_lines": [POLYLINE_LINES[n] for n in MULTI_CHAIN_A],
@@ -925,7 +941,7 @@ def polyline_crossings_sql() -> str:
     import numpy as np
 
     from .engine_queries import POLYLINE_LINES
-    from .kernels import latlng as lk
+    from s2_geometry_rust_spark.kernels import latlng as lk
 
     rows = []
     for name, pts in POLYLINE_LINES.items():
@@ -979,8 +995,8 @@ def loop_stats_sql() -> str:
 
     import numpy as np
 
-    from . import fixtures
-    from .kernels import latlng as lk
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.kernels import latlng as lk
 
     rows = []
     for name, pts in fixtures.LOOPS.items():
@@ -1147,8 +1163,8 @@ def point_in_polygon_sql(seed: int = 42) -> str:
     389-393)."""
     import numpy as np
 
-    from . import fixtures
-    from .kernels import latlng as lk
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.kernels import latlng as lk
 
     rows = []
     for region_id, loop_list in fixtures.POLYGONS.items():
@@ -1286,9 +1302,9 @@ def point_in_region_sql(loop_names: list[str] | None = None,
                         seed: int = 42) -> str:
     import numpy as np
 
-    from . import fixtures
-    from .kernels import latlng as lk
-    from .kernels.caps import S2Cap
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.kernels import latlng as lk
+    from s2_geometry_rust_spark.kernels.caps import S2Cap
 
     loop_names = loop_names or ["arctic_80", "antarctic_80", "candy_cane",
                                 "north_hemi"]
@@ -1491,8 +1507,6 @@ def conservative_cap_covering_sql(max_cells: int = 64, depth: int = 10,
     may-intersecting children, terminal (fully contained) cells frozen,
     stop when the budget would be exceeded, then the normalize
     sibling-collapse."""
-    from .kernels.hilbert import lookup_ij_sql_values
-
     face_ids = ", ".join(
         f"({int(__import__('numpy').int64(__import__('numpy').uint64(f) << __import__('numpy').uint64(61) | __import__('numpy').uint64(1 << 60)))})"
         for f in range(6)
@@ -1669,8 +1683,8 @@ def _face_cell_rows() -> dict[str, str]:
     tables and the cap parameters in point_in_region_sql."""
     import math
 
-    from .kernels import cellid as ci
-    from .kernels.cells import S2Cell
+    from s2_geometry_rust_spark.kernels import cellid as ci
+    from s2_geometry_rust_spark.kernels.cells import S2Cell
 
     cells, verts, edges, rects = [], [], [], []
     corner_uv = [(-1.0, -1.0), (1.0, -1.0), (1.0, 1.0), (-1.0, 1.0)]
@@ -1763,10 +1777,10 @@ def covering_cells_sql(max_cells: int = 8) -> str:
     intersection vs the vertex-only face rect bound."""
     import numpy as np
 
-    from . import fixtures
-    from .kernels import latlng as lk
-    from .kernels.caps import S2Cap
-    from .kernels.rects import S2LatLngRect
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.kernels import latlng as lk
+    from s2_geometry_rust_spark.kernels.caps import S2Cap
+    from s2_geometry_rust_spark.kernels.rects import S2LatLngRect
 
     fc = _face_cell_rows()
 
@@ -1909,7 +1923,7 @@ FROM member m JOIN fcells fc ON fc.face = m.face
 def bpe_token_counts_sql() -> str:
     """Mirror of operators/text.py:with_bpe_token_count (RE2 and Java
     regex agree on this lookahead-free pattern)."""
-    from .operators.text import BPE_PATTERN
+    from s2_geometry_rust_spark.operators.text import BPE_PATTERN
 
     return (f"SELECT doc_id, len(regexp_extract_all(text, "
             f"$${BPE_PATTERN}$$)) AS n_bpe_tokens FROM documents")
@@ -1984,7 +1998,7 @@ def ann_lsh_sql(k: int = 10, n_queries: int = 20, n_bits: int = 8,
     compares ids/ranks only under the same >=1e-12 adjacent-cosine-gap
     fixture margin as ann_cosine (a candidate subset inherits the
     full-pair set's adjacent gaps)."""
-    from .operators.similarity import rademacher_signs
+    from s2_geometry_rust_spark.operators.similarity import rademacher_signs
 
     signs = rademacher_signs(n_tables, n_bits, dim, seed)
     plane_rows = ",\n    ".join(
@@ -2350,7 +2364,7 @@ def loop_nearest_boundary_sql(table: str = "customer",
     selection is bit-deterministic on both engines.  ``points_sql``
     replaces the derived points with any (point_id, x, y, z)
     relation."""
-    from . import fixtures
+    from s2_geometry_rust_spark import fixtures
 
     # CAST('<repr>' AS DOUBLE), not <repr>::DOUBLE: DuckDB parses a
     # bare numeric literal as DECIMAL first, double-rounding the last
@@ -2478,7 +2492,7 @@ def _line_edge_rows(lines: dict) -> list[tuple]:
     same vertex math the contract queries feed to Spark."""
     import numpy as np
 
-    from .kernels import latlng as lk
+    from s2_geometry_rust_spark.kernels import latlng as lk
 
     rows = []
     for name, pts in lines.items():
@@ -2667,7 +2681,7 @@ def _loop_edge_rows_from(loops: dict) -> list[tuple]:
     the same vertex math as operators/shape_index.py:edges_from_loops."""
     import numpy as np
 
-    from .kernels import latlng as lk
+    from s2_geometry_rust_spark.kernels import latlng as lk
 
     rows = []
     for sid, (name, pts) in enumerate(sorted(loops.items())):
@@ -2950,9 +2964,9 @@ def region_contains_loop_sql(a_loops: list[str], b_loops: list[str]) -> str:
     far from the threshold, and same-name pairs are excluded."""
     import numpy as np
 
-    from . import fixtures
-    from .kernels import latlng as lk
-    from .kernels.caps import S2Cap
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.kernels import latlng as lk
+    from s2_geometry_rust_spark.kernels.caps import S2Cap
 
     def loop_xyz(name):
         pts = fixtures.LOOPS[name]
@@ -3022,8 +3036,8 @@ HAVING count(*) = n_b AND a_id <> b_id
 def _loop_edge_vals(names: list[str]) -> str:
     import numpy as np
 
-    from . import fixtures
-    from .kernels import latlng as lk
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.kernels import latlng as lk
 
     rows = []
     for name in names:
@@ -3045,8 +3059,8 @@ def _loop_edge_vals(names: list[str]) -> str:
 def _loop_vert_vals(names: list[str]) -> str:
     import numpy as np
 
-    from . import fixtures
-    from .kernels import latlng as lk
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.kernels import latlng as lk
 
     rows = []
     for name in names:
@@ -3505,9 +3519,9 @@ def cap_intersect_terms_sql() -> str:
     candidate or a refine divergence."""
     import numpy as np
 
-    from . import fixtures
-    from .kernels import latlng as lk
-    from .kernels.caps import S2Cap
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.kernels import latlng as lk
+    from s2_geometry_rust_spark.kernels.caps import S2Cap
 
     def vals(catalog) -> str:
         rows = []
@@ -3555,7 +3569,7 @@ def closest_edge_sql(table: str = "customer", key: str = "c_custkey") -> str:
     of operators/closest_edge.py:closest_edge_join — same formula, same
     op order, only +,-,*,/,sqrt: IEEE-identical on both engines).  The
     edge endpoints are the fixture's exact doubles inlined as VALUES."""
-    from . import fixtures
+    from s2_geometry_rust_spark import fixtures
 
     evals = ", ".join(
         f"({i}, {ax!r}::DOUBLE, {ay!r}::DOUBLE, {az!r}::DOUBLE,"
@@ -3638,7 +3652,7 @@ WHERE sample_rank <= {k}
 # ---------------------------------------------------------------------------
 
 def _hex_consts(res: int):
-    from .kernels import hexgrid as hg
+    from s2_geometry_rust_spark.kernels import hexgrid as hg
     return {k: repr(v[res]) for k, v in
             dict(c=hg.COS, s=hg.SIN, c1=hg.C1, c2=hg.C2, c3=hg.C3,
                  d1=hg.D1, d2=hg.D2, d3=hg.D3).items()}
@@ -4065,7 +4079,7 @@ def corridor_join_sql(d2_max: float, n_routes: int = 4,
     formula and op order as closest_edge_sql, but per-edge distances
     are nano-rounded BEFORE the per-(point, route) min (monotone, so
     equal to rounding after) and the threshold is an exact integer."""
-    from . import fixtures
+    from s2_geometry_rust_spark import fixtures
 
     thr = int(round(d2_max * 1e9))
     evals = ", ".join(
@@ -4148,7 +4162,7 @@ def hex_focal_counts_sql(res: int = 2, table: str = "customer",
                          key: str = "c_custkey") -> str:
     """Mirror of tiling.hex_focal_counts: per-hex counts spread to the
     7-cell lattice disk and re-summed, face-local, in axial space."""
-    from .kernels.hexgrid import disk_offsets
+    from s2_geometry_rust_spark.kernels.hexgrid import disk_offsets
 
     frag = (_face_uv_fragment(derived_points_sql(table, key), "")
             + "," + _hex_axial_fragment("uv", res, "", ["point_id"]))
@@ -4174,8 +4188,8 @@ def polygon_areas_sql() -> str:
 
     import numpy as np
 
-    from . import fixtures
-    from .kernels import latlng as lk
+    from s2_geometry_rust_spark import fixtures
+    from s2_geometry_rust_spark.kernels import latlng as lk
 
     rows = []
     for region_id, loop_list in fixtures.POLYGONS.items():

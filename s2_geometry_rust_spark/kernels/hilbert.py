@@ -66,19 +66,3 @@ def _init_lookup_cell(level: int, i: int, j: int, orig_orientation: int,
 
 for _orient in (0, SWAP_MASK, INVERT_MASK, SWAP_MASK | INVERT_MASK):
     _init_lookup_cell(0, 0, 0, _orient, 0, _orient)
-
-
-def lookup_pos_sql_values() -> str:
-    """The LOOKUP_POS table as a SQL VALUES list ``(idx, val)``.
-
-    Used to embed the Hilbert encoding into DuckDB oracle SQL so that even
-    the cell-id math itself can be verified by an independent engine.
-    """
-    return ", ".join(f"({i}, {int(v)})" for i, v in enumerate(LOOKUP_POS))
-
-
-def lookup_ij_sql_values() -> str:
-    """The LOOKUP_IJ (inverse) table as a SQL VALUES list ``(idx, val)``
-    — lets oracle SQL run the exact Hilbert inverse (cell id -> face,i,j)
-    and therefore recompute true cell geometry independently."""
-    return ", ".join(f"({i}, {int(v)})" for i, v in enumerate(LOOKUP_IJ))

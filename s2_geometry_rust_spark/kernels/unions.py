@@ -37,38 +37,15 @@ def are_siblings(a: int, b: int, c: int, d: int) -> bool:
             and (c & mask) == d_masked and not is_face)
 
 
-def normalize_scan(ids) -> np.ndarray:
-    """Sort, drop contained, collapse 4 siblings -> parent; the exact
-    linear scan of cell_union.rs:600-629.  Parity reference for the
-    vectorized ``normalize`` below (the normalized form is canonical,
-    so both compute identical arrays — pinned by
-    tests/test_kernels_union_port_random.py)."""
-    ids = _arr(ids)
-    ids = np.sort(ids)
-    out: list[int] = []
-    for raw in ids:
-        cur = int(raw)
-        if out and bool(ci.contains(U(out[-1]), U(cur))):
-            continue
-        while out and bool(ci.contains(U(cur), U(out[-1]))):
-            out.pop()
-        while len(out) >= 3 and are_siblings(out[-3], out[-2], out[-1], cur):
-            lv = int(ci.level(U(cur)))
-            cur = int(ci.parent(U(cur), lv - 1))
-            del out[-3:]
-        out.append(cur)
-    return np.array(out, dtype=np.uint64)
-
-
 _FACE_LSB = U(1) << U(60)
 
 
 def normalize_by_owner(cells, owner, n: int) -> list[np.ndarray]:
     """Normalize many unions at once: ``cells[i]`` belongs to union
     ``owner[i]`` (in ``range(n)``); returns the n normalized unions,
-    each identical to ``normalize_scan`` of its own cells (the
-    normalized form is unique: sorted, containment-free, no four
-    complete siblings).  O(rounds) whole-array numpy passes instead of
+    each identical to the linear scan of cell_union.rs:600-629 over
+    its own cells (the normalized form is unique: sorted,
+    containment-free, no four complete siblings).  O(rounds) whole-array numpy passes instead of
     a per-cell Python loop or a per-union call.
 
     1. drop contained and duplicate cells: cell ranges are laminar
@@ -134,8 +111,8 @@ def normalize_by_owner(cells, owner, n: int) -> list[np.ndarray]:
 
 def normalize(ids) -> np.ndarray:
     """Sort, drop contained, collapse 4 siblings -> parent: the
-    one-union call of ``normalize_by_owner``, identical to
-    ``normalize_scan``."""
+    one-union call of ``normalize_by_owner``, identical to the linear
+    scan of cell_union.rs:600-629."""
     ids = _arr(ids)
     return normalize_by_owner(ids, np.zeros(len(ids), np.int64), 1)[0]
 
@@ -294,27 +271,10 @@ def intersection_with_cell_id(ids, cell: int) -> np.ndarray:
     return np.array(out, dtype=np.uint64)
 
 
-def expand_scan(ids, expand_level: int) -> np.ndarray:
-    """Promote + add (placeholder) neighbors, then normalize
-    (cell_union.rs:427-444; neighbors are id-space steps per
-    cell_id.rs:696-722).  Parity reference for the vectorized
-    ``expand`` below (identical output — the order the scan appends in
-    is erased by normalize's sort)."""
-    ids = _arr(ids)
-    level_lsb = int(ci.lsb_for_level(expand_level))
-    output: list[int] = []
-    for raw in ids[::-1]:
-        cur = int(raw)
-        if int(ci.lsb(U(cur))) < level_lsb:
-            cur = int(ci.parent_at_level(U(cur), expand_level))
-        output.append(cur)
-        output.extend(ci.append_all_neighbors(cur, expand_level))
-    return normalize(np.array(output, dtype=np.uint64))
-
-
 def expand(ids, expand_level: int) -> np.ndarray:
-    """Vectorized expand — same promotion + placeholder-neighbor
-    semantics as ``expand_scan``, as numpy passes.  After promotion
+    """Vectorized expand — the promotion + placeholder-neighbor
+    semantics of cell_union.rs:427-444 (neighbors are id-space steps
+    per cell_id.rs:696-722), as numpy passes.  After promotion
     every cell is at or above expand_level, so the scan's
     parent_at_level inside append_all_neighbors is the identity and
     the +/- step candidates come straight off the promoted ids."""
@@ -372,29 +332,6 @@ def leaf_cells_covered(ids) -> int:
         return 0
     inv = (ci.MAX_LEVEL - ci.level(ids)).astype(np.uint64)
     return int(np.sum(_U1 << (inv << _U1), dtype=np.uint64))
-
-
-def from_begin_end_reference(begin: int, end_: int, max_iters: int = 100000) -> np.ndarray:
-    """Greedy maximum_tile range tiling, faithful to cell_union.rs:171-190.
-
-    WARNING: the reference's maximum_tile (cell_id.rs:673-685) never
-    checks the *current* tile against ``end``, so this diverges on
-    unaligned ranges exactly like the reference does (its tests only
-    exercise empty and single-leaf ranges).  ``max_iters`` guards the
-    runaway; use :func:`from_begin_end` for engine work.
-    """
-    out = []
-    cur = begin
-    iters = 0
-    while cur != end_ and iters < max_iters:
-        tile = ci.maximum_tile(cur, end_)
-        out.append(tile)
-        cur = int(ci.next_id(U(tile)))
-        iters += 1
-    if cur != end_:
-        raise ValueError("from_begin_end_reference diverged (unaligned range; "
-                         "reference quirk) — use from_begin_end")
-    return np.array(out, dtype=np.uint64)
 
 
 def _maximum_tile_safe(id_: int, end_: int) -> int:

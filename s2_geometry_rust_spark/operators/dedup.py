@@ -267,8 +267,9 @@ def lsh_candidate_pairs(signatures: DataFrame, n_bands: int = 16,
     boilerplate floods stay mutually-duplicate within the cap while
     the quadratic tail is cut.  Deterministic, so capped results are
     reproducible run-to-run (same design as
-    tiling.colocated_pairs(max_per_tile=...); tools/lsh_cap_soak.py
-    measures the worst-bucket bound and the recall delta).
+    tiling.colocated_pairs(max_per_tile=...);
+    tests/test_pipeline_round4.py::test_lsh_max_per_bucket_bounds_flood
+    pins the worst-bucket bound and the surviving genuine pair).
     """
     banded = _band_signatures(signatures, n_bands, n_perm, max_per_bucket)
     a = banded.alias("a")

@@ -327,7 +327,8 @@ def cosine_threshold_pairs_lsh(vectors: DataFrame, threshold: float,
     ``max_per_bucket`` vectors in deterministic md5 order, bounding
     the worst bucket at cap^2/2 with documented recall loss (a pair
     is missed only if dropped from EVERY shared bucket — see
-    dedup.lsh_candidate_pairs and tools/lsh_cap_soak.py)."""
+    dedup.lsh_candidate_pairs and
+    tests/test_pipeline_round4.py::test_lsh_max_per_bucket_bounds_flood)."""
     b = with_hyperplane_buckets(vectors, n_bits, dim, n_tables, seed,
                                 id_col, vec_col)
     if max_per_bucket is not None:

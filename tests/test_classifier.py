@@ -141,7 +141,7 @@ def test_oracle_logit_is_int64():
     duckdb = pytest.importorskip("duckdb")
     import pandas as pd
 
-    from s2_geometry_rust_spark.oracle import (
+    from contract.oracle import (
         classifier_gate_sql,
         classifier_scores_sql,
     )

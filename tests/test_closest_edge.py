@@ -114,7 +114,7 @@ def test_oracle_nano_margins():
     DuckDB ulp drift cannot flip the hash comparison."""
     import duckdb
 
-    from s2_geometry_rust_spark import oracle
+    from contract import oracle
 
     con = duckdb.connect()
     con.execute("CREATE VIEW customer AS SELECT * FROM "

@@ -50,8 +50,8 @@ def test_near_dup_cluster_keeps_one(spark):
 
 def test_corpus_filter_oracle_sf0001(spark, sf_dir):
     duckdb = pytest.importorskip("duckdb")
-    from s2_geometry_rust_spark import oracle
-    from s2_geometry_rust_spark.engine_queries import QUERIES
+    from contract import oracle
+    from contract.engine_queries import QUERIES
 
     got = (
         QUERIES["corpus_filter"](spark, sf_dir)

@@ -26,7 +26,7 @@ def test_snapshot_diff_statuses(spark):
 
 
 def test_snapshot_diff_contract_covers_all_statuses(spark, sf_dir):
-    from s2_geometry_rust_spark.engine_queries import snapshot_diff_q
+    from contract.engine_queries import snapshot_diff_q
 
     st = {r["status"] for r in snapshot_diff_q(spark, sf_dir).collect()}
     assert st == {"added", "removed", "changed", "unchanged"}

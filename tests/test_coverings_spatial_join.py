@@ -241,8 +241,7 @@ def test_conservative_coverings_rows_match_per_region():
 
 def test_point_in_region_distributed_salted_matches_unsalted(spark, regions, points):
     """Explicit hot-cell salting is a pure repartitioning: the salted
-    distributed join must emit exactly the unsalted pair set (the soak
-    tools/pip_skew_soak.py measures the skew histogram at 2M points)."""
+    distributed join must emit exactly the unsalted pair set."""
     from s2_geometry_rust_spark.operators.spatial_join import (
         point_in_region_join_distributed,
     )

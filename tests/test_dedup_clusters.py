@@ -129,8 +129,8 @@ def test_dedup_clusters_oracle_sf0001(spark, sf_dir):
     """Bit-for-bit vs the DuckDB recursive-closure oracle at sf0.001
     (the driver gate repeats this at sf0.01)."""
     duckdb = pytest.importorskip("duckdb")
-    from s2_geometry_rust_spark import oracle
-    from s2_geometry_rust_spark.engine_queries import QUERIES
+    from contract import oracle
+    from contract.engine_queries import QUERIES
 
     got = (
         QUERIES["dedup_clusters"](spark, sf_dir)

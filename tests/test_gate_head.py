@@ -3,7 +3,7 @@ queries, and the check that guards the list naming them."""
 
 import pytest
 
-from s2_geometry_rust_spark import engine_queries as eq
+from contract import engine_queries as eq
 
 # The first 50 queries the contract's correctness gate checks, pinned so
 # a change to the gated set is a deliberate edit here and in _GATE_HEAD.

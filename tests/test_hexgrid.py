@@ -169,7 +169,7 @@ def test_plan_stays_codegen_sized(spark):
     pushdown), silently dropping the stage to interpreted eval.  The
     chained-projection helpers plus the null-safe ring join keep every
     executed plan small; assert on plan size as the proxy."""
-    from s2_geometry_rust_spark import engine_queries as eq
+    from contract import engine_queries as eq
 
     sf = "/root/testdata/sf0.001"
     for name in ("hex_tile_counts", "hex_parent_rollup", "hex_ring_counts"):

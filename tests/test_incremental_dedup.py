@@ -199,7 +199,7 @@ def test_null_text_streaming_twin_agrees(spark, tmp_path):
 
 
 def test_contract_fixture_exercises_all_branches(spark, sf_dir):
-    from s2_geometry_rust_spark.engine_queries import incremental_dedup_q
+    from contract.engine_queries import incremental_dedup_q
 
     out = incremental_dedup_q(spark, sf_dir).collect()
     kinds = {r["decision"] for r in out}

@@ -21,6 +21,29 @@ def pt_deg(lat, lng):
     return float(x), float(y), float(z)
 
 
+def from_begin_end_reference(begin: int, end_: int, max_iters: int = 100000) -> np.ndarray:
+    """Greedy maximum_tile range tiling, faithful to cell_union.rs:171-190.
+
+    WARNING: the reference's maximum_tile (cell_id.rs:673-685) never
+    checks the *current* tile against ``end``, so this diverges on
+    unaligned ranges exactly like the reference does (its tests only
+    exercise empty and single-leaf ranges).  ``max_iters`` guards the
+    runaway; use :func:`unions.from_begin_end` for engine work.
+    """
+    out = []
+    cur = begin
+    iters = 0
+    while cur != end_ and iters < max_iters:
+        tile = C.maximum_tile(cur, end_)
+        out.append(tile)
+        cur = int(C.next_id(U(tile)))
+        iters += 1
+    if cur != end_:
+        raise ValueError("from_begin_end_reference diverged (unaligned range; "
+                         "reference quirk) — use from_begin_end")
+    return np.array(out, dtype=np.uint64)
+
+
 @pytest.fixture(scope="module")
 def fixture_loops():
     """The reference's S2LoopTestData catalog
@@ -168,8 +191,8 @@ class TestCellUnion:
         # the reference's own cases (test_s2cell_union_port.rs:413-427):
         # empty range and a single leaf
         begin = C.begin(30)
-        assert len(unions.from_begin_end_reference(begin, begin)) == 0
-        u = unions.from_begin_end_reference(begin, int(C.next_id(U(begin))))
+        assert len(from_begin_end_reference(begin, begin)) == 0
+        u = from_begin_end_reference(begin, int(C.next_id(U(begin))))
         assert len(u) > 0
         assert unions.is_normalized(u)
         # unaligned ranges diverge in the reference (maximum_tile never
@@ -177,7 +200,7 @@ class TestCellUnion:
         f2 = U(C.from_face(2))
         lo = int(C.range_min(f2))
         with pytest.raises(ValueError):
-            unions.from_begin_end_reference(lo, lo + 22, max_iters=100)
+            from_begin_end_reference(lo, lo + 22, max_iters=100)
 
     def test_from_min_max_engine(self):
         f2 = U(C.from_face(2))

@@ -141,7 +141,7 @@ def test_operator_matches_kernel(spark, sf_dir):
     """The distributed codegen join == kernel methods per (point,
     loop), bit-for-bit on the projection and to the nano grid on the
     distance."""
-    from s2_geometry_rust_spark.engine_queries import (
+    from contract.engine_queries import (
         _derived_points,
         loop_nearest_boundary_q,
     )
@@ -174,7 +174,7 @@ def test_point_on_a_vertex_gives_no_nan(spark):
     from s2_geometry_rust_spark.operators.geom_aggs import (
         nearest_boundary_join,
     )
-    from s2_geometry_rust_spark.oracle import loop_nearest_boundary_sql
+    from contract.oracle import loop_nearest_boundary_sql
 
     rows = fixtures.loop_vertex_rows(fixtures.NEAREST_BOUNDARY_LOOPS)
     cane = [r for r in rows if r[0] == "candy_cane"]

@@ -17,12 +17,13 @@ from __future__ import annotations
 import duckdb
 import numpy as np
 
-from s2_geometry_rust_spark import fixtures, oracle
-from s2_geometry_rust_spark.engine_queries import (
+from contract import oracle
+from contract.engine_queries import (
     STRICT_A_LOOPS,
     STRICT_B_LOOPS,
     loop_intersections_strict_q,
 )
+from s2_geometry_rust_spark import fixtures
 from s2_geometry_rust_spark.kernels import latlng as lk
 from s2_geometry_rust_spark.kernels import predicates as pred
 from s2_geometry_rust_spark.kernels.loops import S2Loop

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from s2_geometry_rust_spark.engine_queries import (
+from contract.engine_queries import (
     EDGE_CROSS_A_SIDS,
     EDGE_CROSS_LEVEL,
     EDGE_CROSS_LOOPS,
@@ -216,7 +216,7 @@ def test_builder_oracle_margins():
        oracle's same-grid-site rule."""
     import duckdb
 
-    from s2_geometry_rust_spark import oracle
+    from contract import oracle
 
     for sf_dir in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
         con = duckdb.connect()
@@ -315,7 +315,7 @@ def test_covering_oracle_matches_kernel_exactly():
     import duckdb
     import pandas as pd
 
-    from s2_geometry_rust_spark import oracle
+    from contract import oracle
     from s2_geometry_rust_spark.kernels.coverer import (
         CovererOptions, S2RegionCoverer)
 

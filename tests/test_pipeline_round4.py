@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 def test_tile_pyramid_matches_per_level_counts(spark):
     """The one-pass GROUPING SETS pyramid must equal the per-level
     tile_counts run separately."""
-    from s2_geometry_rust_spark.engine_queries import leaf_assign
+    from contract.engine_queries import leaf_assign
     from s2_geometry_rust_spark.operators.tiling import (
         tile_counts,
         tile_pyramid,
@@ -37,7 +37,7 @@ def test_tile_pyramid_matches_per_level_counts(spark):
 
 def test_tile_pyramid_single_pass_plan(spark):
     """One Expand node and one shuffle — not one scan per level."""
-    from s2_geometry_rust_spark.engine_queries import leaf_assign
+    from contract.engine_queries import leaf_assign
     from s2_geometry_rust_spark.operators.tiling import tile_pyramid
 
     pts = leaf_assign(spark, "/root/testdata/sf0.001")
@@ -286,7 +286,7 @@ def test_bm25_corpus_single_shuffle_of_postings(spark):
 def test_tile_modality_counts_totals(spark):
     """Every flat doc contributes exactly one (geo, media) pair, and
     the per-modality totals must match the media router's own counts."""
-    from s2_geometry_rust_spark.engine_queries import tile_modality_counts_q
+    from contract.engine_queries import tile_modality_counts_q
     from s2_geometry_rust_spark.operators.multimodal import media_spans
     from s2_geometry_rust_spark.sources import interleave_flat_documents
 
@@ -372,7 +372,7 @@ def test_corridor_join_consistent_with_closest_edge(spark):
     distances: a point is in a route's corridor iff its min distance
     over that route's edges is within the threshold."""
     from s2_geometry_rust_spark import fixtures
-    from s2_geometry_rust_spark.engine_queries import _derived_points
+    from contract.engine_queries import _derived_points
     from s2_geometry_rust_spark.operators.closest_edge import (
         corridor_join,
         edge_chord2_cols,
@@ -437,7 +437,7 @@ def test_webmerc_tile_known_points(spark):
 
 
 def test_webmerc_counts_conserve(spark):
-    from s2_geometry_rust_spark.engine_queries import webmerc_tiles_q
+    from contract.engine_queries import webmerc_tiles_q
 
     sf = "/root/testdata/sf0.001"
     got = webmerc_tiles_q(spark, sf)
@@ -451,7 +451,7 @@ def test_hex_focal_counts_semantics(spark):
     verified against a brute python neighborhood on real data; total
     mass is amplified exactly 7x (every count contributes to 7 cells,
     face-locally)."""
-    from s2_geometry_rust_spark.engine_queries import _derived_points
+    from contract.engine_queries import _derived_points
     from s2_geometry_rust_spark.functions.hexcols import with_hex_cell
     from s2_geometry_rust_spark.kernels.hexgrid import disk_offsets
     from s2_geometry_rust_spark.operators.tiling import hex_focal_counts
@@ -549,7 +549,7 @@ def test_span_sequences_invariant_and_layout(spark):
     per doc in (text, geo, media) order, geo parse-back non-null, text
     md5 only on text spans, media ref only on media spans; and the
     distributed invariant checker agrees the sequences are intact."""
-    from s2_geometry_rust_spark.engine_queries import span_sequences_q
+    from contract.engine_queries import span_sequences_q
     from s2_geometry_rust_spark.sources import interleave_flat_documents
     from s2_geometry_rust_spark.sources.spans import verify_span_sequence
 
@@ -632,7 +632,7 @@ def test_haversine_pairs_kernel_parity(spark):
     nano rounding."""
     import numpy as np
 
-    from s2_geometry_rust_spark.engine_queries import haversine_pairs_q
+    from contract.engine_queries import haversine_pairs_q
     from s2_geometry_rust_spark.kernels import latlng as lk
 
     sf = "/root/testdata/sf0.001"
@@ -896,7 +896,7 @@ def test_quality_histogram_conserves_and_buckets(spark):
 
 
 def test_tile_quality_conserves_docs(spark):
-    from s2_geometry_rust_spark.engine_queries import tile_quality_q
+    from contract.engine_queries import tile_quality_q
 
     sf = "/root/testdata/sf0.001"
     got = tile_quality_q(spark, sf)
@@ -907,7 +907,7 @@ def test_tile_quality_conserves_docs(spark):
 
 
 def test_source_bbox_bounds_sane(spark):
-    from s2_geometry_rust_spark.engine_queries import source_bbox_q
+    from contract.engine_queries import source_bbox_q
 
     sf = "/root/testdata/sf0.001"
     rows = source_bbox_q(spark, sf).collect()

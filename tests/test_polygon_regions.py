@@ -237,7 +237,7 @@ def test_multi_chain_shape_containers(spark):
 
 
 def test_chain_crossing_join_propagates_chains(spark):
-    from s2_geometry_rust_spark.engine_queries import chain_crossing_pairs_q
+    from contract.engine_queries import chain_crossing_pairs_q
 
     got = chain_crossing_pairs_q(spark, "/root/testdata/sf0.001").collect()
     assert len(got) > 0

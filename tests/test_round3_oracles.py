@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from s2_geometry_rust_spark.engine_queries import (
+from contract.engine_queries import (
     CHAIN_LINES,
     CHAIN_LOOPS,
     PSTAT_LINES,
@@ -67,8 +67,8 @@ def test_polyline_stats_fixture_margins():
 def test_polyline_stats_query_oracle_parity(spark, sf_dir):
     import duckdb
 
-    from s2_geometry_rust_spark import oracle
-    from s2_geometry_rust_spark.engine_queries import polyline_stats_q
+    from contract import oracle
+    from contract.engine_queries import polyline_stats_q
 
     got = (
         polyline_stats_q(spark, sf_dir)
@@ -136,7 +136,7 @@ def test_chain_crossings_all_pairs_are_candidates(spark, sf_dir):
     index_level=0 — i.e. the operator emits exactly |lines| x |shapes|
     rows.  (All lines touch face 0 and every loop has a face-0 edge
     v0.)"""
-    from s2_geometry_rust_spark.engine_queries import chain_crossings_q
+    from contract.engine_queries import chain_crossings_q
 
     rows = chain_crossings_q(spark, sf_dir).collect()
     assert len(rows) == len(CHAIN_LINES) * len(CHAIN_LOOPS)
@@ -152,7 +152,7 @@ def test_chain_crossings_all_pairs_are_candidates(spark, sf_dir):
 def test_chain_crossings_operator_matches_kernel(spark, sf_dir):
     """Ground truth: the operator's per-pair counts equal a direct
     all-pairs evaluation of kernels.edge_crosser.crossing_signs_chain."""
-    from s2_geometry_rust_spark.engine_queries import chain_crossings_q
+    from contract.engine_queries import chain_crossings_q
     from s2_geometry_rust_spark.kernels import edge_crosser as ec
 
     got = {
@@ -183,9 +183,9 @@ def test_union_areas_atto_margins(spark, sf_dir):
     """The only trig column (exact_area) must sit > 1e-3 atto-units from
     every rounding boundary; the trig-free columns are bit-exact by
     construction (power-of-two scalings only) so any margin suffices."""
-    from s2_geometry_rust_spark.engine_queries import union_areas_q
+    from contract.engine_queries import union_areas_q
     from s2_geometry_rust_spark.operators.geom_aggs import union_bounds
-    from s2_geometry_rust_spark.engine_queries import _mixed_level_unions
+    from contract.engine_queries import _mixed_level_unions
 
     stats = union_bounds(_mixed_level_unions(spark, sf_dir)).collect()
     assert len(stats) == 10
@@ -207,7 +207,7 @@ def test_region_contains_loop_fixture_margins():
     oracle's triage-only signs decide identically to the engine's
     tiered-exact kernels; same-name pairs are excluded by the query."""
     from s2_geometry_rust_spark import fixtures
-    from s2_geometry_rust_spark.engine_queries import (
+    from contract.engine_queries import (
         CONTAIN_A_LOOPS,
         CONTAIN_B_LOOPS,
     )
@@ -235,29 +235,32 @@ def test_region_contains_loop_fixture_margins():
             assert np.abs(d2 - cap.radius_l2).min() > 1e-2, (cname, b)
 
 
-def test_region_containment_join_matches_kernel(spark):
+def test_region_containment_join_matches_kernel(spark, monkeypatch):
     """Join output == scalar kernel ground truth (contains_loop for
-    loops, all-vertices chord test for caps) over the fixture sets."""
+    loops, all-vertices chord test for caps) over the fixture sets, on
+    the literal join path and on the distributed covering path."""
     from s2_geometry_rust_spark import fixtures
-    from s2_geometry_rust_spark.engine_queries import (
+    from contract.engine_queries import (
         CONTAIN_A_LOOPS,
         CONTAIN_B_LOOPS,
     )
     from s2_geometry_rust_spark.kernels.caps import S2Cap
     from s2_geometry_rust_spark.kernels.loops import S2Loop
-    from s2_geometry_rust_spark.operators.spatial_join import (
-        region_containment_join,
-    )
+    from s2_geometry_rust_spark.operators import spatial_join as sj
 
     a_df = fixtures.loop_regions(spark, CONTAIN_A_LOOPS).unionByName(
         fixtures.cap_regions(spark)
     )
     b_df = fixtures.loop_regions(spark, CONTAIN_B_LOOPS)
-    got = {
-        (r["a_id"], r["b_id"])
-        for r in region_containment_join(a_df, b_df).collect()
-        if r["a_id"] != r["b_id"]
-    }
+
+    def pairs():
+        return {
+            (r["a_id"], r["b_id"])
+            for r in sj.region_containment_join(a_df, b_df).collect()
+            if r["a_id"] != r["b_id"]
+        }
+
+    got = pairs()
 
     want = set()
     b_loops = {b: S2Loop.from_degrees(fixtures.LOOPS[b])
@@ -278,13 +281,16 @@ def test_region_containment_join_matches_kernel(spark):
                     v[:, 0], v[:, 1], v[:, 2]))):
                 want.add((cname, b))
     assert got == want and len(want) > 0
+    # more region rows than the threshold take the distributed path
+    monkeypatch.setattr(sj, "DISTRIBUTED_REGION_THRESHOLD", 1)
+    assert pairs() == want
 
 
 def test_loop_intersections_fixture_margins():
     """Both probing directions must be margin-safe (A verts vs B edge
     circles AND B verts vs A edge circles)."""
     from s2_geometry_rust_spark import fixtures
-    from s2_geometry_rust_spark.engine_queries import (
+    from contract.engine_queries import (
         INTERSECT_A_LOOPS,
         INTERSECT_B_LOOPS,
     )
@@ -307,7 +313,7 @@ def test_loop_intersections_fixture_margins():
 
 def test_loop_intersection_join_matches_kernel(spark):
     from s2_geometry_rust_spark import fixtures
-    from s2_geometry_rust_spark.engine_queries import (
+    from contract.engine_queries import (
         INTERSECT_A_LOOPS,
         INTERSECT_B_LOOPS,
     )

@@ -150,7 +150,9 @@ def test_streaming_index_dedup_matches_batch_twin(spark, tmp_path):
     """Stream-vs-static-index decisions == the batch incremental_dedup
     components on the same data: exact rows == the batch exact_index
     set, near pair rows == the batch verified pair set restricted to
-    exact survivors (the documented twin relation)."""
+    exact survivors (the documented twin relation).  Checked with the
+    whole stream in one micro-batch and with one file per micro-batch,
+    so the pair-dedup state carries across batch boundaries."""
     from s2_geometry_rust_spark.operators.dedup import (
         incremental_dedup,
         lsh_candidate_pairs_cross,
@@ -178,27 +180,36 @@ def test_streaming_index_dedup_matches_batch_twin(spark, tmp_path):
         "event_time",
         F.timestamp_seconds(F.lit(1700000000) + F.col("doc_id")),
     )
-    src = str(tmp_path / "idx_dedup_src")
-    stream_docs.write.parquet(src)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    out = streaming_index_dedup(stream, index, threshold=0.5, n_perm=64)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("idx_dedup_stream")
-        .option("checkpointLocation", str(tmp_path / "idx_dedup_cp"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM idx_dedup_stream").toPandas()
 
-    streamed = {
-        (r.doc_id, r.decision, r.matched_id, round(r.jaccard, 12))
-        for r in got.itertuples()
-    }
+    def run_stream(name, n_files):
+        src = str(tmp_path / f"{name}_src")
+        for part in range(n_files):
+            stream_docs.filter(F.col("doc_id") % n_files == part).coalesce(
+                1).write.parquet(src, mode="append")
+        stream = (
+            spark.readStream.schema(spark.read.parquet(src).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        out = streaming_index_dedup(stream, index, threshold=0.5, n_perm=64)
+        q = (
+            out.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", str(tmp_path / f"{name}_cp"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        n_batches = sum(1 for p in q.recentProgress if p["numInputRows"])
+        got = spark.sql(f"SELECT * FROM {name}").toPandas()
+        return n_batches, {
+            (r.doc_id, r.decision, r.matched_id, round(r.jaccard, 12))
+            for r in got.itertuples()
+        }
+
+    _, streamed = run_stream("idx_dedup_stream", 1)
+    n_batches, streamed_multi = run_stream("idx_dedup_stream_multi", 2)
     # batch twin: exact_index rows from incremental_dedup; near pairs
     # from the verified candidate set over exact survivors
     batch = incremental_dedup(
@@ -226,6 +237,8 @@ def test_streaming_index_dedup_matches_batch_twin(spark, tmp_path):
     }
     assert streamed == want
     assert 103 not in {t[0] for t in streamed}  # keep == absence
+    assert n_batches == 2
+    assert streamed_multi == want
 
 
 def test_streaming_index_dedup_within_stream_duplicates(spark, tmp_path):

@@ -9,7 +9,7 @@ from __future__ import annotations
 import duckdb
 import numpy as np
 
-from s2_geometry_rust_spark import oracle
+from contract import oracle
 from s2_geometry_rust_spark.kernels import cellid as ck
 from s2_geometry_rust_spark.kernels import unions as ku
 

@@ -2,7 +2,8 @@
 
     python tools/package.py [out.zip]
 
-produces a zip of the s2_geometry_rust_spark package suitable for
+produces a zip of the s2_geometry_rust_spark package, the engine only,
+suitable for
 
     spark-submit --py-files s2_geometry_rust_spark.zip \
         --conf spark.sql.shuffle.partitions=<2-3x total cores> \
@@ -13,6 +14,10 @@ produces a zip of the s2_geometry_rust_spark package suitable for
 
 (the executor-side PYTHONPATH handling in session.get_spark is the
 local-mode equivalent; on a cluster the zip rides the job).
+
+The driver contract harness (the query registry and its DuckDB oracle)
+lives in the sibling ``contract`` package and is not packed: it runs
+on the driver only, and no engine module imports it.
 
 ``get_spark`` also sets ``spark.python.daemon.module`` to the engine's
 daemon module, a local-mode setting that gives every Python worker the
