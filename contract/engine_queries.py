@@ -2033,8 +2033,8 @@ def near_dup_pairs_capped_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minhash-LSH near-dup join with the hot-bucket guard engaged
     (max_per_bucket=2): each (band, bucket) keeps its first 2 docs in
     deterministic (md5(doc_id), doc_id) order, bounding worst-bucket
-    fan-out at cap^2/2 (flood soak: 4,498,800 -> 1,525 candidates at
-    cap=50, genuine recall 1.0).  At sf0.01 the cap genuinely truncates
+    fan-out at cap^2/2 (test_lsh_max_per_bucket_bounds_flood pins the
+    bound on a planted flood).  At sf0.01 the cap genuinely truncates
     (29 three-doc buckets; 25 -> 24 pairs), so the green row checks the
     kept-subset ordering, not a no-op.  The truncation is documented loss,
     and because it is a pure function of doc_id the DuckDB oracle

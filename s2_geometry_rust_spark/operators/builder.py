@@ -422,7 +422,7 @@ def build_graph(edges: DataFrame, snap: SnapFunction | None = None,
     # the vid join-back), so the input scan + snap pass executes three
     # times by default.  materialize_snapped=True checkpoints it once —
     # right when the snap pass costs more than writing the snapped
-    # edges (measured 22.1s -> 13.9s on the 500k-edge soak).  The
+    # edges (historical: 22.1s -> 13.9s on 500k edges, 32-core box).  The
     # default stays recompute: on a 100-TB pruned scan, re-reading
     # beats materializing the whole snapped table.
     if materialize_snapped:

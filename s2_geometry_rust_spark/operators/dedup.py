@@ -605,8 +605,7 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
                         n: int = 3, id_col: str = "doc_id",
                         text_col: str = "text",
-                        materialize_grams: bool | None = None,
-                        candidates_only: bool = False) -> DataFrame:
+                        materialize_grams: bool | None = None) -> DataFrame:
     """Exact word-n-gram-set Jaccard near-dup pairs at ``threshold``,
     via prefix filtering (SSJoin/PPJoin): order each doc's distinct
     n-grams by ascending global document frequency and generate
@@ -650,8 +649,8 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
     # optimized-plan size estimate of the pruned (id, text) input: past
     # ~64 MB the 6x tokenize re-run dominates the one-time checkpoint
     # write, below it the checkpoint overhead dominates (bench-scale
-    # sf0.1 stays un-materialized; the 1-2M-doc soak flips on).  Plan
-    # stats are free — no job is triggered.
+    # sf0.1 stays un-materialized; a corpus of 1-2M docs flips on).
+    # Plan stats are free — no job is triggered.
     if materialize_grams is None:
         try:
             sz = int(
@@ -686,11 +685,6 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
         .select("doc_a", "doc_b")
         .distinct()
     )
-    if candidates_only:
-        # Diagnostic surface for soaks: the prefix-filtered candidate
-        # set BEFORE exact verification (measures filter selectivity
-        # on adversarial shared-vocabulary corpora).
-        return cand
     sets = grams.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("ngram")).alias("grams")
     )
@@ -921,10 +915,10 @@ def incremental_dedup(new_docs: DataFrame, index_docs: DataFrame,
     64 MB rule as ngram_jaccard's grams checkpoint): the exact-tag
     frame feeds THREE consumers (survivor signatures, the verify text
     union, and the final decision join), so past bench scale its two
-    md5 hash joins re-run up to 3x without a checkpoint — the 400k/200k
-    soak measured the re-run cost as the difference between a
-    persisted-stage sum (~70 s at 1M/500k) and the naive end-to-end
-    wall (136.6 s).  The index side is deliberately NOT cached: a
+    md5 hash joins re-run up to 3x without a checkpoint (historical
+    measurement, 32-core box: a persisted-stage sum of ~70 s against a
+    naive end-to-end wall of 136.6 s at 1M batch / 500k index docs).
+    The index side is deliberately NOT cached: a
     10^12-doc index cannot be, and each of its consumers is a plain
     re-scan Catalyst prunes independently.
     """

@@ -39,7 +39,8 @@ _TOPK_SCHEMA = StructType(
 # query/vector side to the driver (~10^5 rows at dim 64 ≈ 50 MB).
 # Past it the distributed twins are the only sound plan, so the
 # operators REFUSE instead of silently OOMing a 1000-executor job's
-# driver.  Overridable per call for soak tooling.
+# driver.  ``guard_driver_bound`` takes the bound as a parameter so
+# tests can lower it (test_pipeline_ops patches its default).
 MAX_DRIVER_SIDE_ROWS = 100_000
 
 

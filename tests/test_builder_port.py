@@ -425,21 +425,25 @@ def test_build_graph_matches_local(spark):
         "sx double, sy double, sz double, "
         "tx double, ty double, tz double",
     )
-    vertices, edges = build_graph(df, snap)
-    vgot = {
-        r["vertex_id"]: (r["x"], r["y"], r["z"])
-        for r in vertices.collect()
-    }
-    egot = sorted(
-        (r["edge_id"], r["src_vid"], r["dst_vid"], r["edge_type"],
-         r["n_inputs"])
-        for r in edges.collect()
-    )
     points, ewant = _local_reference_graph(rows, snap)
-    assert len(vgot) == len(points)
-    for vid, p in enumerate(points):
-        assert vgot[vid] == p, vid
-    assert egot == ewant
+    # materialize_snapped=True checkpoints the snapped edges once; the
+    # graph must not depend on it.
+    for materialize in (False, True):
+        vertices, edges = build_graph(df, snap,
+                                      materialize_snapped=materialize)
+        vgot = {
+            r["vertex_id"]: (r["x"], r["y"], r["z"])
+            for r in vertices.collect()
+        }
+        egot = sorted(
+            (r["edge_id"], r["src_vid"], r["dst_vid"], r["edge_type"],
+             r["n_inputs"])
+            for r in edges.collect()
+        )
+        assert len(vgot) == len(points)
+        for vid, p in enumerate(points):
+            assert vgot[vid] == p, vid
+        assert egot == ewant
 
 
 def test_assemble_layers_match_local(spark):

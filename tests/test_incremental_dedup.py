@@ -54,27 +54,32 @@ def tiny(spark):
 
 def test_decisions(spark, tiny):
     index, new = tiny
-    out = {
-        r["doc_id"]: r
-        for r in incremental_dedup(new, index, threshold=0.5,
-                                   n_perm=64, n_bands=32).collect()
-    }
-    assert len(out) == 5
-    assert out[101]["decision"] == "exact_index"
-    assert out[101]["matched_id"] == 1
-    assert out[101]["jaccard"] == 1.0
-    assert out[102]["decision"] == "keep"
-    assert out[102]["matched_id"] is None
-    assert out[102]["jaccard"] is None
-    # min-id batch keeper survives (keep: its text is nowhere in the
-    # index), the other copy is dropped against the keeper
-    assert out[103]["decision"] == "keep"
-    assert out[105]["decision"] == "exact_batch"
-    assert out[105]["matched_id"] == 103
-    assert out[105]["jaccard"] == 1.0
-    assert out[104]["decision"] == "near_index"
-    assert out[104]["matched_id"] == 1
-    assert 0.5 <= out[104]["jaccard"] < 1.0
+    # materialize_tags=True runs the checkpointed exact-tag plan that
+    # the auto rule only picks past 64 MB of batch input.
+    for materialize in (None, True):
+        out = {
+            r["doc_id"]: r
+            for r in incremental_dedup(new, index, threshold=0.5,
+                                       n_perm=64, n_bands=32,
+                                       materialize_tags=materialize)
+            .collect()
+        }
+        assert len(out) == 5
+        assert out[101]["decision"] == "exact_index"
+        assert out[101]["matched_id"] == 1
+        assert out[101]["jaccard"] == 1.0
+        assert out[102]["decision"] == "keep"
+        assert out[102]["matched_id"] is None
+        assert out[102]["jaccard"] is None
+        # min-id batch keeper survives (keep: its text is nowhere in the
+        # index), the other copy is dropped against the keeper
+        assert out[103]["decision"] == "keep"
+        assert out[105]["decision"] == "exact_batch"
+        assert out[105]["matched_id"] == 103
+        assert out[105]["jaccard"] == 1.0
+        assert out[104]["decision"] == "near_index"
+        assert out[104]["matched_id"] == 1
+        assert 0.5 <= out[104]["jaccard"] < 1.0
 
 
 def test_exact_index_takes_precedence_over_batch(spark):

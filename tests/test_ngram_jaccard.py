@@ -45,17 +45,24 @@ def test_prefix_filter_lossless_vs_bruteforce(spark):
     pdf = docs.select("doc_id", "text").toPandas()
     # t=0.8: 0.8*sz is inexact in binary for most sz — exercises the
     # -1e-9 ceil slack (unsound direction would SHORTEN the prefix).
+    # materialize_grams=True runs the checkpointed-grams plan that the
+    # auto rule only picks past 64 MB of input; it must agree too.
     for threshold in (0.3, 0.5, 0.8):
-        got = sorted(
-            (int(r["doc_a"]), int(r["doc_b"]), float(r["jaccard"]))
-            for r in ngram_jaccard_pairs(docs, threshold=threshold)
-            .toPandas()
-            .to_dict("records")
-        )
         want = _brute_pairs(pdf, 3, threshold)
-        assert [(a, b) for a, b, _ in got] == [(a, b) for a, b, _ in want]
-        for (_, _, gj), (_, _, wj) in zip(got, want):
-            assert abs(gj - wj) < 1e-12
+        for materialize in (None, True):
+            got = sorted(
+                (int(r["doc_a"]), int(r["doc_b"]), float(r["jaccard"]))
+                for r in ngram_jaccard_pairs(
+                    docs, threshold=threshold, materialize_grams=materialize
+                )
+                .toPandas()
+                .to_dict("records")
+            )
+            assert [(a, b) for a, b, _ in got] == [
+                (a, b) for a, b, _ in want
+            ]
+            for (_, _, gj), (_, _, wj) in zip(got, want):
+                assert abs(gj - wj) < 1e-12
 
 
 def test_prefix_filter_adversarial_sizes(spark):
